@@ -40,7 +40,7 @@ TABLES = ("region nation customer supplier part orders lineitem events "
 class CatalogInput:
     def __init__(self, root: str, seed: int, sf: float) -> None:
         self.root = root
-        self.sizes = gen_tables.generate(root, seed, sf)
+        gen_tables.generate(root, seed, sf)
 
 
 def run_query(spark, name: str, sf_dir: str) -> int:

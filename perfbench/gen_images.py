@@ -27,6 +27,7 @@ import numpy as np
 
 MAX_SHIFT = 8      # |dx|, |dy| of non-reference frames, px
 EDGE_MARGIN = 20   # min distance of any planted star to an edge, px
+MIN_SEP = 24.0     # min distance between two planted stars, px
 STAR_SIGMA = 1.8   # Gaussian PSF width, px
 BKG_LEVEL = 100.0
 NOISE_SIGMA = 2.0
@@ -39,7 +40,6 @@ class ImageSpec:
     frames_per_epoch: int
     size: int
     stars: int
-    min_sep: float  # 0 lets stars land close enough to blend
 
 
 def _render(size: int, xs: np.ndarray, ys: np.ndarray,
@@ -62,8 +62,7 @@ def _place(rng: np.random.Generator, spec: ImageSpec) -> tuple[np.ndarray, np.nd
     placed = 0
     while placed < spec.stars:
         x, y = rng.uniform(lo, hi, 2)
-        if (placed == 0 or spec.min_sep <= 0
-                or np.hypot(xs[:placed] - x, ys[:placed] - y).min() >= spec.min_sep):
+        if placed == 0 or np.hypot(xs[:placed] - x, ys[:placed] - y).min() >= MIN_SEP:
             xs[placed], ys[placed] = x, y
             placed += 1
     return xs, ys

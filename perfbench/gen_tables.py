@@ -41,8 +41,8 @@ def _write(out_dir: str, name: str, cols: dict) -> None:
     pq.write_table(pa.table(cols), os.path.join(out_dir, f"{name}.parquet"))
 
 
-def generate(out_dir: str, seed: int, sf: float = 0.01) -> dict[str, int]:
-    """Write the ten tables under ``out_dir``; return their row counts."""
+def generate(out_dir: str, seed: int, sf: float) -> None:
+    """Write the ten tables under ``out_dir``."""
     rng = np.random.default_rng(seed)
     os.makedirs(out_dir, exist_ok=True)
     n_cust, n_supp, n_part = int(150_000 * sf), int(10_000 * sf), int(200_000 * sf)
@@ -133,5 +133,3 @@ def generate(out_dir: str, seed: int, sf: float = 0.01) -> dict[str, int]:
         "vec_id": np.arange(n_emb, dtype=np.int64),
         "embedding": pa.array(list(emb), pa.list_(pa.float32())),
         "label": pa.array(rng.integers(0, 10, n_emb), i32)})
-    return {"customer": n_cust, "orders": n_ord, "lineitem": n_line,
-            "events": n_ev, "documents": n_doc, "embeddings": n_emb}

@@ -17,6 +17,8 @@ import pandas as pd
 from gen_images import ImageSpec, generate
 
 PDF_MAX_PAGES = 32  # write_diagnostics_pdf's default page cap
+MATCH_DIST_PX = 1.5  # a fitted source this close to a planted star is its match
+FLUX_TOL = 0.10      # relative flux error of a recovered star
 
 
 class ImageInput:
@@ -79,10 +81,9 @@ def read_catalog(out: str) -> pd.DataFrame:
         columns=["epoch_id", "x_fit", "y_fit", "flux_fit"])
 
 
-def recovered_frac(inp: ImageInput, catalog: pd.DataFrame,
-                   max_dist: float = 1.5, tol: float = 0.10) -> float:
+def recovered_frac(inp: ImageInput, catalog: pd.DataFrame) -> float:
     """Share of planted unsaturated stars whose nearest fitted source
-    (within ``max_dist`` px) has ``flux_fit`` within ``tol`` of the
+    (within ``MATCH_DIST_PX``) has ``flux_fit`` within ``FLUX_TOL`` of the
     planted flux. Every planted star is interior by construction."""
     stars = inp.truth[~inp.truth["saturated"]]
     hits = 0
@@ -96,7 +97,7 @@ def recovered_frac(inp: ImageInput, catalog: pd.DataFrame,
         for x, y, f in zip(group["x"], group["y"], group["flux"]):
             d = np.hypot(fx - x, fy - y)
             k = int(np.nanargmin(d))
-            if d[k] <= max_dist and abs(flux[k] - f) <= tol * f:
+            if d[k] <= MATCH_DIST_PX and abs(flux[k] - f) <= FLUX_TOL * f:
                 hits += 1
     return hits / len(stars)
 

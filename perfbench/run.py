@@ -30,10 +30,10 @@ ROOT = os.path.dirname(HERE)
 PACKAGE = "telescope_data_pipeline_spark"
 
 #: 16 epochs x 3 frames of 160^2 px, 12 isolated stars per epoch
-SURVEY_NIGHT = dict(epochs=16, frames_per_epoch=3, size=160, stars=12, min_sep=24.0)
+SURVEY_NIGHT = dict(epochs=16, frames_per_epoch=3, size=160, stars=12)
 CATALOG_SF = 0.01
 #: warm-up inputs, and inputs for the layers a workload does not exercise
-SMALL_IMAGES = dict(epochs=2, frames_per_epoch=3, size=128, stars=6, min_sep=24.0)
+SMALL_IMAGES = dict(epochs=2, frames_per_epoch=3, size=128, stars=6)
 SMALL_SF = 0.001
 DRIVER_MEM = "2g"
 
@@ -76,10 +76,7 @@ def start_spark(work: str):
         "spark.ui.showConsoleProgress": "false",
         "spark.local.dir": os.path.join(work, "spark"),
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-        # the whole heap is committed and touched at start, so the
-        # resident size does not depend on when the heap grows
-        "spark.driver.extraJavaOptions": (f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData "
-                                          f"-Xms{DRIVER_MEM} -XX:+AlwaysPreTouch"),
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
     })
 
 
@@ -233,7 +230,7 @@ def timed_run(args, spark, t_session: float, work: str) -> dict:
         f"warm-up {t_warm:.1f}s")
     pass_times: list[float] = []
     lat: list[float] = []
-    with RssSampler() as rss:
+    with RssSampler(spark) as rss:
         t_start = time.perf_counter()
         while (not pass_times or time.perf_counter() - t_start + pass_times[-1]
                <= args.seconds):

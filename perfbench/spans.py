@@ -4,8 +4,10 @@ A span wraps one call into a layer's public function. Each span runs
 under its own Spark job group (``setJobGroup``), so after it ends the
 stages, tasks and failed tasks it caused are read back from
 ``sparkContext.statusTracker()`` (the session disables the UI, so there
-is no REST endpoint to read instead). Spans stay in memory until
-:func:`dump`.
+is no REST endpoint to read instead). The status store is fed by the
+asynchronous listener bus, so the bus is drained before every read; an
+undrained read can miss the last task-end and stage-complete events.
+Spans stay in memory until :func:`dump`.
 """
 
 from __future__ import annotations
@@ -16,6 +18,8 @@ import os
 import threading
 import time
 from contextlib import contextmanager
+
+RSS_INTERVAL_S = 0.1  # RssSampler's sampling period
 
 
 class Tracer:
@@ -48,6 +52,7 @@ class Tracer:
                                **self._spark_counts(group)})
 
     def _spark_counts(self, group: str) -> dict:
+        self._sc._jsc.sc().listenerBus().waitUntilEmpty()
         tracker = self._sc.statusTracker()
         stages = tasks = failed = 0
         for job_id in tracker.getJobIdsForGroup(group):
@@ -101,17 +106,24 @@ def _tree_rss_bytes(root: int) -> int:
 
 
 class RssSampler:
-    """Peak resident memory of this process tree inside the ``with`` block."""
+    """Peak memory in use by this process tree inside the ``with`` block:
+    its resident memory, with the driver JVM's heap counted at its used
+    size instead of its committed size. How far the garbage collector
+    grows the committed heap varies from run to run; what the program
+    holds does not."""
 
-    def __init__(self, interval_s: float = 0.1) -> None:
+    def __init__(self, spark) -> None:
         self.peak = 0
-        self._interval = interval_s
+        self._heap = spark._jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
 
     def _loop(self) -> None:
-        while not self._stop.wait(self._interval):
-            self.peak = max(self.peak, _tree_rss_bytes(os.getpid()))
+        while not self._stop.wait(RSS_INTERVAL_S):
+            heap = self._heap.getHeapMemoryUsage()
+            in_use = (_tree_rss_bytes(os.getpid())
+                      - heap.getCommitted() + heap.getUsed())
+            self.peak = max(self.peak, in_use)
 
     def __enter__(self) -> RssSampler:
         self._thread.start()
