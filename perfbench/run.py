@@ -1,6 +1,6 @@
 """Repository benchmark: image pipeline and catalog queries.
 
-    python3 perfbench/run.py --workload survey_night --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload survey_night --seed 1 --seconds 10 --trace 0
 
 Run from the root of a checkout. Inputs are generated from ``--seed``
 under ``.perfbench_work/`` (removed at exit); the traced run writes its
@@ -14,13 +14,14 @@ from __future__ import annotations
 
 import time
 
-T0 = time.perf_counter()
+from spans import Clock
+
+T0 = Clock()  # process start, for setup_s
 
 import argparse  # noqa: E402
 import json  # noqa: E402
 import os  # noqa: E402
 import shutil  # noqa: E402
-import statistics  # noqa: E402
 import subprocess  # noqa: E402
 import sys  # noqa: E402
 import traceback  # noqa: E402
@@ -32,10 +33,13 @@ PACKAGE = "telescope_data_pipeline_spark"
 #: 16 epochs x 3 frames of 160^2 px, 12 isolated stars per epoch
 SURVEY_NIGHT = dict(epochs=16, frames_per_epoch=3, size=160, stars=12)
 CATALOG_SF = 0.01
-#: warm-up inputs, and inputs for the layers a workload does not exercise
+#: inputs of the traced run's pass over the other workload's layers
 SMALL_IMAGES = dict(epochs=2, frames_per_epoch=3, size=128, stars=6)
 SMALL_SF = 0.001
 DRIVER_MEM = "2g"
+#: A run lives about a minute. In that time the C2 compiler spends more
+#: CPU than it saves and keeps changing pass times as it goes.
+DRIVER_JIT = "-XX:TieredStopAtLevel=1"
 
 
 def log(msg: str) -> None:
@@ -76,7 +80,7 @@ def start_spark(work: str):
         "spark.ui.showConsoleProgress": "false",
         "spark.local.dir": os.path.join(work, "spark"),
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData",
+        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData {DRIVER_JIT}",
     })
 
 
@@ -110,9 +114,6 @@ def percentile(values: list[float], q: float) -> float:
 class SurveyNight:
     """Untraced passes run the CLI; the traced pass calls its layers."""
 
-    #: a 2-epoch pass warms every code path a full pass runs
-    WARM_SMALL = True
-
     def __init__(self, spark, work: str, seed: int, small: bool = False) -> None:
         from gen_images import ImageSpec
         from image import ImageInput
@@ -130,9 +131,9 @@ class SurveyNight:
 
         out = os.path.join(self.work, f"out{len(self.outputs)}")
         self.outputs.append(out)
-        t = time.perf_counter()
+        clock = Clock()
         ops.call("cli", run_cli, self.input, out)
-        took = time.perf_counter() - t
+        took = clock.elapsed()
         return took, [took]  # one operation = one CLI run
 
     def check(self, ops: Ops) -> float:
@@ -157,10 +158,6 @@ class SurveyNight:
 
 
 class CatalogQueries:
-    #: the queries keep compiling hot paths until they have run at full
-    #: size once, so the warm-up pass uses the timed input
-    WARM_SMALL = False
-
     def __init__(self, spark, work: str, seed: int, small: bool = False) -> None:
         from catalog import QUERIES, CatalogInput
 
@@ -173,15 +170,15 @@ class CatalogQueries:
     def one_pass(self, ops: Ops) -> tuple[float, list[float]]:
         from catalog import QUERIES, run_query
 
-        t_pass = time.perf_counter()
+        pass_clock = Clock()
         latencies = []
         for name in QUERIES:
-            t = time.perf_counter()
+            clock = Clock()
             rows = ops.call(name, run_query, self.spark, name, self.input.root)
-            latencies.append(time.perf_counter() - t)
+            latencies.append(clock.elapsed())
             if rows is not None:
                 self.rows.append((name, rows))
-        return time.perf_counter() - t_pass, latencies
+        return pass_clock.elapsed(), latencies
 
     def check(self, ops: Ops) -> float:
         """Row-count checks; returns the share of executions that match."""
@@ -212,41 +209,30 @@ WORKLOADS = {"survey_night": SurveyNight, "catalog_queries": CatalogQueries}
 # -- runs ---------------------------------------------------------------------
 
 def timed_run(args, spark, t_session: float, work: str) -> dict:
-    """Set-up (session, inputs, one warm-up pass), then untraced passes:
-    at least one, and another only while it is expected to end within
-    ``--seconds``."""
-    from spans import RssSampler
+    """Set-up (session and inputs), then one untraced pass from a cold
+    start, as a user runs it: the CLI once per night, or a list of
+    queries in a new session."""
+    from spans import RssSampler, tree_cpu_s
 
     ops = Ops()
-    kind = WORKLOADS[args.workload]
     t = time.perf_counter()
-    wl = kind(spark, os.path.join(work, "main"), args.seed)
-    warm = (kind(spark, os.path.join(work, "warm"), args.seed, small=True)
-            if kind.WARM_SMALL else wl)
+    wl = WORKLOADS[args.workload](spark, os.path.join(work, "main"), args.seed)
     t_gen = time.perf_counter() - t
-    t_warm, _ = warm.one_pass(ops)
-    setup_s = time.perf_counter() - T0
-    log(f"setup {setup_s:.1f}s: session {t_session:.1f}s, inputs {t_gen:.1f}s, "
-        f"warm-up {t_warm:.1f}s")
-    pass_times: list[float] = []
-    lat: list[float] = []
+    setup_s = T0.elapsed()
+    log(f"setup {setup_s:.1f}s less steal: session {t_session:.1f}s, inputs {t_gen:.1f}s")
     with RssSampler(spark) as rss:
-        t_start = time.perf_counter()
-        while (not pass_times or time.perf_counter() - t_start + pass_times[-1]
-               <= args.seconds):
-            spark.catalog.clearCache()
-            took, op_times = wl.one_pass(ops)
-            pass_times.append(took)
-            lat.extend(op_times)
-            log(f"pass {len(pass_times)}: {took:.2f}s")
-    if warm is not wl:
-        warm.check(ops)
+        cpu = tree_cpu_s()
+        t = time.perf_counter()
+        wall, lat = wl.one_pass(ops)
+        raw = time.perf_counter() - t
+        cpu = tree_cpu_s() - cpu
+    log(f"pass {raw:.2f}s, {wall:.2f}s less steal, cpu {cpu:.1f}s, operations "
+        + " ".join(f"{x:.2f}" for x in lat))
     quality = wl.check(ops)
-    wall = statistics.median(pass_times)
-    log(f"{len(pass_times)} passes, {len(lat)} latency samples")
     metrics = {
         "setup_s": (setup_s, "s"),
         "wall_s": (wall, "s"),
+        "cpu_s": (cpu, "s"),
         "items_per_s": (wl.items / wall, "1/s"),
         "op_p50_s": (percentile(lat, 50), "s"),
         "op_p90_s": (percentile(lat, 90), "s"),
@@ -258,20 +244,18 @@ def timed_run(args, spark, t_session: float, work: str) -> dict:
 
 
 def traced_run(args, spark, t_session: float, work: str) -> dict:
-    """Warm-up, one untraced pass, one traced pass over this workload's
-    input, then a traced pass over a small input of the other workload
-    so that every layer is measured."""
+    """One untraced pass (as a timed run makes it), one traced pass over
+    this workload's input, then a traced pass over a small input of the
+    other workload so that every layer is measured."""
     from spans import Tracer, dump
 
     ops = Ops()
     kind = WORKLOADS[args.workload]
     other_kind = next(k for k in WORKLOADS.values() if k is not kind)
     wl = kind(spark, os.path.join(work, "main"), args.seed)
-    warm = (kind(spark, os.path.join(work, "warm"), args.seed, small=True)
-            if kind.WARM_SMALL else wl)
-    warm.one_pass(ops)
-    spark.catalog.clearCache()
-    untraced, _ = wl.one_pass(ops)
+    t = time.perf_counter()
+    wl.one_pass(ops)
+    untraced = time.perf_counter() - t  # wall time, as the spans take it
     spark.catalog.clearCache()
     tracer = Tracer(spark, "main")
     layers = wl.traced(tracer, ops)
@@ -279,7 +263,7 @@ def traced_run(args, spark, t_session: float, work: str) -> dict:
     other = Tracer(spark, "other")
     small = other_kind(spark, os.path.join(work, "other"), args.seed, small=True)
     layers.update(small.traced(other, ops))
-    for checked in [wl, small] + ([warm] if warm is not wl else []):
+    for checked in (wl, small):
         checked.check(ops)
 
     total = tracer.duration("traced_pass")
@@ -315,6 +299,7 @@ def main() -> int:
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--workload", required=True, choices=WORKLOADS)
     p.add_argument("--seed", type=int, required=True)
+    # a run times one cold pass, which takes longer than --seconds
     p.add_argument("--seconds", type=float, required=True)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = p.parse_args()

@@ -8,6 +8,10 @@ is no REST endpoint to read instead). The status store is fed by the
 asynchronous listener bus, so the bus is drained before every read; an
 undrained read can miss the last task-end and stage-complete events.
 Spans stay in memory until :func:`dump`.
+
+The timed run's probes live here too: :class:`Clock` (wall time less
+steal), :func:`tree_cpu_s` and :class:`RssSampler` (CPU time and memory
+of the process tree).
 """
 
 from __future__ import annotations
@@ -20,6 +24,35 @@ import time
 from contextlib import contextmanager
 
 RSS_INTERVAL_S = 0.1  # RssSampler's sampling period
+
+
+def _cpu_ticks() -> tuple[int, int]:
+    """(busy, stolen) clock ticks of all CPUs so far, from /proc/stat."""
+    with open("/proc/stat") as fh:
+        user, nice, system, _idle, _iowait, irq, softirq, steal = (
+            int(v) for v in fh.readline().split()[1:9])
+    return user + nice + system + irq + softirq, steal
+
+
+class Clock:
+    """Elapsed wall time less the share the hypervisor stole.
+
+    On a shared virtual machine a virtual CPU that has work is sometimes
+    not run; ``/proc/stat`` counts that time as steal. Of the time the
+    CPUs had work, the share ``steal / (busy + steal)`` was lost to
+    other tenants, and the program's critical path lost the same share
+    of its time, so :meth:`elapsed` scales the wall time down by it.
+    """
+
+    def __init__(self) -> None:
+        self._t = time.perf_counter()
+        self._ticks = _cpu_ticks()
+
+    def elapsed(self) -> float:
+        wall = time.perf_counter() - self._t
+        (busy0, steal0), (busy1, steal1) = self._ticks, _cpu_ticks()
+        wanted = busy1 - busy0 + steal1 - steal0
+        return wall * (1 - (steal1 - steal0) / wanted) if wanted else wall
 
 
 class Tracer:
@@ -79,8 +112,8 @@ def dump(path: str, spans: list[dict]) -> None:
         json.dump(spans, fh, indent=1)
 
 
-def _tree_rss_bytes(root: int) -> int:
-    """Resident bytes of ``root`` and every descendant process."""
+def _tree(root: int) -> list[int]:
+    """``root`` and the pids of all its live descendants."""
     children: dict[int, list[int]] = {}
     for entry in os.listdir("/proc"):
         if not entry.isdigit():
@@ -92,17 +125,42 @@ def _tree_rss_bytes(root: int) -> int:
             continue
         ppid = int(stat[stat.rindex(")") + 2:].split()[1])
         children.setdefault(ppid, []).append(int(entry))
-    total, todo = 0, [root]
-    page = os.sysconf("SC_PAGE_SIZE")
+    pids, todo = [], [root]
     while todo:
         pid = todo.pop()
+        pids.append(pid)
         todo.extend(children.get(pid, []))
+    return pids
+
+
+def _tree_rss_bytes(root: int) -> int:
+    """Resident bytes of ``root`` and every descendant process."""
+    total = 0
+    page = os.sysconf("SC_PAGE_SIZE")
+    for pid in _tree(root):
         try:
             with open(f"/proc/{pid}/statm") as fh:
                 total += int(fh.read().split()[1]) * page
         except OSError:
             pass
     return total
+
+
+def tree_cpu_s(root: int | None = None) -> float:
+    """CPU seconds (user + system) used so far by ``root`` (default: this
+    process) and its descendants, the reaped children of each included.
+    Time the host steals from the virtual CPU is not charged to a process,
+    so this moves much less than wall time on a shared host."""
+    total = 0
+    for pid in _tree(root or os.getpid()):
+        try:
+            with open(f"/proc/{pid}/stat") as fh:
+                stat = fh.read()
+        except OSError:
+            continue
+        # utime stime cutime cstime: fields 14-17 of proc(5)
+        total += sum(int(v) for v in stat[stat.rindex(")") + 2:].split()[11:15])
+    return total / os.sysconf("SC_CLK_TCK")
 
 
 class RssSampler:
