@@ -4,12 +4,11 @@ Reference ``get_wcs`` (core.py:486-529) posts the 30 brightest star
 positions to the astrometry.net web service, with a 600 s timeout and a
 resume-on-retry loop (core.py:511-522). Engine form:
 
-- the top-30 selection is a relational stage (orderBy + limit →
-  TakeOrderedAndProject), OUTSIDE the UDF, so it stays Catalyst-visible;
-- the HTTP call runs in a ``mapInPandas`` kernel marked via
-  ``asNondeterministic``-equivalent semantics (one row per image set, so
-  the Python crossing is negligible), with bounded exponential-backoff
-  retries;
+- the top-30 selection and the retry loop are one numpy-level function
+  (:func:`solve_top_stars`), called per epoch by the CLI's per-epoch
+  kernel and by :func:`solve_wcs`, a grouped ``applyInPandas`` adapter
+  (one row per image set, so the Python crossing is negligible), with
+  bounded exponential-backoff retries;
 - the transport is injectable: tests and this container use a
   deterministic fake solver (no network); production passes a real
   astrometry.net client. Results should be written to a cache table and
@@ -56,6 +55,39 @@ def fake_solver(xs: list[float], ys: list[float]) -> dict:
     }
 
 
+def solve_top_stars(
+    x: np.ndarray,
+    y: np.ndarray,
+    flux: np.ndarray,
+    ids: np.ndarray,
+    solver: Callable[[list[float], list[float]], dict] = fake_solver,
+    top_n: int = 30,
+    max_attempts: int = 3,
+    base_backoff_s: float = 0.01,
+) -> dict:
+    """WCS solve of one image set over its ``top_n`` brightest stars.
+
+    The positions go to the solver brightest first (ties by id; the
+    reference slices ``[:30]`` at core.py:514); the call retries with
+    exponential backoff (reference's resume loop, core.py:511-522). A
+    failure yields ``solved=False``, never an exception (failure-path
+    rule, SURVEY.md §7 #6). Returns the WCS_SCHEMA fields other than
+    ``epoch_id``."""
+    top = np.lexsort((ids, -flux))[:top_n]
+    xs, ys = [float(v) for v in x[top]], [float(v) for v in y[top]]
+    attempts, sol = 0, None
+    while attempts < max_attempts and sol is None:
+        attempts += 1
+        try:
+            sol = solver(xs, ys)
+        except Exception:
+            time.sleep(base_backoff_s * 2 ** (attempts - 1))
+    if sol is None:
+        return {"crval_ra": None, "crval_dec": None, "pix_scale": None,
+                "solved": False, "attempts": attempts}
+    return {**sol, "solved": True, "attempts": attempts}
+
+
 def solve_wcs(
     detections: DataFrame,
     solver: Callable[[list[float], list[float]], dict] = fake_solver,
@@ -63,40 +95,19 @@ def solve_wcs(
     max_attempts: int = 3,
     base_backoff_s: float = 0.01,
 ) -> DataFrame:
-    """Per-epoch WCS solve over the ``top_n`` brightest stars.
-
-    The brightest-star selection is a window top-k (relational, pushed
-    before the UDF — reference slices ``[:30]`` at core.py:514); the
-    solver call retries with exponential backoff (reference's resume
-    loop, core.py:511-522); failures yield solved=false rows, never an
-    exception (failure-path rule, SURVEY.md §7 #6).
-    """
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("epoch_id").orderBy(F.desc("flux"), F.asc("id"))
-    top = (detections.withColumn("__rn", F.row_number().over(w))
-           .filter(F.col("__rn") <= top_n)
-           .select("epoch_id", "xcentroid", "ycentroid"))
+    """Per-epoch :func:`solve_top_stars`, one WCS_SCHEMA row per epoch."""
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        epoch = int(pdf["epoch_id"].iloc[0])
-        xs = pdf["xcentroid"].tolist()
-        ys = pdf["ycentroid"].tolist()
-        attempts, sol = 0, None
-        while attempts < max_attempts and sol is None:
-            attempts += 1
-            try:
-                sol = solver(xs, ys)
-            except Exception:
-                time.sleep(base_backoff_s * 2 ** (attempts - 1))
-        if sol is None:
-            return pd.DataFrame([{"epoch_id": epoch, "crval_ra": None,
-                                  "crval_dec": None, "pix_scale": None,
-                                  "solved": False, "attempts": attempts}])
-        return pd.DataFrame([{**{"epoch_id": epoch}, **sol,
-                              "solved": True, "attempts": attempts}])
+        sol = solve_top_stars(
+            pdf["xcentroid"].to_numpy(np.float64),
+            pdf["ycentroid"].to_numpy(np.float64),
+            pdf["flux"].to_numpy(np.float64), pdf["id"].to_numpy(),
+            solver, top_n, max_attempts, base_backoff_s)
+        return pd.DataFrame([{"epoch_id": int(pdf["epoch_id"].iloc[0]), **sol}],
+                            columns=WCS_SCHEMA.names)
 
-    return top.groupBy("epoch_id").applyInPandas(kernel, schema=WCS_SCHEMA)
+    return (detections.select("epoch_id", "id", "xcentroid", "ycentroid", "flux")
+            .groupBy("epoch_id").applyInPandas(kernel, schema=WCS_SCHEMA))
 
 
 def solve_wcs_cached(

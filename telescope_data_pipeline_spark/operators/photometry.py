@@ -1,15 +1,21 @@
 """PSF-star selection and PSF photometry (reference core.py:281-484).
 
-The selection mask (core.py:281-342 ``image_mask``) is pure DataFrame
-ops — border/saturation predicates, a grid-bucketed crowding self-join
-used as an anti-join, and a window-based brightness trim. No UDF: every
-step is Catalyst-visible, so predicate pushdown and AQE still apply.
+Both steps are pure numpy functions over one epoch's stacked image and
+its detections, called by the per-epoch kernel in
+``plans.pipeline.epoch_records``:
 
-The numeric kernels (empirical PSF build, core.py:384-414; iterative
-photometry, core.py:416-452) are grouped applyInPandas per epoch:
-cutouts → normalized median PSF → per-star linear least-squares flux
-with iterative neighbor subtraction (the curve_fit/LevMar-free
-formulation; exact for the planted-Gaussian fixtures).
+- :func:`psf_star_mask` is the selection mask (core.py:281-342
+  ``image_mask``): border and saturation predicates, a crowding test
+  over all pairs of the epoch's few dozen detections, and a brightness
+  trim;
+- :func:`fit_psf_photometry` builds the empirical PSF (core.py:384-414)
+  and runs the iterative photometry (core.py:416-452): cutouts →
+  normalized median PSF → per-star linear least-squares flux with
+  iterative neighbor subtraction (the curve_fit/LevMar-free
+  formulation; exact for the planted-Gaussian fixtures).
+
+:func:`select_psf_stars` and :func:`psf_photometry` are thin Arrow
+adapters over them (``applyInPandas`` per image / per epoch).
 """
 
 from __future__ import annotations
@@ -17,11 +23,59 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .images import SATURATION
+
+PSF_STAR_SCHEMA = T.StructType([
+    T.StructField("epoch_id", T.IntegerType(), False),
+    T.StructField("filename", T.StringType(), False),
+    T.StructField("x", T.DoubleType(), False),
+    T.StructField("y", T.DoubleType(), False),
+    T.StructField("flux", T.DoubleType(), True),
+    T.StructField("id", T.LongType(), False),
+    T.StructField("peak", T.DoubleType(), True),
+])
+
+
+def psf_star_mask(
+    x: np.ndarray,
+    y: np.ndarray,
+    peak: np.ndarray,
+    flux: np.ndarray,
+    ids: np.ndarray,
+    width: int,
+    height: int,
+    fwhm: float,
+    border: int = 16,
+    crowd_mult: float = 5.0,
+    trim: int = 5,
+) -> np.ndarray:
+    """The reference's masking rules over one image's detections:
+
+    1. border predicate (core.py:309-310): ≥ ``border`` px from edges;
+    2. saturation predicate (core.py:79): peak < 50k;
+    3. crowding rejection (core.py:317-330): no other star that passes
+       1-2 within ``crowd_mult * fwhm``;
+    4. brightness trim (core.py:338-340): drop the ``trim`` brightest
+       and faintest when more than 2*trim remain.
+
+    Returns the indices of the selected stars, brightest first (ties by
+    id).
+    """
+    ok = np.flatnonzero((x > border) & (x < width - 1 - border)
+                        & (y > border) & (y < height - 1 - border)
+                        & (peak < SATURATION))
+    dx = np.subtract.outer(x[ok], x[ok])
+    dy = np.subtract.outer(y[ok], y[ok])
+    close = np.sqrt(dx * dx + dy * dy) <= fwhm * crowd_mult
+    np.fill_diagonal(close, False)
+    isolated = ok[~close.any(axis=1)]
+    ranked = isolated[np.lexsort((ids[isolated], -flux[isolated]))]
+    if len(ranked) <= 2 * trim:
+        return ranked
+    return ranked[trim:len(ranked) - trim]
 
 
 def select_psf_stars(
@@ -34,82 +88,38 @@ def select_psf_stars(
     trim: int = 5,
     fwhm_table: DataFrame | None = None,
 ) -> DataFrame:
-    """The reference's masking rules as one declarative plan:
-
-    1. border predicate (core.py:309-310): ≥ ``border`` px from edges;
-    2. saturation predicate (core.py:79): peak < 50k;
-    3. crowding rejection (core.py:317-330): no other star within
-       ``crowd_mult * fwhm`` — grid-bucketed self-join → anti-join
-       (the O(n²) loop becomes a linear equi-join);
-    4. brightness trim (core.py:338-340): drop the ``trim`` brightest
-       and faintest when more than 2*trim remain, per epoch.
+    """PSF stars per (epoch, image) by :func:`psf_star_mask`.
 
     ``fwhm_table`` (epoch_id, fwhm rows, e.g. from measure_fwhm) makes
-    the crowding radius PER-EPOCH via a broadcast join — the reference
-    recomputes fwhm per image set (psf_phot.py:49) and so does this
-    plan; the scalar ``fwhm`` is the fallback for epochs with no
-    measurement. Cell ids use the epoch's own radius, so the self-join
-    stays a pure (epoch, cell) equi-join.
+    the crowding radius PER-EPOCH, the mean of the epoch's measured
+    FWHMs — the reference recomputes fwhm per image set (psf_phot.py:49);
+    the scalar ``fwhm`` is the fallback for epochs with no measurement.
     """
-    d = detections.filter(
-        (F.col("xcentroid") > border) & (F.col("xcentroid") < width - 1 - border)
-        & (F.col("ycentroid") > border) & (F.col("ycentroid") < height - 1 - border)
-        & (F.col("peak") < SATURATION)
-    )
     if fwhm_table is not None:
         per_epoch = (fwhm_table.filter(F.col("fwhm").isNotNull())
                      .groupBy("epoch_id")
                      .agg(F.avg("fwhm").alias("__fwhm")))
-        d = (d.join(F.broadcast(per_epoch), "epoch_id", "left")
-             .withColumn("__fwhm", F.coalesce("__fwhm", F.lit(float(fwhm)))))
+        d = detections.join(F.broadcast(per_epoch), "epoch_id", "left")
     else:
-        d = d.withColumn("__fwhm", F.lit(float(fwhm)))
+        d = detections.withColumn("__fwhm", F.lit(None).cast("double"))
 
-    # Crowding: pairs within radius via cell-bucketed self-join. The
-    # radius (and so the cell size) is an epoch-level column; both join
-    # sides derive cells from the same epoch's radius.
-    radius = F.col("__fwhm") * crowd_mult
-    cell = lambda c: F.floor(c / radius).cast("long")  # noqa: E731
-    left = d.select("epoch_id", "filename", "id",
-                    F.col("xcentroid").alias("lx"), F.col("ycentroid").alias("ly"),
-                    radius.alias("lrad"),
-                    cell(F.col("xcentroid")).alias("cx"),
-                    cell(F.col("ycentroid")).alias("cy"))
-    offs = [(a, b) for a in (-1, 0, 1) for b in (-1, 0, 1)]
-    right = (d.select("epoch_id", "filename",
-                      F.col("id").alias("rid"),
-                      F.col("xcentroid").alias("rx"), F.col("ycentroid").alias("ry"),
-                      cell(F.col("xcentroid")).alias("bcx"),
-                      cell(F.col("ycentroid")).alias("bcy"))
-             .withColumn("o", F.explode(F.array(*[
-                 F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-                 for a, b in offs])))
-             .select("epoch_id", "filename", "rid", "rx", "ry",
-                     (F.col("bcx") + F.col("o.a")).alias("cx"),
-                     (F.col("bcy") + F.col("o.b")).alias("cy")))
-    crowded = (
-        left.join(right, on=["epoch_id", "filename", "cx", "cy"])
-        .filter((F.col("id") != F.col("rid"))
-                & (F.sqrt(F.pow(F.col("lx") - F.col("rx"), 2)
-                          + F.pow(F.col("ly") - F.col("ry"), 2))
-                   <= F.col("lrad")))
-        .select("epoch_id", "filename", "id").distinct()
-    )
-    isolated = d.join(crowded, on=["epoch_id", "filename", "id"], how="left_anti")
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        measured = pdf["__fwhm"].iloc[0]
+        keep = psf_star_mask(
+            pdf["xcentroid"].to_numpy(np.float64),
+            pdf["ycentroid"].to_numpy(np.float64),
+            pdf["peak"].to_numpy(np.float64), pdf["flux"].to_numpy(np.float64),
+            pdf["id"].to_numpy(), width, height,
+            fwhm if pd.isna(measured) else float(measured),
+            border, crowd_mult, trim)
+        return (pdf.iloc[keep]
+                .rename(columns={"xcentroid": "x", "ycentroid": "y"})
+                [PSF_STAR_SCHEMA.names])
 
-    part = W.partitionBy("epoch_id", "filename")
-    ranked = isolated.select(
-        "*",
-        F.row_number().over(part.orderBy(F.desc("flux"), F.asc("id"))).alias("rn"),
-        F.count(F.lit(1)).over(part).alias("cnt"),
-    )
-    return (
-        ranked.filter((F.col("cnt") <= 2 * trim)
-                      | ((F.col("rn") > trim) & (F.col("rn") <= F.col("cnt") - trim)))
-        .select("epoch_id", "filename",
-                F.col("xcentroid").alias("x"), F.col("ycentroid").alias("y"),
-                "flux", "id", "peak")
-    )
+    return (d.select("epoch_id", "filename", "id", "xcentroid", "ycentroid",
+                     "flux", "peak", "__fwhm")
+            .groupBy("epoch_id", "filename")
+            .applyInPandas(kernel, schema=PSF_STAR_SCHEMA))
 
 
 def _sigma_clipped_median(data: np.ndarray, sigma: float = 3.0,
@@ -227,16 +237,25 @@ def _sample_epsf(fine: np.ndarray, ch: int, oversampling: int,
     return psf / s if s > 0 else psf
 
 
-def psf_photometry(
-    stacked: DataFrame,
-    detections: DataFrame,
-    psf_stars: DataFrame,
+
+
+def fit_psf_photometry(
+    img: np.ndarray,
+    stars: list[dict],
+    psf_refs: list[tuple[float, float]],
     cut_half: int = 8,
     n_iters: int = 5,
     fwhm: float = 4.5,
     oversampling: int = 1,
-) -> DataFrame:
-    """Empirical-PSF photometry per epoch (grouped applyInPandas).
+) -> list[dict]:
+    """Empirical-PSF photometry of one epoch's stacked image.
+
+    ``stars``: the detections to fit, dicts with ``id``, ``xcentroid``,
+    ``ycentroid`` and ``flux`` (the detection's aperture flux, which
+    orders the fits), in detection order. ``psf_refs``: (x, y) of the
+    PSF stars. Returns one dict per fitted star, keyed by the
+    PHOT_SCHEMA fields other than ``epoch_id``; no PSF reference with a
+    usable cutout → no rows.
 
     Background: per-star LOCAL annulus subtraction (core.py:344-382) on
     the work image before PSF build and fitting, with a global-median
@@ -262,196 +281,207 @@ def psf_photometry(
     LevMar-free equivalent of fitting the compound model. Each round
     subtracts fitted models from the work image so later (fainter)
     rounds fit on neighbor-cleaned pixels (core.py:447's iterative
-    subtraction). Returns PHOT_SCHEMA rows; x_fit/y_fit from moment
-    recentroid of the neighbor-subtracted cutout; bkg_local/resid_rms
-    are the per-star diagnostics the reference's residual sink consumes
+    subtraction). x_fit/y_fit come from a moment recentroid of the
+    neighbor-subtracted cutout; bkg_local/resid_rms are the per-star
+    diagnostics the reference's residual sink consumes
     (core.py:454-484)."""
+    h, w = img.shape
+    # Global median levels the frame; the per-star annulus pass then
+    # removes the LOCAL deviation (gradients, nebulosity) around each
+    # star, composing to the reference's local annulus level.
+    sky = float(np.median(img))
+    positions = [(s["xcentroid"], s["ycentroid"]) for s in stars]
+    sub, bkg_delta = local_background_subtract(img - sky, positions, fwhm=fwhm)
+    bkg_by_id = {s["id"]: sky + b for s, b in zip(stars, bkg_delta)}
+    ch = cut_half
+
+    def cutout(arr, x, y):
+        ix, iy = int(round(x)), int(round(y))
+        if ix - ch < 0 or iy - ch < 0 or ix + ch + 1 > w or iy + ch + 1 > h:
+            return None, ix, iy
+        return arr[iy - ch: iy + ch + 1, ix - ch: ix + ch + 1], ix, iy
+
+    # Empirical PSF: median of normalized reference-star cutouts — at
+    # native resolution (oversampling=1, the default) or on a
+    # sub-pixel-aligned oversampled grid (oversampling=2 mirrors the
+    # reference's EPSFBuilder(oversampling=2), core.py:411).
+    refs = []
+    for px, py in psf_refs:
+        cut, ix, iy = cutout(sub, px, py)
+        if cut is not None and cut.max() > 0:
+            refs.append((cut / cut.max(), float(px) - ix, float(py) - iy))
+    if not refs:
+        return []
+    psf = np.median(np.stack([c for c, _, _ in refs]), axis=0)
+    psf = np.clip(psf, 0, None)
+    psf /= psf.sum()
+    fine = (_epsf_fine_grid(refs, ch, oversampling)
+            if oversampling > 1 else None)
+    denom = float((psf * psf).sum())
+    P = 2 * ch + 1
+
+    def psf_of(s, ix, iy):
+        """Per-star PSF basis (sum-normalized) + its self-overlap: the
+        shared native model, or the oversampled model sampled at the
+        star's sub-pixel offset."""
+        if fine is None:
+            return psf, denom
+        pj = _sample_epsf(fine, ch, oversampling,
+                          float(s["xcentroid"]) - ix, float(s["ycentroid"]) - iy)
+        return pj, float((pj * pj).sum())
+
+    def recentroid(cut, ix, iy, s):
+        cc = np.clip(cut, 0, None)
+        tot = cc.sum()
+        yy, xx = np.mgrid[iy - ch: iy + ch + 1, ix - ch: ix + ch + 1]
+        xfit = float((xx * cc).sum() / tot) if tot > 0 else s["xcentroid"]
+        yfit = float((yy * cc).sum() / tot) if tot > 0 else s["ycentroid"]
+        return xfit, yfit
+
+    def emit(s, xfit, yfit, fhat, resid, it, dnm):
+        return {"id": s["id"], "x_0": s["xcentroid"], "x_fit": xfit,
+                "y_0": s["ycentroid"], "y_fit": yfit,
+                "flux_fit": fhat,
+                "flux_unc": float(np.sqrt(
+                    np.clip((resid ** 2).sum(), 0, None) / dnm)),
+                "iter_detected": it,
+                "bkg_local": bkg_by_id.get(s["id"], sky),
+                "resid_rms": float(np.sqrt((resid ** 2).mean()))}
+
+    def components(members):
+        """DAOGroup(2*fwhm) semantics (core.py:440): connected
+        components under pairwise separation <= 2*fwhm."""
+        crit = 2.0 * fwhm
+        parent = list(range(len(members)))
+
+        def find(i):
+            while parent[i] != i:
+                parent[i] = parent[parent[i]]
+                i = parent[i]
+            return i
+
+        for i in range(len(members)):
+            xi, yi = members[i][0]["xcentroid"], members[i][0]["ycentroid"]
+            for j in range(i + 1, len(members)):
+                xj, yj = members[j][0]["xcentroid"], members[j][0]["ycentroid"]
+                if (xi - xj) ** 2 + (yi - yj) ** 2 <= crit * crit:
+                    parent[find(i)] = find(j)
+        groups: dict[int, list] = {}
+        for i, m in enumerate(members):
+            groups.setdefault(find(i), []).append(m)
+        return list(groups.values())
+
+    def fit_group(work, grp, it, out):
+        """Simultaneous linear LSQ over the union of the group's cutout
+        footprints: one shifted-PSF design column per member (the
+        DAOGroup compound-model fit, core.py:440). Non-positive fluxes
+        retreat from the active set deterministically and stay unfit
+        this round (a later round retries them on the
+        neighbor-subtracted image)."""
+        y0 = min(iy for _, _, iy in grp) - ch
+        y1 = max(iy for _, _, iy in grp) + ch + 1
+        x0 = min(ix for _, ix, _ in grp) - ch
+        x1 = max(ix for _, ix, _ in grp) + ch + 1
+        cols = np.zeros((len(grp), y1 - y0, x1 - x0))
+        mask = np.zeros((y1 - y0, x1 - x0), dtype=bool)
+        dnms = []
+        for j, (s, ix, iy) in enumerate(grp):
+            pj, dj = psf_of(s, ix, iy)
+            dnms.append(dj)
+            sy, sx = iy - ch - y0, ix - ch - x0
+            cols[j, sy:sy + P, sx:sx + P] = pj
+            mask[sy:sy + P, sx:sx + P] = True
+        box = work[y0:y1, x0:x1]
+        b = box[mask]
+        A = cols[:, mask].T  # (n_pix, k)
+        active = list(range(len(grp)))
+        flux = np.zeros(len(grp))
+        while active:
+            f, *_ = np.linalg.lstsq(A[:, active], b, rcond=None)
+            if (f > 0).all():
+                for i, v in zip(active, f):
+                    flux[i] = float(v)
+                break
+            active = [i for i, v in zip(active, f) if v > 0]
+        if not active:
+            return
+        model = np.tensordot(flux, cols, axes=1)
+        resid_box = box - model
+        work[y0:y1, x0:x1][mask] = resid_box[mask]
+        for j in active:
+            s, ix, iy = grp[j]
+            sy, sx = iy - ch - y0, ix - ch - x0
+            resid = resid_box[sy:sy + P, sx:sx + P]
+            # recentroid on the star's OWN model + local residual — i.e.
+            # the cutout with the other members subtracted
+            own = resid + cols[j, sy:sy + P, sx:sx + P] * flux[j]
+            xfit, yfit = recentroid(own, ix, iy, s)
+            out.append(emit(s, xfit, yfit, float(flux[j]), resid, it, dnms[j]))
+
+    by_flux = sorted(stars, key=lambda s: -(s["flux"] or 0))
+    work = sub.copy()
+    out: list[dict] = []
+    for it in range(n_iters):
+        done = {o["id"] for o in out}
+        todo = []
+        for s in by_flux:
+            if s["id"] in done:
+                continue
+            cut, ix, iy = cutout(work, s["xcentroid"], s["ycentroid"])
+            if cut is not None:
+                todo.append((s, ix, iy))
+        # brightest-first over groups (group brightness = brightest member)
+        groups = sorted(components(todo),
+                        key=lambda g: -max((m[0]["flux"] or 0) for m in g))
+        for grp in groups:
+            if len(grp) > 1:
+                fit_group(work, grp, it, out)
+                continue
+            s, ix, iy = grp[0]
+            cut = work[iy - ch: iy + ch + 1, ix - ch: ix + ch + 1]
+            pj, dj = psf_of(s, ix, iy)
+            fhat = float((cut * pj).sum() / dj)
+            if fhat <= 0:
+                continue
+            # recentroid on the neighbor-subtracted cutout
+            xfit, yfit = recentroid(cut, ix, iy, s)
+            resid = cut - fhat * pj
+            work[iy - ch: iy + ch + 1, ix - ch: ix + ch + 1] = resid
+            out.append(emit(s, xfit, yfit, fhat, resid, it, dj))
+    return out
+
+
+def psf_photometry(
+    stacked: DataFrame,
+    detections: DataFrame,
+    psf_stars: DataFrame,
+    cut_half: int = 8,
+    n_iters: int = 5,
+    fwhm: float = 4.5,
+    oversampling: int = 1,
+) -> DataFrame:
+    """Per-epoch :func:`fit_psf_photometry` (grouped applyInPandas over
+    the stacked image, its detections and its PSF stars); PHOT_SCHEMA
+    rows."""
     stk = stacked.select("epoch_id", "width", "height", "pixels")
-    dets = detections.select("epoch_id", "id", "xcentroid", "ycentroid", "flux") \
-                     .withColumnRenamed("flux", "flux_0")
-    stars = psf_stars.select("epoch_id",
-                             F.col("x").alias("px"), F.col("y").alias("py"))
-    merged = (stk.join(dets.groupBy("epoch_id").agg(
-                  F.collect_list(F.struct("id", "xcentroid", "ycentroid", "flux_0"))
-                   .alias("stars")), "epoch_id")
-              .join(stars.groupBy("epoch_id").agg(
-                  F.collect_list(F.struct("px", "py")).alias("psf_refs")),
-                  "epoch_id"))
+    dets = detections.groupBy("epoch_id").agg(F.collect_list(
+        F.struct("id", "xcentroid", "ycentroid", "flux")).alias("stars"))
+    refs = psf_stars.groupBy("epoch_id").agg(
+        F.collect_list(F.struct("x", "y")).alias("psf_refs"))
+    merged = stk.join(dets, "epoch_id").join(refs, "epoch_id")
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         row = pdf.iloc[0]
-        w, h = int(row["width"]), int(row["height"])
-        img = np.asarray(row["pixels"], dtype=np.float64).reshape(h, w)
-        # Global median levels the frame; the per-star annulus pass then
-        # removes the LOCAL deviation (gradients, nebulosity) around each
-        # star, composing to the reference's local annulus level.
-        sky = float(np.median(img))
-        positions = [(s["xcentroid"], s["ycentroid"]) for s in row["stars"]]
-        sub, bkg_delta = local_background_subtract(img - sky, positions,
-                                                   fwhm=fwhm)
-        bkg_by_id = {s["id"]: sky + b
-                     for s, b in zip(row["stars"], bkg_delta)}
-        ch = cut_half
-
-        def cutout(arr, x, y):
-            ix, iy = int(round(x)), int(round(y))
-            if ix - ch < 0 or iy - ch < 0 or ix + ch + 1 > w or iy + ch + 1 > h:
-                return None, ix, iy
-            return arr[iy - ch: iy + ch + 1, ix - ch: ix + ch + 1], ix, iy
-
-        # Empirical PSF: median of normalized reference-star cutouts —
-        # at native resolution (oversampling=1, the default) or on a
-        # sub-pixel-aligned oversampled grid (oversampling=2 mirrors
-        # the reference's EPSFBuilder(oversampling=2), core.py:411).
-        refs = []
-        for r in row["psf_refs"]:
-            cut, ix, iy = cutout(sub, r["px"], r["py"])
-            if cut is not None and cut.max() > 0:
-                refs.append((cut / cut.max(),
-                             float(r["px"]) - ix, float(r["py"]) - iy))
-        if not refs:
-            return pd.DataFrame(columns=[f.name for f in PHOT_SCHEMA])
-        psf = np.median(np.stack([c for c, _, _ in refs]), axis=0)
-        psf = np.clip(psf, 0, None)
-        psf /= psf.sum()
-        fine = (_epsf_fine_grid(refs, ch, oversampling)
-                if oversampling > 1 else None)
-
-        def psf_of(s, ix, iy):
-            """Per-star PSF basis (sum-normalized) + its self-overlap:
-            the shared native model, or the oversampled model sampled
-            at the star's sub-pixel offset."""
-            if fine is None:
-                return psf, denom
-            pj = _sample_epsf(fine, ch, oversampling,
-                              float(s["xcentroid"]) - ix,
-                              float(s["ycentroid"]) - iy)
-            return pj, float((pj * pj).sum())
-
-        stars = sorted(row["stars"], key=lambda s: -(s["flux_0"] or 0))
-        denom = float((psf * psf).sum())
-        P = 2 * ch + 1
-
-        def recentroid(cut, ix, iy, s):
-            cc = np.clip(cut, 0, None)
-            tot = cc.sum()
-            yy, xx = np.mgrid[iy - ch: iy + ch + 1, ix - ch: ix + ch + 1]
-            xfit = float((xx * cc).sum() / tot) if tot > 0 else s["xcentroid"]
-            yfit = float((yy * cc).sum() / tot) if tot > 0 else s["ycentroid"]
-            return xfit, yfit
-
-        def emit(s, xfit, yfit, fhat, resid, it, dnm):
-            return {"id": s["id"], "x_0": s["xcentroid"], "x_fit": xfit,
-                    "y_0": s["ycentroid"], "y_fit": yfit,
-                    "flux_fit": fhat,
-                    "flux_unc": float(np.sqrt(
-                        np.clip((resid ** 2).sum(), 0, None) / dnm)),
-                    "iter_detected": it,
-                    "bkg_local": bkg_by_id.get(s["id"], sky),
-                    "resid_rms": float(np.sqrt((resid ** 2).mean()))}
-
-        def components(members):
-            """DAOGroup(2*fwhm) semantics (core.py:440): connected
-            components under pairwise separation <= 2*fwhm."""
-            crit = 2.0 * fwhm
-            parent = list(range(len(members)))
-
-            def find(i):
-                while parent[i] != i:
-                    parent[i] = parent[parent[i]]
-                    i = parent[i]
-                return i
-
-            for i in range(len(members)):
-                xi, yi = members[i][0]["xcentroid"], members[i][0]["ycentroid"]
-                for j in range(i + 1, len(members)):
-                    xj, yj = members[j][0]["xcentroid"], members[j][0]["ycentroid"]
-                    if (xi - xj) ** 2 + (yi - yj) ** 2 <= crit * crit:
-                        parent[find(i)] = find(j)
-            groups: dict[int, list] = {}
-            for i, m in enumerate(members):
-                groups.setdefault(find(i), []).append(m)
-            return list(groups.values())
-
-        def fit_group(work, grp, it, out):
-            """Simultaneous linear LSQ over the union of the group's
-            cutout footprints: one shifted-PSF design column per member
-            (the DAOGroup compound-model fit, core.py:440). Non-positive
-            fluxes retreat from the active set deterministically and
-            stay unfit this round (a later round retries them on the
-            neighbor-subtracted image)."""
-            y0 = min(iy for _, _, iy in grp) - ch
-            y1 = max(iy for _, _, iy in grp) + ch + 1
-            x0 = min(ix for _, ix, _ in grp) - ch
-            x1 = max(ix for _, ix, _ in grp) + ch + 1
-            cols = np.zeros((len(grp), y1 - y0, x1 - x0))
-            mask = np.zeros((y1 - y0, x1 - x0), dtype=bool)
-            dnms = []
-            for j, (s, ix, iy) in enumerate(grp):
-                pj, dj = psf_of(s, ix, iy)
-                dnms.append(dj)
-                sy, sx = iy - ch - y0, ix - ch - x0
-                cols[j, sy:sy + P, sx:sx + P] = pj
-                mask[sy:sy + P, sx:sx + P] = True
-            box = work[y0:y1, x0:x1]
-            b = box[mask]
-            A = cols[:, mask].T  # (n_pix, k)
-            active = list(range(len(grp)))
-            flux = np.zeros(len(grp))
-            while active:
-                f, *_ = np.linalg.lstsq(A[:, active], b, rcond=None)
-                if (f > 0).all():
-                    for i, v in zip(active, f):
-                        flux[i] = float(v)
-                    break
-                active = [i for i, v in zip(active, f) if v > 0]
-            if not active:
-                return
-            model = np.tensordot(flux, cols, axes=1)
-            resid_box = box - model
-            work[y0:y1, x0:x1][mask] = resid_box[mask]
-            for j in active:
-                s, ix, iy = grp[j]
-                sy, sx = iy - ch - y0, ix - ch - x0
-                resid = resid_box[sy:sy + P, sx:sx + P]
-                # recentroid on the star's OWN model + local residual —
-                # i.e. the cutout with the other members subtracted
-                own = resid + cols[j, sy:sy + P, sx:sx + P] * flux[j]
-                xfit, yfit = recentroid(own, ix, iy, s)
-                out.append(emit(s, xfit, yfit, float(flux[j]), resid, it,
-                                dnms[j]))
-
-        work = sub.copy()
-        out = []
-        for it in range(n_iters):
-            done = {o["id"] for o in out}
-            todo = []
-            for s in stars:
-                if s["id"] in done:
-                    continue
-                cut, ix, iy = cutout(work, s["xcentroid"], s["ycentroid"])
-                if cut is not None:
-                    todo.append((s, ix, iy))
-            # brightest-first over groups (group brightness = brightest member)
-            groups = sorted(components(todo),
-                            key=lambda g: -max((m[0]["flux_0"] or 0) for m in g))
-            for grp in groups:
-                if len(grp) > 1:
-                    fit_group(work, grp, it, out)
-                    continue
-                s, ix, iy = grp[0]
-                cut = work[iy - ch: iy + ch + 1, ix - ch: ix + ch + 1]
-                pj, dj = psf_of(s, ix, iy)
-                fhat = float((cut * pj).sum() / dj)
-                if fhat <= 0:
-                    continue
-                # recentroid on the neighbor-subtracted cutout
-                xfit, yfit = recentroid(cut, ix, iy, s)
-                resid = cut - fhat * pj
-                work[iy - ch: iy + ch + 1, ix - ch: ix + ch + 1] = resid
-                out.append(emit(s, xfit, yfit, fhat, resid, it, dj))
-        res = pd.DataFrame(out)
-        res["epoch_id"] = int(row["epoch_id"])
-        return res[[f.name for f in PHOT_SCHEMA]]
+        img = np.asarray(row["pixels"], dtype=np.float64).reshape(
+            int(row["height"]), int(row["width"]))
+        stars = [{k: s[k] for k in ("id", "xcentroid", "ycentroid", "flux")}
+                 for s in row["stars"]]
+        out = pd.DataFrame(
+            fit_psf_photometry(img, stars,
+                               [(r["x"], r["y"]) for r in row["psf_refs"]],
+                               cut_half, n_iters, fwhm, oversampling),
+            columns=PHOT_SCHEMA.names[1:])
+        out.insert(0, "epoch_id", int(row["epoch_id"]))
+        return out
 
     return merged.groupBy("epoch_id").applyInPandas(kernel, schema=PHOT_SCHEMA)

@@ -1,69 +1,284 @@
-"""The end-to-end photometry pipeline as one lazily-composed plan.
+"""The end-to-end photometry pipeline: one numpy kernel per epoch.
 
 Reference lifecycle (psf_phot.py:9-98, traced in SURVEY.md §3.1):
 manifest scan → per-epoch loop → FWHM → align+stack → detect → mask →
-photometry → sinks. Here each stage is a DataFrame-in/DataFrame-out
-operator, composed lazily and planned by Catalyst at action time; the
-sequential per-epoch loop becomes task parallelism across epochs —
-the single biggest structural speedup over the reference (SURVEY.md §4).
+photometry → WCS → sinks. An image set never needs to be split across
+executors (SURVEY.md §1 D1) and holds a few frames and a few dozen
+stars, so the whole chain for one epoch is ONE numpy function,
+:func:`process_epoch`, and :func:`epoch_records` runs it in a single
+``groupBy("epoch_id").applyInPandas`` over the decoded frames: one
+shuffle of frames, then one task per group of epochs. The reference's
+sequential per-epoch loop becomes task parallelism across epochs,
+without the fixed cost of a Spark stage per step.
+
+Each epoch yields one record (EPOCH_SCHEMA): the stacked pixels, the
+rows of every step, the TXT statistics, the FITS header inputs, the WCS
+solution and a named outcome. The sinks and :func:`pipeline_stages`
+(the per-step DataFrames) are projections of that record, so caching it
+once serves them all with no further shuffle or join.
 
 Failure-path semantics: the reference's branchy per-set fallbacks
-(psf_phot.py:53-98) are expressed by operators yielding empty/NULL
-results for degenerate groups, so one bad epoch never kills the job.
+(psf_phot.py:53-98) become the record's outcome — ``ok``, ``no_frames``
+(listed in the manifest, no decodable frame), ``no_detections`` (no
+star found in the stack) or ``no_psf_star`` (stars found, none usable
+as a PSF star, so nothing is fit) — so one bad epoch never kills the
+job and never goes missing silently.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+from dataclasses import dataclass, field
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..operators.external import WCS_SCHEMA, solve_top_stars
 from ..operators.images import (
-    align_and_stack,
-    detect_stars,
-    estimate_shifts,
-    measure_fwhm,
+    DETECT_SCHEMA,
+    FWHM_SCHEMA,
+    GAUSSIAN_SIGMA_TO_FWHM,
+    SHIFT_SCHEMA,
+    STACK_SCHEMA,
+    find_stars,
+    frame_of,
+    fwhm_sigma,
+    match_shifts,
+    stack_frames,
 )
-from ..operators.photometry import psf_photometry, select_psf_stars
+from ..operators.photometry import (
+    PHOT_SCHEMA,
+    PSF_STAR_SCHEMA,
+    fit_psf_photometry,
+    psf_star_mask,
+)
+from ..sources.fits import mid_exposure_jd
+
+MEAN_FWHM = 4.5   # fallback FWHM for epochs with no measurement; photometry's grouping width
+PSF_BORDER = 16   # PSF stars sit at least this far inside the --size frame
+PSF_TRIM = 2      # brightest and faintest PSF candidates dropped per epoch
+
+
+@dataclass
+class Frame:
+    """One decoded image of an epoch, as the kernel needs it."""
+
+    filename: str
+    pixels: np.ndarray  # 2-D
+    band: str | None = None
+    airmass: float | None = None
+    jd_mid: float | None = None  # mid-exposure Julian date
+    header: dict[str, str] = field(default_factory=dict)
+
+
+def _rows(schema: T.StructType, *keys: str) -> T.ArrayType:
+    """A step's rows inside the record: its schema less the ``keys``
+    the record already holds."""
+    return T.ArrayType(T.StructType([f for f in schema.fields
+                                     if f.name not in keys]))
+
+
+EPOCH_SCHEMA = T.StructType([
+    T.StructField("epoch_id", T.IntegerType(), False),
+    T.StructField("outcome", T.StringType(), False),
+    T.StructField("n_frames", T.IntegerType(), False),
+    T.StructField("listed", T.ArrayType(T.StringType()), False),
+    T.StructField("missing", T.ArrayType(T.StringType()), False),
+    # the stack (STACK_SCHEMA)
+    T.StructField("band", T.StringType(), True),
+    T.StructField("width", T.IntegerType(), True),
+    T.StructField("height", T.IntegerType(), True),
+    T.StructField("pixels", T.ArrayType(T.FloatType()), True),
+    T.StructField("n_images", T.IntegerType(), True),
+    # the rows of every step, without the epoch key
+    T.StructField("fwhm", _rows(FWHM_SCHEMA, "epoch_id"), True),
+    T.StructField("detections", _rows(DETECT_SCHEMA, "epoch_id"), True),
+    T.StructField("shifts", _rows(SHIFT_SCHEMA, "epoch_id"), True),
+    T.StructField("stacked_detections",
+                  _rows(DETECT_SCHEMA, "epoch_id", "filename"), True),
+    T.StructField("psf_stars", _rows(PSF_STAR_SCHEMA, "epoch_id", "filename"), True),
+    T.StructField("photometry", _rows(PHOT_SCHEMA, "epoch_id"), True),
+    # TXT statistics (sources.sinks.write_stats_txt rounds them)
+    T.StructField("n_sources", T.IntegerType(), True),
+    T.StructField("n_psf", T.IntegerType(), True),
+    T.StructField("n_results", T.IntegerType(), True),
+    T.StructField("peak_min", T.DoubleType(), True),
+    T.StructField("peak_max", T.DoubleType(), True),
+    T.StructField("peak_med", T.DoubleType(), True),
+    T.StructField("flux_min", T.DoubleType(), True),
+    T.StructField("flux_max", T.DoubleType(), True),
+    T.StructField("flux_med", T.DoubleType(), True),
+    T.StructField("mean_fwhm", T.DoubleType(), True),
+    # FITS header inputs
+    T.StructField("avg_airmass", T.DoubleType(), True),
+    T.StructField("jd_mid", T.DoubleType(), True),
+    T.StructField("base_header", T.MapType(T.StringType(), T.StringType()), True),
+    # WCS solution (WCS_SCHEMA)
+    *[T.StructField(f.name, f.dataType, True) for f in WCS_SCHEMA.fields[1:]],
+])
+
+
+def _mean(values: Sequence[float | None]) -> float | None:
+    """Mean of the values that are not None, summed in order (as SQL AVG
+    sums one partition's rows), or None."""
+    present = [v for v in values if v is not None]
+    total = 0.0
+    for v in present:
+        total += v
+    return total / len(present) if present else None
+
+
+def process_epoch(
+    epoch_id: int,
+    frames: Sequence[Frame],
+    size: int = 128,
+    listed: Sequence[str] = (),
+) -> dict:
+    """The whole image chain for one epoch; returns its EPOCH_SCHEMA
+    record as a dict.
+
+    FWHM per frame → detect per frame → shifts onto the first frame →
+    sigma-clipped stack → detect on the stack → PSF-star mask (per-epoch
+    mean FWHM, ``size``-px frame) → PSF photometry → top-30 WCS solve.
+    ``listed``: the epoch's filenames in the manifest; those with no
+    frame are reported as ``missing``. Frames are taken in filename
+    order, so the first is the reference frame.
+    """
+    frames = sorted(frames, key=lambda f: f.filename)
+    planes = [np.asarray(f.pixels, dtype=np.float64) for f in frames]
+    rec: dict = {"epoch_id": epoch_id, "n_frames": len(frames),
+                 "listed": sorted(listed),
+                 "missing": sorted(set(listed) - {f.filename for f in frames})}
+    if not frames:
+        return {**rec, "outcome": "no_frames"}
+
+    fwhm = []
+    for f, img in zip(frames, planes):
+        sigma = fwhm_sigma(img)
+        fwhm.append({"filename": f.filename, "sigma": sigma,
+                     "fwhm": None if sigma is None else sigma * GAUSSIAN_SIGMA_TO_FWHM})
+    detections = [(f.filename, find_stars(img)) for f, img in zip(frames, planes)]
+    shifts = match_shifts([
+        (name, np.array([s["xcentroid"] for s in stars]),
+         np.array([s["ycentroid"] for s in stars]))
+        for name, stars in detections if stars])
+    by_name = {s["filename"]: (s["dx"], s["dy"]) for s in shifts}
+    stacked = stack_frames(planes,
+                           [by_name.get(f.filename, (0, 0)) for f in frames])
+    stack = stacked.astype(np.float64)
+    found = find_stars(stack)
+    mean_fwhm = _mean([r["fwhm"] for r in fwhm])
+    rec.update({
+        "band": frames[0].band, "height": stack.shape[0], "width": stack.shape[1],
+        "pixels": stacked.ravel(), "n_images": len(frames),
+        "fwhm": fwhm,
+        "detections": [{"filename": name, **s} for name, stars in detections
+                       for s in stars],
+        "shifts": shifts,
+        "stacked_detections": found,
+        "n_sources": len(found), "n_psf": 0, "n_results": 0,
+        "mean_fwhm": mean_fwhm,
+        "avg_airmass": _mean([f.airmass for f in frames]),
+        "jd_mid": _mean([f.jd_mid for f in frames]),
+        "base_header": frames[0].header,
+    })
+    if not found:
+        return {**rec, "outcome": "no_detections", "psf_stars": [],
+                "photometry": []}
+
+    x, y, peak, flux, ids = (np.array([s[k] for s in found])
+                             for k in ("xcentroid", "ycentroid", "peak", "flux", "id"))
+    keep = psf_star_mask(x, y, peak, flux, ids, size, size,
+                         MEAN_FWHM if mean_fwhm is None else mean_fwhm,
+                         border=PSF_BORDER, trim=PSF_TRIM)
+    psf_stars = [{"x": x[i], "y": y[i], "flux": flux[i], "id": ids[i],
+                  "peak": peak[i]} for i in keep]
+    phot = fit_psf_photometry(stack, found, [(x[i], y[i]) for i in keep],
+                              fwhm=MEAN_FWHM)
+    fitted = [p["flux_fit"] for p in phot]
+    rec.update({
+        "outcome": "ok" if phot else "no_psf_star",
+        "psf_stars": psf_stars, "photometry": phot,
+        "n_psf": len(psf_stars), "n_results": len(phot),
+        "peak_min": float(peak.min()), "peak_max": float(peak.max()),
+        "peak_med": float(np.median(peak)),
+        **solve_top_stars(x, y, flux, ids),
+    })
+    if fitted:
+        rec.update({"flux_min": min(fitted), "flux_max": max(fitted),
+                    "flux_med": float(np.median(fitted))})
+    return rec
+
+
+def epoch_records(images: DataFrame, size: int = 128,
+                  manifest: DataFrame | None = None) -> DataFrame:
+    """images (schemas.IMAGE) → one EPOCH_SCHEMA record per epoch, from
+    :func:`process_epoch` in one grouped kernel.
+
+    ``manifest`` (filename, epoch_id) adds a record for every listed
+    epoch, also those with no decodable frame (outcome ``no_frames``),
+    and fills ``listed``/``missing``. Frames with no epoch (no manifest
+    row) are left out. The result is lazy; cache it when more than one
+    output reads it."""
+    frames = images.filter(F.col("epoch_id").isNotNull()).select(
+        "epoch_id", "filename", "band", "width", "height", "pixels",
+        "airmass", mid_exposure_jd().alias("jd_mid"), "header")
+    if manifest is not None:
+        frames = frames.unionByName(
+            manifest.filter(F.col("epoch_id").isNotNull())
+            .select("epoch_id", "filename"),
+            allowMissingColumns=True)
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        decoded = pdf["pixels"].notna()
+        frames = [Frame(r["filename"], frame_of(r), r["band"],
+                        None if pd.isna(r["airmass"]) else float(r["airmass"]),
+                        None if pd.isna(r["jd_mid"]) else float(r["jd_mid"]),
+                        dict(r["header"] or {}))
+                  for _, r in pdf[decoded].iterrows()]
+        rec = process_epoch(int(pdf["epoch_id"].iloc[0]), frames, size,
+                            listed=pdf.loc[~decoded, "filename"].tolist())
+        return pd.DataFrame([[rec.get(c) for c in EPOCH_SCHEMA.names]],
+                            columns=EPOCH_SCHEMA.names)
+
+    return frames.groupBy("epoch_id").applyInPandas(kernel, schema=EPOCH_SCHEMA)
+
+
+def pipeline_stages(records: DataFrame) -> dict[str, DataFrame]:
+    """The per-step DataFrames of :func:`epoch_records`' output, each a
+    projection of it: {fwhm, detections, shifts, stacked,
+    stacked_detections, psf_stars, photometry} with the schemas of the
+    step operators (FWHM_SCHEMA, DETECT_SCHEMA, ...)."""
+
+    def rows(column: str, names: list[str], *keys) -> DataFrame:
+        return (records.select("epoch_id", *keys, F.inline(column))
+                .select(*names))
+
+    stacked_name = F.lit("stacked").alias("filename")
+    return {
+        "fwhm": rows("fwhm", FWHM_SCHEMA.names),
+        "detections": rows("detections", DETECT_SCHEMA.names),
+        "shifts": rows("shifts", SHIFT_SCHEMA.names),
+        "stacked": (records.filter(F.col("pixels").isNotNull())
+                    .select(*STACK_SCHEMA.names)),
+        "stacked_detections": rows("stacked_detections", DETECT_SCHEMA.names,
+                                   stacked_name),
+        "psf_stars": rows("psf_stars", PSF_STAR_SCHEMA.names, stacked_name),
+        "photometry": rows("photometry", PHOT_SCHEMA.names),
+    }
 
 
 def run_photometry_pipeline(images: DataFrame, size: int = 128) -> dict[str, DataFrame]:
     """images (schemas.IMAGE) → {fwhm, detections, shifts, stacked,
     stacked_detections, psf_stars, photometry} DataFrames.
 
-    Every returned DataFrame is lazy; materializing ``photometry`` pulls
-    the whole chain through one Catalyst plan. Stages reused twice
-    (detections feed both shift estimation and the final catalog) should
-    be ``.cache()``-ed by the caller when materializing more than one
-    output."""
-    fwhm = measure_fwhm(images)
-    detections = detect_stars(images)
-    shifts = estimate_shifts(detections)
-    stacked = align_and_stack(images, shifts)
-
-    stacked_images = stacked.select(
-        F.lit("stacked").alias("filename"), "epoch_id",
-        F.lit(None).cast("string").alias("band"),
-        "width", "height", "pixels",
-        F.lit(None).cast("double").alias("airmass"),
-        F.lit(None).cast("timestamp").alias("date_obs"),
-        F.lit(None).cast("double").alias("exptime"),
-        F.lit(None).cast("string").alias("site_id"),
-        F.lit(None).cast("map<string,string>").alias("header"),
-    )
-    stacked_detections = detect_stars(stacked_images)
-
-    mean_fwhm = 4.5  # fallback for epochs with no FWHM measurement
-    psf_stars = select_psf_stars(stacked_detections, width=size, height=size,
-                                 fwhm=mean_fwhm, border=16, trim=2,
-                                 fwhm_table=fwhm)
-    photometry = psf_photometry(stacked, stacked_detections, psf_stars,
-                                fwhm=mean_fwhm)
-    return {
-        "fwhm": fwhm,
-        "detections": detections,
-        "shifts": shifts,
-        "stacked": stacked,
-        "stacked_detections": stacked_detections,
-        "psf_stars": psf_stars,
-        "photometry": photometry,
-    }
+    All seven are projections of ONE cached :func:`epoch_records`
+    result, so materializing any number of them runs the per-epoch
+    kernel once. The cache lives until the session's
+    ``catalog.clearCache()``; to scope it, call :func:`epoch_records`
+    and :func:`pipeline_stages` directly and unpersist the records, as
+    ``__main__.main`` does."""
+    return pipeline_stages(epoch_records(images, size=size).cache())

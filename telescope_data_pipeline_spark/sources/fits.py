@@ -21,7 +21,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import IMAGE
@@ -85,6 +85,13 @@ FITS_SINK_SCHEMA = (
 )
 
 
+def mid_exposure_jd() -> Column:
+    """Mid-exposure Julian date of an IMAGE row: unix epoch -> JD
+    offset, + exptime/2 in days (reference p_io.py:48-56)."""
+    return (F.unix_timestamp("date_obs") / 86400.0 + 2440587.5
+            + F.col("exptime") / 2.0 / 86400.0)
+
+
 def write_stacked_fits(
     images: DataFrame,
     stacked: DataFrame,
@@ -102,40 +109,48 @@ def write_stacked_fits(
     - overlay: every WCS key EXCEPT HISTORY/COMMENT (p_io.py:40-42);
     - AIRMASS: mean over the epoch's images (p_io.py:43-47);
     - BJD: barycentric correction of the mean mid-exposure JD
-      (p_io.py:48-56, via :func:`..operators.external.barycentric_jd`).
+      (p_io.py:48-56, via :func:`..operators.external._approx_bjd`).
 
-    The per-epoch aggregation (mean airmass, mean mid-exposure JD, first
-    header) is relational — Catalyst plans it with map-side partial aggs
-    — and only the final dict overlay + file write run in the Arrow
-    kernel, one row per EPOCH, so the sink parallelizes across epochs
-    and the Python crossing is negligible. Returns the lazy manifest of
-    written files; materialize to execute the writes.
+    The per-epoch header inputs (mean airmass, mean mid-exposure JD,
+    first header) are a relational aggregation joined to the stack and
+    the WCS table; the files are written by :func:`write_fits_rows`.
+    Returns the lazy manifest of written files; materialize to execute
+    the writes.
     """
-    import os
-
-    from ..operators.external import barycentric_jd
-
-    # mid-exposure JD: unix epoch -> JD offset, + exptime/2 in days
-    jd_mid = (F.unix_timestamp("date_obs") / 86400.0 + 2440587.5
-              + F.col("exptime") / 2.0 / 86400.0)
     hdr = images.groupBy("epoch_id").agg(
         F.avg("airmass").alias("avg_airmass"),
-        F.avg(jd_mid).alias("jd_mid"),
+        F.avg(mid_exposure_jd()).alias("jd_mid"),
         F.min_by("header", "filename").alias("base_header"),
     )
-    hdr = hdr.withColumn(
-        "bjd", barycentric_jd("jd_mid", F.lit(target_ra), F.lit(target_dec)))
     rows = (stacked.select("epoch_id", "width", "height", "pixels")
             .join(hdr, "epoch_id")
             .join(F.broadcast(wcs.filter(F.col("solved"))
                               .select("epoch_id", "crval_ra", "crval_dec",
                                       "pix_scale")),
                   "epoch_id", "left"))
+    return write_fits_rows(rows, out_dir, target_ra, target_dec)
+
+
+def write_fits_rows(rows: DataFrame, out_dir: str, target_ra: float = 150.0,
+                    target_dec: float = 2.0) -> DataFrame:
+    """Write one FITS file per row of (epoch_id, width, height, pixels,
+    avg_airmass, jd_mid, base_header, crval_ra, crval_dec, pix_scale),
+    the header merged as :func:`write_stacked_fits` describes (no WCS
+    keys where ``crval_ra`` is null). An Arrow kernel over epochs, so
+    the sink parallelizes across epochs and the Python crossing is
+    negligible. Returns the lazy manifest of written files
+    (FITS_SINK_SCHEMA)."""
+    import os
+
+    from ..operators.external import _approx_bjd
 
     def write_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
+            bjd = _approx_bjd(pdf["jd_mid"].to_numpy(np.float64),
+                              np.full(len(pdf), target_ra),
+                              np.full(len(pdf), target_dec))
             out = []
-            for r in pdf.itertuples(index=False):
+            for r, r_bjd in zip(pdf.itertuples(index=False), bjd):
                 wcs_cards = {}
                 if r.crval_ra is not None and not pd.isna(r.crval_ra):
                     # a real solver returns a full header; HISTORY/COMMENT
@@ -147,7 +162,7 @@ def write_stacked_fits(
                 merged.update({k: str(v) for k, v in wcs_cards.items()
                                if k not in ("HISTORY", "COMMENT")})
                 merged["AIRMASS"] = str(r.avg_airmass)
-                merged["BJD"] = str(r.bjd)
+                merged["BJD"] = str(r_bjd)
                 px = np.asarray(r.pixels, dtype=np.float32) \
                     .reshape(int(r.height), int(r.width))
                 path = os.path.join(out_dir, f"stacked_e{int(r.epoch_id)}.fits")
@@ -156,12 +171,23 @@ def write_stacked_fits(
                             "n_bytes": os.path.getsize(path),
                             "n_cards": len(merged),
                             "avg_airmass": float(r.avg_airmass),
-                            "bjd": float(r.bjd)})
+                            "bjd": float(r_bjd)})
             yield pd.DataFrame(
                 out, columns=["epoch_id", "path", "n_bytes", "n_cards",
                               "avg_airmass", "bjd"])
 
-    return rows.mapInPandas(write_kernel, schema=FITS_SINK_SCHEMA)
+    return rows.select("epoch_id", "width", "height", "pixels", "avg_airmass",
+                       "jd_mid", "base_header", "crval_ra", "crval_dec",
+                       "pix_scale").mapInPandas(write_kernel, schema=FITS_SINK_SCHEMA)
+
+
+def fits_files(spark: SparkSession, path: str) -> DataFrame:
+    """The ``*.fits`` files under ``path`` as a binaryFile relation
+    (path, modificationTime, length, content); ``inputFiles()`` lists
+    them without reading any."""
+    return (spark.read.format("binaryFile")
+            .option("pathGlobFilter", "*.fits")
+            .load(path))
 
 
 def scan_fits_dir(spark: SparkSession, path: str,
@@ -172,9 +198,7 @@ def scan_fits_dir(spark: SparkSession, path: str,
     CSV at psf_phot.py:41) assigns grouping keys via a broadcast join on
     the basename; without it epoch_id = -1.
     """
-    raw = (spark.read.format("binaryFile")
-           .option("pathGlobFilter", "*.fits")
-           .load(path)
+    raw = (fits_files(spark, path)
            .select(F.element_at(F.split("path", "/"), -1).alias("filename"),
                    "content"))
 

@@ -216,8 +216,9 @@ def write_diagnostics_pdf(
     """Render the reference's diagnostics PDF from DataFrames.
 
     - ``images``: rows of schemas.IMAGE (epoch_id, filename, width,
-      height, pixels) — one heatmap page each, ZScale+sqrt normalized
-      with a labeled colorbar (p_io.py:65-72).
+      height, pixels) — one heatmap page each in (epoch_id, filename)
+      order, ZScale+sqrt normalized with a labeled colorbar
+      (p_io.py:65-72).
     - ``model``: the empirical PSF as a 2-D array → one page
       (p_io.py:73-79).
     - ``stars``: rows with ``star_cutout``, ``residual_cutout`` (flat
@@ -236,6 +237,7 @@ def write_diagnostics_pdf(
     if images is not None:
         rows = (images.select("epoch_id", "filename", "width", "height",
                               "pixels")
+                .orderBy("epoch_id", "filename")
                 .limit(max_pages).collect())
         for row in rows:
             pdf.new_page()

@@ -6,14 +6,16 @@
 - Partitioned parquet: the at-rest format for catalog/light-curve data
   at scale — partitioned by (band) so band-filtered reads prune whole
   directories (partition pruning shows as PartitionFilters in the scan).
-- Diagnostics TXT: the stats block (p_io.py:121-154) is an aggregation
-  query (queries/aggregates.py::q_diag_stats); writing it as text is a
-  one-line ``.write.text`` of the formatted rows, shown in tests.
+- Diagnostics TXT: the stats block (p_io.py:121-154), one line per
+  epoch rendered by ONE Spark expression (:func:`write_stats_txt`) over
+  per-epoch statistics, whether they come from an aggregation of the
+  step DataFrames (:func:`write_diagnostics_txt`) or straight from the
+  CLI's per-epoch records.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import LIGHTCURVE
@@ -42,6 +44,28 @@ def write_partitioned(df: DataFrame, path: str, *partition_cols: str) -> None:
     df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
+def write_stats_txt(stats: DataFrame, path: str) -> None:
+    """One TXT line per row of per-epoch raw statistics (epoch_id,
+    n_sources, n_psf, n_results, peak_min/max/med, flux_min/max/med,
+    mean_fwhm), written as text: numbers rounded to 4 places and
+    rendered by Spark's double-to-string cast (e.g. ``1.2E7``), absent
+    values empty."""
+    def num(c: str) -> Column:
+        return F.round(F.col(c), 4).cast("string")
+
+    line = F.concat_ws(
+        "", F.lit("epoch "), F.col("epoch_id").cast("string"),
+        F.lit(": sources="), F.col("n_sources").cast("string"),
+        F.lit(" psf_stars="), F.coalesce(F.col("n_psf"), F.lit(0)).cast("string"),
+        F.lit(" results="), F.coalesce(F.col("n_results"), F.lit(0)).cast("string"),
+        F.lit(" peak[min,max,med]=["), num("peak_min"),
+        F.lit(","), num("peak_max"), F.lit(","), num("peak_med"),
+        F.lit("] flux[min,max,med]=["), num("flux_min"),
+        F.lit(","), num("flux_max"), F.lit(","), num("flux_med"),
+        F.lit("] fwhm="), num("mean_fwhm"))
+    stats.select(line.alias("value")).write.mode("overwrite").text(path)
+
+
 def write_diagnostics_txt(
     detections: DataFrame,
     psf_stars: DataFrame,
@@ -50,41 +74,25 @@ def write_diagnostics_txt(
     path: str,
 ) -> None:
     """Per-epoch diagnostics TXT (reference p_io.py:121-154 ``write_txt``:
-    star counts, min/max/median of peaks and fitted fluxes, FWHM). The
-    stats are ONE relational aggregation over the three stages joined on
-    epoch_id — partial aggs map-side, one small shuffle — and the text
-    rendering is a formatted projection written with ``.write.text``;
-    the per-stage wall timers of the reference are Spark metrics (event
-    log / UI), not hand-rolled counters."""
+    star counts, min/max/median of peaks and fitted fluxes, FWHM), one
+    line per epoch with detections. The stats are ONE relational
+    aggregation over the stages joined on epoch_id — partial aggs
+    map-side, one small shuffle — rendered by :func:`write_stats_txt`."""
     det = detections.groupBy("epoch_id").agg(
         F.count(F.lit(1)).alias("n_sources"),
-        F.round(F.min("peak"), 4).alias("peak_min"),
-        F.round(F.max("peak"), 4).alias("peak_max"),
-        F.round(F.median("peak"), 4).alias("peak_med"))
+        F.min("peak").alias("peak_min"),
+        F.max("peak").alias("peak_max"),
+        F.median("peak").alias("peak_med"))
     psf = psf_stars.groupBy("epoch_id").agg(F.count(F.lit(1)).alias("n_psf"))
     phot = photometry.groupBy("epoch_id").agg(
         F.count(F.lit(1)).alias("n_results"),
-        F.round(F.min("flux_fit"), 4).alias("flux_min"),
-        F.round(F.max("flux_fit"), 4).alias("flux_max"),
-        F.round(F.median("flux_fit"), 4).alias("flux_med"))
-    fw = fwhm_table.groupBy("epoch_id").agg(
-        F.round(F.avg("fwhm"), 4).alias("mean_fwhm"))
-    stats = (det.join(psf, "epoch_id", "left")
-             .join(phot, "epoch_id", "left")
-             .join(fw, "epoch_id", "left"))
-    line = F.concat_ws(
-        "", F.lit("epoch "), F.col("epoch_id").cast("string"),
-        F.lit(": sources="), F.col("n_sources").cast("string"),
-        F.lit(" psf_stars="), F.coalesce(F.col("n_psf"), F.lit(0)).cast("string"),
-        F.lit(" results="), F.coalesce(F.col("n_results"), F.lit(0)).cast("string"),
-        F.lit(" peak[min,max,med]=["), F.col("peak_min").cast("string"),
-        F.lit(","), F.col("peak_max").cast("string"),
-        F.lit(","), F.col("peak_med").cast("string"),
-        F.lit("] flux[min,max,med]=["), F.col("flux_min").cast("string"),
-        F.lit(","), F.col("flux_max").cast("string"),
-        F.lit(","), F.col("flux_med").cast("string"),
-        F.lit("] fwhm="), F.col("mean_fwhm").cast("string"))
-    stats.select(line.alias("value")).write.mode("overwrite").text(path)
+        F.min("flux_fit").alias("flux_min"),
+        F.max("flux_fit").alias("flux_max"),
+        F.median("flux_fit").alias("flux_med"))
+    fw = fwhm_table.groupBy("epoch_id").agg(F.avg("fwhm").alias("mean_fwhm"))
+    write_stats_txt(det.join(psf, "epoch_id", "left")
+                    .join(phot, "epoch_id", "left")
+                    .join(fw, "epoch_id", "left"), path)
 
 
 def compact_parquet(spark: SparkSession, path: str,
