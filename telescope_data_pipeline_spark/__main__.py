@@ -11,19 +11,25 @@ Mirrors the reference lifecycle (psf_phot.py:9-98): manifest scan →
 FITS decode → FWHM → align+stack → detect → PSF-star mask → photometry
 → WCS solve → four sinks (CSV results, FITS stacked+WCS header, PDF
 diagnostics, TXT run statistics). The reference loops epochs
-sequentially in one process; here the whole chain of one epoch is one
-numpy kernel (``plans.pipeline.process_epoch``), run for all epochs in
-one grouped Spark job whose per-epoch records are cached once and feed
-all four sinks with no further shuffle or join. A corrupt FITS file is
-dropped by the scan's failure path instead of killing the run; the
-summary line names every epoch without catalog rows (with its outcome),
-the frames the run could not use, and a PDF cut at its page cap.
+sequentially in one process; here a pass is ONE Spark query: the FITS
+files, keyed by the manifest, are shuffled by epoch into one grouped
+kernel (``plans.pipeline.epoch_records``) that decodes each frame and
+runs the whole chain of its epoch in numpy; the same query renders each
+epoch's CSV rows and TXT line, and one Arrow collect brings back what
+the four sinks need. The driver then replaces ``csv/``, ``fits/``,
+``pdf/`` and ``txt/`` under ``--out`` and writes them, as the reference
+writes its four sinks per image set from one process
+(psf_phot.py:91-94). A corrupt FITS file is dropped by the decode's
+failure path instead of killing the run; the summary line names every
+epoch without catalog rows (with its outcome), the frames the run could
+not use, and a PDF cut at its page cap.
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import shutil
 
 
 def _summary(records: list, on_disk: set[str], n_fits: int, n_pages: int,
@@ -49,6 +55,27 @@ def _summary(records: list, on_disk: set[str], n_fits: int, n_pages: int,
     return "; ".join(parts)
 
 
+def _collect(records) -> list[dict]:
+    """The columns the sinks and the summary need, with each epoch's CSV
+    rows and TXT line rendered, in one Arrow collect; one dict per epoch
+    in epoch order, nulls as None, pixels as numpy arrays."""
+    from pyspark.sql import functions as F
+
+    from .sources.sinks import stats_line
+
+    table = records.select(
+        "epoch_id", "outcome", "n_frames", "n_results", "listed", "missing",
+        "width", "height", "pixels", "avg_airmass", "jd_mid", "base_header",
+        "crval_ra", "crval_dec", "pix_scale",
+        F.transform("photometry", lambda p: F.to_csv(p)).alias("csv"),
+        F.when(F.col("n_sources") > 0, stats_line()).alias("txt"),
+    ).toArrow()
+    rows = table.drop_columns(["pixels"]).to_pylist()
+    for row, px in zip(rows, table.column("pixels")):
+        row["pixels"] = px.values.to_numpy() if px.is_valid else None
+    return sorted(rows, key=lambda r: r["epoch_id"])
+
+
 def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser(prog="telescope_data_pipeline_spark",
                                 description=__doc__)
@@ -61,11 +88,11 @@ def main(argv: list[str] | None = None) -> None:
 
     from pyspark.sql import functions as F
 
-    from .plans.pipeline import epoch_records, pipeline_stages
+    from .plans.pipeline import EPOCH_SCHEMA, epoch_records
     from .session import get_spark
-    from .sources.fits import fits_files, scan_fits_dir, write_fits_rows
-    from .sources.pdf import write_diagnostics_pdf
-    from .sources.sinks import write_stats_txt
+    from .sources.fits import fits_files, write_fits_files
+    from .sources.pdf import diagnostics_pdf
+    from .sources.sinks import write_text_part
     from .sources.tables import ensure_read_confs
 
     spark = get_spark("telescope-pipeline")
@@ -73,40 +100,33 @@ def main(argv: list[str] | None = None) -> None:
 
     manifest = (spark.read.schema("filename string, epoch_id int")
                 .csv(args.manifest))
-    images = scan_fits_dir(spark, args.images, manifest)
-    # One cached record per epoch feeds every sink; unpersisting it at the
-    # end keeps a later run in this session from reading these frames.
-    records = epoch_records(images, size=args.size, manifest=manifest).cache()
-    try:
-        for d in ("csv", "fits", "pdf", "txt"):
-            os.makedirs(os.path.join(args.out, d), exist_ok=True)
-        stacked = records.filter(F.col("pixels").isNotNull())
+    files = fits_files(spark, args.images)
+    records = _collect(epoch_records(files.join(F.broadcast(manifest), "filename"),
+                                     size=args.size, manifest=manifest))
+    stacked = [r for r in records if r["pixels"] is not None]
 
-        # 1. CSV results, one directory per epoch (reference
-        # p_io.py:103-119); an epoch's rows sit in one partition, so each
-        # directory gets one file.
-        (pipeline_stages(records)["photometry"].write.mode("overwrite")
-         .option("header", True)
-         .partitionBy("epoch_id").csv(os.path.join(args.out, "csv")))
-        # 2. FITS stacked image + WCS-merged header (p_io.py:19-62)
-        n_fits = write_fits_rows(stacked, os.path.join(args.out, "fits")).count()
-        # 3. PDF diagnostics (p_io.py:63-101) — one heatmap per stacked epoch
-        n_pages = write_diagnostics_pdf(
-            os.path.join(args.out, "pdf", "diagnostics.pdf"),
-            images=stacked.withColumn(
-                "filename", F.concat(F.lit("stacked_e"),
-                                     F.col("epoch_id").cast("string"))))
-        # 4. TXT run statistics (p_io.py:121-154), epochs with detections
-        write_stats_txt(records.filter(F.col("n_sources") > 0),
-                        os.path.join(args.out, "txt", "stats.txt"))
+    # replace, not add to, a previous run's sinks: no stale epoch survives
+    for d in ("csv", "fits", "pdf", "txt"):
+        shutil.rmtree(os.path.join(args.out, d), ignore_errors=True)
+        os.makedirs(os.path.join(args.out, d))
+    # 1. CSV results, one directory per epoch with rows (p_io.py:103-119)
+    header = ",".join(EPOCH_SCHEMA["photometry"].dataType.elementType.names)
+    for r in records:
+        if r["csv"]:
+            write_text_part(os.path.join(args.out, "csv", f"epoch_id={r['epoch_id']}"),
+                            [header, *r["csv"]], ".csv")
+    # 2. FITS stacked image + WCS-merged header (p_io.py:19-62)
+    n_fits = len(write_fits_files(stacked, os.path.join(args.out, "fits")))
+    # 3. PDF diagnostics (p_io.py:63-101) — one heatmap per stacked epoch
+    pdf, n_pages = diagnostics_pdf(
+        [{**r, "filename": f"stacked_e{r['epoch_id']}"} for r in stacked])
+    pdf.write(os.path.join(args.out, "pdf", "diagnostics.pdf"))
+    # 4. TXT run statistics (p_io.py:121-154), epochs with detections
+    write_text_part(os.path.join(args.out, "txt", "stats.txt"),
+                    [r["txt"] for r in records if r["txt"] is not None], ".txt")
 
-        summary = records.select("epoch_id", "outcome", "n_frames",
-                                 "n_results", "listed", "missing").collect()
-    finally:
-        records.unpersist()
-    on_disk = {f.rsplit("/", 1)[-1]
-               for f in fits_files(spark, args.images).inputFiles()}
-    print(_summary(summary, on_disk, n_fits, n_pages, args.out))
+    on_disk = {f.rsplit("/", 1)[-1] for f in files.inputFiles()}
+    print(_summary(records, on_disk, n_fits, n_pages, args.out))
 
 
 if __name__ == "__main__":

@@ -16,6 +16,7 @@ packing reuse it instead of leaking — round-3 ADVICE items).
 from __future__ import annotations
 
 import logging
+import threading
 
 from pyspark.sql import DataFrame
 
@@ -59,6 +60,7 @@ class CacheSlot:
 
     def __init__(self) -> None:
         self._last: DataFrame | None = None
+        self._lock = threading.Lock()
 
     @classmethod
     def _probe(cls, df: DataFrame) -> bool:
@@ -87,9 +89,10 @@ class CacheSlot:
             return True
 
     def own(self, df: DataFrame) -> DataFrame:
-        prev = self._last
-        df = df.cache()
-        if prev is not None and not self._same_plan(prev, df):
-            prev.unpersist(blocking=False)
-        self._last = df
+        with self._lock:  # concurrent owners evict each superseded DF once
+            prev = self._last
+            df = df.cache()
+            if prev is not None and not self._same_plan(prev, df):
+                prev.unpersist(blocking=False)
+            self._last = df
         return df

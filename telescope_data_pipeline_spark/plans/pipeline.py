@@ -1,21 +1,24 @@
 """The end-to-end photometry pipeline: one numpy kernel per epoch.
 
 Reference lifecycle (psf_phot.py:9-98, traced in SURVEY.md §3.1):
-manifest scan → per-epoch loop → FWHM → align+stack → detect → mask →
-photometry → WCS → sinks. An image set never needs to be split across
-executors (SURVEY.md §1 D1) and holds a few frames and a few dozen
-stars, so the whole chain for one epoch is ONE numpy function,
+manifest scan → per-epoch loop → decode → FWHM → align+stack → detect →
+mask → photometry → WCS → sinks. An image set never needs to be split
+across executors (SURVEY.md §1 D1) and holds a few frames and a few
+dozen stars, so the whole chain for one epoch is ONE numpy function,
 :func:`process_epoch`, and :func:`epoch_records` runs it in a single
-``groupBy("epoch_id").applyInPandas`` over the decoded frames: one
-shuffle of frames, then one task per group of epochs. The reference's
-sequential per-epoch loop becomes task parallelism across epochs,
-without the fixed cost of a Spark stage per step.
+``groupBy("epoch_id").applyInPandas``: one shuffle of frames (decoded
+IMAGE rows, or the raw file bytes, which the kernel decodes), then one
+task per group of epochs. The reference's sequential per-epoch loop
+becomes task parallelism across epochs, without the fixed cost of a
+Spark stage per step.
 
 Each epoch yields one record (EPOCH_SCHEMA): the stacked pixels, the
 rows of every step, the TXT statistics, the FITS header inputs, the WCS
 solution and a named outcome. The sinks and :func:`pipeline_stages`
-(the per-step DataFrames) are projections of that record, so caching it
-once serves them all with no further shuffle or join.
+(the per-step DataFrames) are projections of that record: the CLI
+collects the columns its four sinks need in one action, and
+:func:`run_photometry_pipeline` caches the records once for the seven
+step DataFrames.
 
 Failure-path semantics: the reference's branchy per-set fallbacks
 (psf_phot.py:53-98) become the record's outcome — ``ok``, ``no_frames``
@@ -27,7 +30,7 @@ job and never goes missing silently.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -55,7 +58,7 @@ from ..operators.photometry import (
     fit_psf_photometry,
     psf_star_mask,
 )
-from ..sources.fits import mid_exposure_jd
+from ..sources.fits import image_row, mid_exposure_jd
 
 MEAN_FWHM = 4.5   # fallback FWHM for epochs with no measurement; photometry's grouping width
 PSF_BORDER = 16   # PSF stars sit at least this far inside the --size frame
@@ -101,7 +104,7 @@ EPOCH_SCHEMA = T.StructType([
                   _rows(DETECT_SCHEMA, "epoch_id", "filename"), True),
     T.StructField("psf_stars", _rows(PSF_STAR_SCHEMA, "epoch_id", "filename"), True),
     T.StructField("photometry", _rows(PHOT_SCHEMA, "epoch_id"), True),
-    # TXT statistics (sources.sinks.write_stats_txt rounds them)
+    # TXT statistics (sources.sinks.stats_line renders them)
     T.StructField("n_sources", T.IntegerType(), True),
     T.StructField("n_psf", T.IntegerType(), True),
     T.StructField("n_results", T.IntegerType(), True),
@@ -213,19 +216,39 @@ def process_epoch(
     return rec
 
 
+def _frame(row: Mapping) -> Frame:
+    """A schemas.IMAGE row (a dict or a pandas row) as a :class:`Frame`."""
+    date_obs, exptime = row["date_obs"], row["exptime"]
+    jd_mid = (None if pd.isna(date_obs) or pd.isna(exptime)
+              else mid_exposure_jd(pd.Timestamp(date_obs).value // 10**9,
+                                   float(exptime)))
+    return Frame(row["filename"], frame_of(row), row["band"],
+                 None if pd.isna(row["airmass"]) else float(row["airmass"]),
+                 jd_mid, dict(row["header"] or {}))
+
+
 def epoch_records(images: DataFrame, size: int = 128,
                   manifest: DataFrame | None = None) -> DataFrame:
-    """images (schemas.IMAGE) → one EPOCH_SCHEMA record per epoch, from
+    """Frames → one EPOCH_SCHEMA record per epoch, from
     :func:`process_epoch` in one grouped kernel.
+
+    ``images`` holds either decoded frames (schemas.IMAGE rows, e.g.
+    from ``sources.fits.scan_fits_dir``) or undecoded files: (epoch_id,
+    filename, content) rows, e.g. ``sources.fits.fits_files`` joined to
+    the manifest. Files are decoded inside the kernel by
+    ``sources.fits.image_row``, so their bytes cross into Python once;
+    a file that does not decode is left out like a missing one.
 
     ``manifest`` (filename, epoch_id) adds a record for every listed
     epoch, also those with no decodable frame (outcome ``no_frames``),
     and fills ``listed``/``missing``. Frames with no epoch (no manifest
     row) are left out. The result is lazy; cache it when more than one
     output reads it."""
-    frames = images.filter(F.col("epoch_id").isNotNull()).select(
-        "epoch_id", "filename", "band", "width", "height", "pixels",
-        "airmass", mid_exposure_jd().alias("jd_mid"), "header")
+    payload = "content" if "content" in images.columns else "pixels"
+    columns = (["epoch_id", "filename", "content"] if payload == "content" else
+               ["epoch_id", "filename", "band", "width", "height", "pixels",
+                "airmass", "date_obs", "exptime", "header"])
+    frames = images.filter(F.col("epoch_id").isNotNull()).select(*columns)
     if manifest is not None:
         frames = frames.unionByName(
             manifest.filter(F.col("epoch_id").isNotNull())
@@ -233,14 +256,13 @@ def epoch_records(images: DataFrame, size: int = 128,
             allowMissingColumns=True)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        decoded = pdf["pixels"].notna()
-        frames = [Frame(r["filename"], frame_of(r), r["band"],
-                        None if pd.isna(r["airmass"]) else float(r["airmass"]),
-                        None if pd.isna(r["jd_mid"]) else float(r["jd_mid"]),
-                        dict(r["header"] or {}))
-                  for _, r in pdf[decoded].iterrows()]
-        rec = process_epoch(int(pdf["epoch_id"].iloc[0]), frames, size,
-                            listed=pdf.loc[~decoded, "filename"].tolist())
+        has_frame = pdf[payload].notna()
+        rows = pdf[has_frame].to_dict("records")
+        if payload == "content":
+            rows = [image_row(r["filename"], r["content"]) for r in rows]
+        rec = process_epoch(int(pdf["epoch_id"].iloc[0]),
+                            [_frame(r) for r in rows if r is not None], size,
+                            listed=pdf.loc[~has_frame, "filename"].tolist())
         return pd.DataFrame([[rec.get(c) for c in EPOCH_SCHEMA.names]],
                             columns=EPOCH_SCHEMA.names)
 

@@ -161,8 +161,9 @@ def q_pipeline_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pipeline_photometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end photometry chain (reference psf_phot.py:9-98): FWHM ->
     detect -> NN-match shifts -> sigma-clipped median stack -> PSF-star
-    mask -> empirical-PSF photometry, all as one lazy Catalyst plan with
-    per-epoch task parallelism."""
+    mask -> empirical-PSF photometry, one numpy kernel per epoch run in
+    one grouped ``applyInPandas`` (plans.pipeline.epoch_records), epochs
+    in parallel as tasks; the catalog rows are its photometry column."""
     from ..operators.images import make_synthetic_images
     from ..plans.pipeline import run_photometry_pipeline
 
@@ -244,10 +245,11 @@ def q_scan_fits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("q_wcs_solve", oracle=None)  # external-service UDF: rows-only check
 def q_wcs_solve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Astrometric solve (reference core.py:486-529): relational top-30
-    brightest selection -> per-epoch external-service kernel with
-    bounded retry/backoff -> solved/failed status rows (failure never
-    kills the job). Deterministic fake transport in this container."""
+    """Astrometric solve (reference core.py:486-529): one grouped kernel
+    per epoch takes its top-30 brightest detections and calls the
+    external service with bounded retry/backoff -> solved/failed status
+    rows (failure never kills the job). Deterministic fake transport in
+    this container."""
     from pyspark.sql import functions as F
 
     from ..operators.external import pixel_to_sky, solve_wcs

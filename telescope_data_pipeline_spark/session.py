@@ -8,6 +8,7 @@ deployment would use — AQE, Arrow, and UTC semantics are identical.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -15,6 +16,8 @@ from pyspark.sql import SparkSession
 #: this is overridden (or left to AQE coalescing) — AQE is enabled so the
 #: initial number only caps parallelism, it does not fix it.
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+_STOCK_FLOOR_LOCK = threading.Lock()
 
 
 def get_spark(app_name: str = "telescope_data_pipeline_spark",
@@ -108,11 +111,12 @@ def stock_coalesce_floor(spark: SparkSession) -> SparkSession:
     cache manager, so CacheSlot pins and ``clearCache`` behave
     identically.
     """
-    child = getattr(spark, "_tdp_stock_floor_session", None)
-    if child is None:
-        child = spark.newSession()
-        child.conf.set(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_AQE_STOCK_FLOOR", "1MB"))
-        spark._tdp_stock_floor_session = child
+    with _STOCK_FLOOR_LOCK:  # one child per session, also under threads
+        child = getattr(spark, "_tdp_stock_floor_session", None)
+        if child is None:
+            child = spark.newSession()
+            child.conf.set(
+                "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+                os.environ.get("SPARK_GRAFT_AQE_STOCK_FLOOR", "1MB"))
+            spark._tdp_stock_floor_session = child
     return child

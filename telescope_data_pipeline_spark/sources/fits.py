@@ -1,27 +1,35 @@
-"""FITS image source: binary-file scan + Arrow-batched decode.
+"""FITS image source and sink.
 
 Reference: ``import_images`` (core.py:18-50) opens each FITS file with
-astropy and pulls HDU-1 pixels + header. Spark-first form: a
-``binaryFile`` scan (path/length/bytes rows, splittable listing,
-predicate pushdown on path/modificationTime) followed by a
-``mapInPandas`` decode into schemas.IMAGE.
+astropy and pulls HDU-1 pixels + header. Here one pure function,
+:func:`image_row`, decodes one file's bytes into a schemas.IMAGE row;
+every path that decodes calls it: :func:`scan_fits_dir` (a
+``binaryFile`` scan, then a ``mapInPandas`` decode into IMAGE rows), the
+CLI's per-epoch kernel (``plans.pipeline.epoch_records``, which decodes
+the ``binaryFile`` rows of one epoch inside its grouped kernel) and the
+``fits`` Python data source.
 
 ``_decode_fits`` dispatches to astropy when installed (real FITS
 files), falling back to the minimal header-card + big-endian float
 container written by ``write_fake_fits`` below — astropy is absent in
 the dev container, so tests exercise the fake path; the scan→decode→
 IMAGE plumbing is identical either way.
+
+The sink side writes one stacked file per epoch with a WCS-merged
+header (:func:`fits_headers`, :func:`write_fits_files`), from driver
+rows or, through :func:`write_fits_rows`, from a DataFrame.
 """
 
 from __future__ import annotations
 
 import io
+import os
 import struct
-from collections.abc import Iterator
+from collections.abc import Iterator, Mapping, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import IMAGE
@@ -79,17 +87,43 @@ def _decode_fits(content: bytes) -> tuple[np.ndarray, dict[str, str]]:
     return pixels, header
 
 
+def image_row(filename: str, content: bytes) -> dict | None:
+    """One FITS file's bytes → a schemas.IMAGE row as a dict (epoch_id
+    -1: the manifest assigns it), or None when the file does not decode.
+
+    Failure-path rule (SURVEY.md §7 #6): an undecodable file, or one
+    whose AIRMASS/EXPTIME/DATE-OBS value does not parse, is dropped,
+    never fatal — at 100 TB one corrupt object must not kill the job.
+    (Production: route it to a quarantine sink instead of dropping.)
+    """
+    try:
+        px, hdr = _decode_fits(bytes(content))
+        return {
+            "filename": filename, "epoch_id": -1,
+            "band": hdr.get("FILTER"),
+            "width": px.shape[1], "height": px.shape[0],
+            "pixels": px.astype(np.float32).ravel(),
+            "airmass": float(hdr["AIRMASS"]) if "AIRMASS" in hdr else None,
+            "date_obs": pd.to_datetime(hdr.get("DATE-OBS")),
+            "exptime": float(hdr["EXPTIME"]) if "EXPTIME" in hdr else None,
+            "site_id": hdr.get("SITEID"),
+            "header": hdr,
+        }
+    except (ValueError, TypeError, struct.error):
+        return None
+
+
+def mid_exposure_jd(unix_s, exptime):
+    """Mid-exposure Julian date: unix epoch -> JD offset, + exptime/2 in
+    days (reference p_io.py:48-56). Takes floats or Columns, so the
+    Spark expression and the kernels' Python share one formula."""
+    return unix_s / 86400.0 + 2440587.5 + exptime / 2.0 / 86400.0
+
+
 FITS_SINK_SCHEMA = (
     "epoch_id int, path string, n_bytes long, n_cards int, "
     "avg_airmass double, bjd double"
 )
-
-
-def mid_exposure_jd() -> Column:
-    """Mid-exposure Julian date of an IMAGE row: unix epoch -> JD
-    offset, + exptime/2 in days (reference p_io.py:48-56)."""
-    return (F.unix_timestamp("date_obs") / 86400.0 + 2440587.5
-            + F.col("exptime") / 2.0 / 86400.0)
 
 
 def write_stacked_fits(
@@ -102,14 +136,7 @@ def write_stacked_fits(
 ) -> DataFrame:
     """FITS sink with WCS-merged header (reference p_io.py:19-62
     ``write_fits``): one file per epoch holding the stacked pixels and a
-    header assembled as
-
-    - base: the header of the epoch's first image (reference
-      ``im_headers[0]``);
-    - overlay: every WCS key EXCEPT HISTORY/COMMENT (p_io.py:40-42);
-    - AIRMASS: mean over the epoch's images (p_io.py:43-47);
-    - BJD: barycentric correction of the mean mid-exposure JD
-      (p_io.py:48-56, via :func:`..operators.external._approx_bjd`).
+    header merged as :func:`fits_headers` describes.
 
     The per-epoch header inputs (mean airmass, mean mid-exposure JD,
     first header) are a relational aggregation joined to the stack and
@@ -119,7 +146,8 @@ def write_stacked_fits(
     """
     hdr = images.groupBy("epoch_id").agg(
         F.avg("airmass").alias("avg_airmass"),
-        F.avg(mid_exposure_jd()).alias("jd_mid"),
+        F.avg(mid_exposure_jd(F.unix_timestamp("date_obs"), F.col("exptime")))
+        .alias("jd_mid"),
         F.min_by("header", "filename").alias("base_header"),
     )
     rows = (stacked.select("epoch_id", "width", "height", "pixels")
@@ -131,50 +159,78 @@ def write_stacked_fits(
     return write_fits_rows(rows, out_dir, target_ra, target_dec)
 
 
-def write_fits_rows(rows: DataFrame, out_dir: str, target_ra: float = 150.0,
-                    target_dec: float = 2.0) -> DataFrame:
-    """Write one FITS file per row of (epoch_id, width, height, pixels,
-    avg_airmass, jd_mid, base_header, crval_ra, crval_dec, pix_scale),
-    the header merged as :func:`write_stacked_fits` describes (no WCS
-    keys where ``crval_ra`` is null). An Arrow kernel over epochs, so
-    the sink parallelizes across epochs and the Python crossing is
-    negligible. Returns the lazy manifest of written files
-    (FITS_SINK_SCHEMA)."""
-    import os
+def _float(v) -> float:
+    """A nullable number as a float, None and NaN as NaN."""
+    return float("nan") if v is None else float(v)
 
+
+def fits_headers(rows: Sequence[Mapping], target_ra: float = 150.0,
+                 target_dec: float = 2.0) -> list[dict[str, str]]:
+    """The merged FITS header of each row of (avg_airmass, jd_mid,
+    base_header, crval_ra, crval_dec, pix_scale):
+
+    - base: the header of the epoch's first image (reference
+      ``im_headers[0]``);
+    - overlay: every WCS key EXCEPT HISTORY/COMMENT (p_io.py:40-42), none
+      where ``crval_ra`` is null (the solve failed);
+    - AIRMASS: mean over the epoch's images (p_io.py:43-47);
+    - BJD: barycentric correction of the mean mid-exposure JD
+      (p_io.py:48-56, via :func:`..operators.external._approx_bjd`).
+    """
     from ..operators.external import _approx_bjd
 
+    bjd = _approx_bjd(np.array([_float(r["jd_mid"]) for r in rows], np.float64),
+                      np.full(len(rows), target_ra), np.full(len(rows), target_dec))
+    headers = []
+    for r, r_bjd in zip(rows, bjd):
+        wcs_cards = {}
+        if not pd.isna(r["crval_ra"]):
+            # a real solver returns a full header; HISTORY/COMMENT are
+            # dropped here exactly as p_io.py:40-42 does
+            wcs_cards = {"CRVAL1": r["crval_ra"], "CRVAL2": r["crval_dec"],
+                         "CDELT1": r["pix_scale"], "CDELT2": r["pix_scale"],
+                         "HISTORY": "solved", "COMMENT": "solved"}
+        merged = dict(r["base_header"] or {})
+        merged.update({k: str(v) for k, v in wcs_cards.items()
+                       if k not in ("HISTORY", "COMMENT")})
+        merged["AIRMASS"] = str(_float(r["avg_airmass"]))
+        merged["BJD"] = str(r_bjd)
+        headers.append(merged)
+    return headers
+
+
+def write_fits_files(rows: Sequence[Mapping], out_dir: str,
+                     target_ra: float = 150.0, target_dec: float = 2.0) -> list[dict]:
+    """Write ``stacked_e<epoch_id>.fits`` under ``out_dir`` for each row
+    of (epoch_id, width, height, pixels) plus the :func:`fits_headers`
+    inputs; returns one FITS_SINK_SCHEMA dict per file."""
+    out = []
+    for r, header in zip(rows, fits_headers(rows, target_ra, target_dec)):
+        px = np.asarray(r["pixels"], dtype=np.float32).reshape(
+            int(r["height"]), int(r["width"]))
+        path = os.path.join(out_dir, f"stacked_e{int(r['epoch_id'])}.fits")
+        write_fake_fits(path, px, header)
+        out.append({"epoch_id": int(r["epoch_id"]), "path": path,
+                    "n_bytes": os.path.getsize(path), "n_cards": len(header),
+                    "avg_airmass": float(header["AIRMASS"]),
+                    "bjd": float(header["BJD"])})
+    return out
+
+
+def write_fits_rows(rows: DataFrame, out_dir: str, target_ra: float = 150.0,
+                    target_dec: float = 2.0) -> DataFrame:
+    """:func:`write_fits_files` as an Arrow kernel over a DataFrame of
+    (epoch_id, width, height, pixels, avg_airmass, jd_mid, base_header,
+    crval_ra, crval_dec, pix_scale) rows, so the sink parallelizes across
+    epochs. Returns the lazy manifest of written files
+    (FITS_SINK_SCHEMA)."""
     def write_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            bjd = _approx_bjd(pdf["jd_mid"].to_numpy(np.float64),
-                              np.full(len(pdf), target_ra),
-                              np.full(len(pdf), target_dec))
-            out = []
-            for r, r_bjd in zip(pdf.itertuples(index=False), bjd):
-                wcs_cards = {}
-                if r.crval_ra is not None and not pd.isna(r.crval_ra):
-                    # a real solver returns a full header; HISTORY/COMMENT
-                    # are dropped here exactly as p_io.py:40-42 does
-                    wcs_cards = {"CRVAL1": r.crval_ra, "CRVAL2": r.crval_dec,
-                                 "CDELT1": r.pix_scale, "CDELT2": r.pix_scale,
-                                 "HISTORY": "solved", "COMMENT": "solved"}
-                merged = dict(r.base_header or {})
-                merged.update({k: str(v) for k, v in wcs_cards.items()
-                               if k not in ("HISTORY", "COMMENT")})
-                merged["AIRMASS"] = str(r.avg_airmass)
-                merged["BJD"] = str(r_bjd)
-                px = np.asarray(r.pixels, dtype=np.float32) \
-                    .reshape(int(r.height), int(r.width))
-                path = os.path.join(out_dir, f"stacked_e{int(r.epoch_id)}.fits")
-                write_fake_fits(path, px, merged)
-                out.append({"epoch_id": int(r.epoch_id), "path": path,
-                            "n_bytes": os.path.getsize(path),
-                            "n_cards": len(merged),
-                            "avg_airmass": float(r.avg_airmass),
-                            "bjd": float(r_bjd)})
             yield pd.DataFrame(
-                out, columns=["epoch_id", "path", "n_bytes", "n_cards",
-                              "avg_airmass", "bjd"])
+                write_fits_files(pdf.to_dict("records"), out_dir, target_ra,
+                                 target_dec),
+                columns=["epoch_id", "path", "n_bytes", "n_cards",
+                         "avg_airmass", "bjd"])
 
     return rows.select("epoch_id", "width", "height", "pixels", "avg_airmass",
                        "jd_mid", "base_header", "crval_ra", "crval_dec",
@@ -182,52 +238,33 @@ def write_fits_rows(rows: DataFrame, out_dir: str, target_ra: float = 150.0,
 
 
 def fits_files(spark: SparkSession, path: str) -> DataFrame:
-    """The ``*.fits`` files under ``path`` as a binaryFile relation
-    (path, modificationTime, length, content); ``inputFiles()`` lists
+    """The ``*.fits`` files under ``path`` as (filename, content) rows of
+    a binaryFile scan, ``filename`` the basename; ``inputFiles()`` lists
     them without reading any."""
     return (spark.read.format("binaryFile")
             .option("pathGlobFilter", "*.fits")
-            .load(path))
+            .load(path)
+            .select(F.element_at(F.split("path", "/"), -1).alias("filename"),
+                    "content"))
 
 
 def scan_fits_dir(spark: SparkSession, path: str,
                   manifest: DataFrame | None = None) -> DataFrame:
-    """binaryFile scan → decode → schemas.IMAGE rows.
+    """binaryFile scan → :func:`image_row` decode → schemas.IMAGE rows.
 
     ``manifest`` (schemas.MANIFEST: filename → epoch_id, the reference's
     CSV at psf_phot.py:41) assigns grouping keys via a broadcast join on
-    the basename; without it epoch_id = -1.
+    the basename; without it epoch_id = -1. Files that do not decode are
+    dropped.
     """
-    raw = (fits_files(spark, path)
-           .select(F.element_at(F.split("path", "/"), -1).alias("filename"),
-                   "content"))
-
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for fname, content in zip(pdf["filename"], pdf["content"]):
-                try:
-                    px, hdr = _decode_fits(bytes(content))
-                except (ValueError, struct.error):
-                    # Failure-path rule (SURVEY.md §7 #6): an undecodable
-                    # file is dropped, never fatal — at 100 TB one corrupt
-                    # object must not kill the job. (Production: route to
-                    # a quarantine sink instead of dropping.)
-                    continue
-                rows.append({
-                    "filename": fname, "epoch_id": -1,
-                    "band": hdr.get("FILTER"),
-                    "width": px.shape[1], "height": px.shape[0],
-                    "pixels": px.astype(np.float32).ravel(),
-                    "airmass": float(hdr["AIRMASS"]) if "AIRMASS" in hdr else None,
-                    "date_obs": pd.to_datetime(hdr.get("DATE-OBS")),
-                    "exptime": float(hdr["EXPTIME"]) if "EXPTIME" in hdr else None,
-                    "site_id": hdr.get("SITEID"),
-                    "header": hdr,
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGE.fields])
+            rows = [image_row(name, content)
+                    for name, content in zip(pdf["filename"], pdf["content"])]
+            yield pd.DataFrame([r for r in rows if r is not None],
+                               columns=[f.name for f in IMAGE.fields])
 
-    decoded = raw.mapInPandas(decode, schema=IMAGE)
+    decoded = fits_files(spark, path).mapInPandas(decode, schema=IMAGE)
     if manifest is not None:
         decoded = (decoded.drop("epoch_id")
                    .join(F.broadcast(manifest), on="filename", how="left")

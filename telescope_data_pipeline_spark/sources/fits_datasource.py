@@ -35,7 +35,6 @@ Failure-path rule (SURVEY.md §7 #6): an undecodable file is dropped
 from __future__ import annotations
 
 import os
-import struct
 from collections.abc import Iterator, Sequence
 
 from pyspark.sql.datasource import (
@@ -59,35 +58,22 @@ def _list_fits(path: str) -> list[str]:
 
 
 def _decode_file(path: str, filename: str):
-    """One schemas.IMAGE row tuple, or None for an undecodable file."""
-    import numpy as np
-    import pandas as pd
+    """One schemas.IMAGE row tuple, decoded by ``fits.image_row``, or
+    None for an unreadable or undecodable file."""
+    from .fits import image_row
 
-    from .fits import _decode_fits
-
-    # header-value coercion sits INSIDE the try: a decodable file with a
-    # malformed AIRMASS/EXPTIME/DATE-OBS value is dropped like any other
-    # undecodable file, never fatal (round-11 ADVICE item 2)
     try:
         with open(os.path.join(path, filename), "rb") as f:
-            px, hdr = _decode_fits(f.read())
-        date_obs = hdr.get("DATE-OBS")
-        return (
-            filename,
-            -1,  # epoch_id: assigned by the manifest join downstream
-            hdr.get("FILTER"),
-            int(px.shape[1]),
-            int(px.shape[0]),
-            [float(v) for v in np.asarray(px, dtype=np.float32).ravel()],
-            float(hdr["AIRMASS"]) if "AIRMASS" in hdr else None,
-            (pd.to_datetime(date_obs).to_pydatetime()
-             if date_obs is not None else None),
-            float(hdr["EXPTIME"]) if "EXPTIME" in hdr else None,
-            hdr.get("SITEID"),
-            hdr,
-        )
-    except (ValueError, TypeError, struct.error, OSError):
+            row = image_row(filename, f.read())
+    except OSError:
         return None
+    if row is None:
+        return None
+    date_obs = row["date_obs"]
+    row.update(width=int(row["width"]), height=int(row["height"]),
+               pixels=[float(v) for v in row["pixels"]],
+               date_obs=None if date_obs is None else date_obs.to_pydatetime())
+    return tuple(row[f] for f in IMAGE.names)
 
 
 class _FitsBatchReader(DataSourceReader):

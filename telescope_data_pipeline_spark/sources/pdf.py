@@ -16,23 +16,27 @@ the only codec needed, Flate, is stdlib ``zlib``:
 - text uses the built-in Helvetica base-14 font (no font embedding);
 - the colorbar is a 1×256 gradient XObject stretched to a strip.
 
-Spark's role mirrors the other sinks: everything per-pixel that can be
-computed in the cluster (normalization percentiles, residual RMS) stays
-in DataFrame land, and only the bounded render payload is collected —
-``max_pages`` caps driver memory explicitly. The streaming form
-(``pdf_sink``) is a ``foreachBatch`` callback, completing the reference's
-four-sink pattern (CSV / FITS / TXT / PDF, psf_phot.py:91-94).
+The pages are rendered by a pure function over rows,
+:func:`diagnostics_pdf`; :func:`write_diagnostics_pdf` is its DataFrame
+adapter, which collects at most ``max_pages`` image rows (and
+``max_pages * cutouts_per_page`` cutout rows) to the driver. The CLI
+hands :func:`diagnostics_pdf` the stacked rows it has already collected
+for every sink, so there the cap bounds the pages, not driver memory.
+The streaming form (``pdf_sink``) is a ``foreachBatch`` callback,
+completing the reference's four-sink pattern (CSV / FITS / TXT / PDF,
+psf_phot.py:91-94).
 """
 
 from __future__ import annotations
 
 import zlib
-from typing import Sequence
+from collections.abc import Mapping, Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame
 
-__all__ = ["MiniPdf", "zscale_stretch", "write_diagnostics_pdf", "pdf_sink"]
+__all__ = ["MiniPdf", "zscale_stretch", "diagnostics_pdf", "write_diagnostics_pdf",
+           "pdf_sink"]
 
 
 # --------------------------------------------------------------------------
@@ -205,53 +209,45 @@ def _to_2d(row) -> np.ndarray:
         int(row["height"]), int(row["width"]))
 
 
-def write_diagnostics_pdf(
-    path: str,
-    images: DataFrame | None = None,
+def diagnostics_pdf(
+    images: Sequence[Mapping] = (),
     model: np.ndarray | None = None,
-    stars: DataFrame | None = None,
+    stars: Sequence[Mapping] = (),
     max_pages: int = 32,
     cutouts_per_page: int = 8,
-) -> int:
-    """Render the reference's diagnostics PDF from DataFrames.
+) -> tuple[MiniPdf, int]:
+    """Render the reference's diagnostics PDF from rows; returns the
+    document and its number of pages.
 
-    - ``images``: rows of schemas.IMAGE (epoch_id, filename, width,
-      height, pixels) — one heatmap page each in (epoch_id, filename)
-      order, ZScale+sqrt normalized with a labeled colorbar
+    - ``images``: rows of (epoch_id, filename, width, height, pixels) —
+      one heatmap page each for the first ``max_pages`` in (epoch_id,
+      filename) order, ZScale+sqrt normalized with a labeled colorbar
       (p_io.py:65-72).
     - ``model``: the empirical PSF as a 2-D array → one page
       (p_io.py:73-79).
     - ``stars``: rows with ``star_cutout``, ``residual_cutout`` (flat
-      float arrays), ``cut_w``, ``cut_h``, ``flux`` — rendered as
-      star/residual pairs, brightest first (p_io.py:80-99).
-
-    ``max_pages`` bounds the driver-side collect explicitly — this sink,
-    like the reference's, is a per-image-set diagnostic, not a table
-    export; exports of unbounded data go through the parquet/CSV sinks.
-    Returns the number of pages written.
+      float arrays), ``cut_w``, ``cut_h``, ``flux`` — the first
+      ``max_pages * cutouts_per_page`` rendered as star/residual pairs,
+      in the order given (brightest first, p_io.py:80-99).
     """
     pdf = MiniPdf()
     n_pages = 0
     margin = 54.0
 
-    if images is not None:
-        rows = (images.select("epoch_id", "filename", "width", "height",
-                              "pixels")
-                .orderBy("epoch_id", "filename")
-                .limit(max_pages).collect())
-        for row in rows:
-            pdf.new_page()
-            img = _to_2d(row)
-            u8, vmin, vmax = zscale_stretch(img)
-            side = min(_PAGE_W - 2 * margin - 60, _PAGE_H - 2 * margin - 40)
-            x0, y0 = margin, _PAGE_H - margin - 24 - side
-            pdf.text(margin, _PAGE_H - margin,
-                     f"epoch {row['epoch_id']}  {row['filename']}  "
-                     f"{img.shape[1]}x{img.shape[0]}", size=12)
-            pdf.image(u8, x0, y0, side, side)
-            pdf.rect(x0, y0, side, side)
-            pdf.colorbar(x0 + side + 12, y0, 14, side, vmin, vmax)
-            n_pages += 1
+    rows = sorted(images, key=lambda r: (r["epoch_id"], r["filename"]))
+    for row in rows[:max_pages]:
+        pdf.new_page()
+        img = _to_2d(row)
+        u8, vmin, vmax = zscale_stretch(img)
+        side = min(_PAGE_W - 2 * margin - 60, _PAGE_H - 2 * margin - 40)
+        x0, y0 = margin, _PAGE_H - margin - 24 - side
+        pdf.text(margin, _PAGE_H - margin,
+                 f"epoch {row['epoch_id']}  {row['filename']}  "
+                 f"{img.shape[1]}x{img.shape[0]}", size=12)
+        pdf.image(u8, x0, y0, side, side)
+        pdf.rect(x0, y0, side, side)
+        pdf.colorbar(x0 + side + 12, y0, 14, side, vmin, vmax)
+        n_pages += 1
 
     if model is not None:
         pdf.new_page()
@@ -264,34 +260,61 @@ def write_diagnostics_pdf(
         pdf.colorbar(x0 + side + 12, y0, 14, side, vmin, vmax)
         n_pages += 1
 
-    if stars is not None:
-        rows = (stars.select("star_cutout", "residual_cutout",
-                             "cut_w", "cut_h", "flux")
-                .limit(max_pages * cutouts_per_page).collect())
-        cell_h = (_PAGE_H - 2 * margin) / cutouts_per_page
-        cut = cell_h - 22
-        for i, row in enumerate(rows):
-            slot = i % cutouts_per_page
-            if slot == 0:
-                pdf.new_page()
-                pdf.text(margin, _PAGE_H - margin + 18,
-                         "star / residual cutouts (brightest first)",
-                         size=11)
-                n_pages += 1
-            w, h = int(row["cut_w"]), int(row["cut_h"])
-            star = np.asarray(row["star_cutout"],
-                              dtype=np.float64).reshape(h, w)
-            resid = np.asarray(row["residual_cutout"],
-                               dtype=np.float64).reshape(h, w)
-            y = _PAGE_H - margin - (slot + 1) * cell_h
-            for j, arr in enumerate((star, resid)):
-                u8, _, _ = zscale_stretch(arr)
-                x = margin + j * (cut + 30)
-                pdf.image(u8, x, y, cut, cut)
-                pdf.rect(x, y, cut, cut)
-            pdf.text(margin + 2 * (cut + 30) + 8, y + cut / 2,
-                     f"flux={float(row['flux']):.2f}", size=9)
+    cell_h = (_PAGE_H - 2 * margin) / cutouts_per_page
+    cut = cell_h - 22
+    for i, row in enumerate(stars[:max_pages * cutouts_per_page]):
+        slot = i % cutouts_per_page
+        if slot == 0:
+            pdf.new_page()
+            pdf.text(margin, _PAGE_H - margin + 18,
+                     "star / residual cutouts (brightest first)",
+                     size=11)
+            n_pages += 1
+        w, h = int(row["cut_w"]), int(row["cut_h"])
+        star = np.asarray(row["star_cutout"],
+                          dtype=np.float64).reshape(h, w)
+        resid = np.asarray(row["residual_cutout"],
+                           dtype=np.float64).reshape(h, w)
+        y = _PAGE_H - margin - (slot + 1) * cell_h
+        for j, arr in enumerate((star, resid)):
+            u8, _, _ = zscale_stretch(arr)
+            x = margin + j * (cut + 30)
+            pdf.image(u8, x, y, cut, cut)
+            pdf.rect(x, y, cut, cut)
+        pdf.text(margin + 2 * (cut + 30) + 8, y + cut / 2,
+                 f"flux={float(row['flux']):.2f}", size=9)
 
+    return pdf, n_pages
+
+
+def write_diagnostics_pdf(
+    path: str,
+    images: DataFrame | None = None,
+    model: np.ndarray | None = None,
+    stars: DataFrame | None = None,
+    max_pages: int = 32,
+    cutouts_per_page: int = 8,
+) -> int:
+    """Write :func:`diagnostics_pdf` of DataFrame rows to ``path``:
+    ``images`` with schemas.IMAGE columns (epoch_id, filename, width,
+    height, pixels), ``stars`` with the cutout columns. Only the rows
+    that get a page are collected — this sink, like the reference's, is
+    a per-image-set diagnostic, not a table export; exports of unbounded
+    data go through the parquet/CSV sinks. Returns the number of pages
+    written.
+    """
+    image_rows = star_rows = ()
+    if images is not None:
+        image_rows = (images.select("epoch_id", "filename", "width", "height",
+                                    "pixels")
+                      .orderBy("epoch_id", "filename")
+                      .limit(max_pages).collect())
+    if stars is not None:
+        star_rows = (stars.select("star_cutout", "residual_cutout",
+                                  "cut_w", "cut_h", "flux")
+                     .limit(max_pages * cutouts_per_page).collect())
+    pdf, n_pages = diagnostics_pdf(image_rows, model, star_rows, max_pages,
+                                   cutouts_per_page)
     pdf.write(path)
     return n_pages
 

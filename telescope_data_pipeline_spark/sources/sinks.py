@@ -7,13 +7,19 @@
   at scale — partitioned by (band) so band-filtered reads prune whole
   directories (partition pruning shows as PartitionFilters in the scan).
 - Diagnostics TXT: the stats block (p_io.py:121-154), one line per
-  epoch rendered by ONE Spark expression (:func:`write_stats_txt`) over
+  epoch rendered by ONE Spark expression (:func:`stats_line`) over
   per-epoch statistics, whether they come from an aggregation of the
   step DataFrames (:func:`write_diagnostics_txt`) or straight from the
   CLI's per-epoch records.
+- :func:`write_text_part`: the driver-side form of a one-partition
+  Spark text or CSV write, for lines the CLI renders in its query
+  (``stats_line``, ``to_csv``) and collects with everything else.
 """
 
 from __future__ import annotations
+
+import os
+from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,16 +50,15 @@ def write_partitioned(df: DataFrame, path: str, *partition_cols: str) -> None:
     df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
-def write_stats_txt(stats: DataFrame, path: str) -> None:
-    """One TXT line per row of per-epoch raw statistics (epoch_id,
+def stats_line() -> Column:
+    """The TXT line of a row of per-epoch raw statistics (epoch_id,
     n_sources, n_psf, n_results, peak_min/max/med, flux_min/max/med,
-    mean_fwhm), written as text: numbers rounded to 4 places and
-    rendered by Spark's double-to-string cast (e.g. ``1.2E7``), absent
-    values empty."""
+    mean_fwhm): numbers rounded to 4 places and rendered by Spark's
+    double-to-string cast (e.g. ``1.2E7``), absent values empty."""
     def num(c: str) -> Column:
         return F.round(F.col(c), 4).cast("string")
 
-    line = F.concat_ws(
+    return F.concat_ws(
         "", F.lit("epoch "), F.col("epoch_id").cast("string"),
         F.lit(": sources="), F.col("n_sources").cast("string"),
         F.lit(" psf_stars="), F.coalesce(F.col("n_psf"), F.lit(0)).cast("string"),
@@ -63,7 +68,21 @@ def write_stats_txt(stats: DataFrame, path: str) -> None:
         F.lit("] flux[min,max,med]=["), num("flux_min"),
         F.lit(","), num("flux_max"), F.lit(","), num("flux_med"),
         F.lit("] fwhm="), num("mean_fwhm"))
-    stats.select(line.alias("value")).write.mode("overwrite").text(path)
+
+
+def write_stats_txt(stats: DataFrame, path: str) -> None:
+    """One :func:`stats_line` per row of per-epoch raw statistics,
+    written as a text dataset at ``path``."""
+    stats.select(stats_line().alias("value")).write.mode("overwrite").text(path)
+
+
+def write_text_part(path: str, lines: Iterable[str], ext: str) -> None:
+    """Write ``lines`` as the one part file (``part-00000<ext>``) of a
+    text dataset directory at ``path``, as a one-partition Spark write
+    would; Spark reads it back the same way."""
+    os.makedirs(path, exist_ok=True)
+    with open(os.path.join(path, f"part-00000{ext}"), "w") as fh:
+        fh.writelines(f"{line}\n" for line in lines)
 
 
 def write_diagnostics_txt(
@@ -108,7 +127,6 @@ def compact_parquet(spark: SparkSession, path: str,
     production (partition-scoped compaction) rather than table-wide.
     """
     import math
-    import os
     import shutil
     from urllib.parse import unquote, urlparse
 
