@@ -9,6 +9,8 @@ text analysis) and a Structured Streaming surface.
 Layout
 ------
 - ``session``    : SparkSession builder (Arrow on, AQE on, UTC).
+- ``worker_daemon``: the Python worker daemon the session sets, so
+                   workers import pyspark as bytecode.
 - ``schemas``    : every table schema as an explicit StructType.
 - ``sources``    : batch readers for the driver's parquet tables, CSV/JSON
                    round-trips, binary (multimodal) sources.

@@ -70,17 +70,24 @@ def q_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2^53 converts to double with ONE correctly-rounded division,
     # which is precisely what BigDecimal.doubleValue() of the same
     # rational produces. Headroom: sum_disc's 1e-4-unit sum stays under
-    # 2^53 through ~8.6e6 lineitems per group-by output lane... per
-    # GROUP, i.e. ~sf14 at TPC-H row scales, and under 2^63 to ~sf1500;
-    # past 2^53 the decimal and integer paths could differ in the last
-    # ulp, so a >sf10 deployment should flip sum_disc back to the
-    # decimal form (the other sums have 100x more headroom).
+    # 2^53 through ~8.6e6 lineitems per GROUP, i.e. ~sf14 at TPC-H row
+    # scales (the other sums have 100x more headroom). Past 2^53 the
+    # conversion to double rounds and the decimal and integer paths can
+    # differ in the last ulp, so every sum fails the query by name there
+    # instead of diverging silently.
     qc = F.round(F.col("l_quantity") * 100).cast("long")
     pc = F.round(F.col("l_extendedprice") * 100).cast("long")
     dc = F.round(F.col("l_discount") * 100).cast("long")
     dpc = pc * (100 - dc)  # exact 1e-4 units
     tc = F.round(F.col("o_totalprice") * 100).cast("long")
     n = F.count(F.lit(1))
+
+    def exact_sum(units, name: str):
+        s = F.sum(units)
+        return F.when(F.abs(s) < 2 ** 53, s).otherwise(F.raise_error(F.lit(
+            f"q_flagship: a group's {name} reaches 2^53 integer units, "
+            "past which its double differs from the decimal sum")))
+
     return (
         lineitem
         .filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
@@ -89,11 +96,12 @@ def q_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(customer), F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            (F.sum(qc) / 100.0).alias("sum_qty"),
-            (F.sum(pc) / 100.0).alias("sum_base_price"),
-            (F.sum(dpc) / 10000.0).alias("sum_disc_price"),
-            F.round(F.sum(qc) / 100.0 / n, 6).alias("avg_qty"),
-            F.round(F.sum(tc) / 100.0 / n, 6).alias("avg_order_price"),
+            (exact_sum(qc, "sum_qty") / 100.0).alias("sum_qty"),
+            (exact_sum(pc, "sum_base_price") / 100.0).alias("sum_base_price"),
+            (exact_sum(dpc, "sum_disc_price") / 10000.0).alias("sum_disc_price"),
+            F.round(exact_sum(qc, "sum_qty") / 100.0 / n, 6).alias("avg_qty"),
+            F.round(exact_sum(tc, "o_totalprice sum") / 100.0 / n, 6)
+            .alias("avg_order_price"),
             n.alias("n_rows"),
             F.countDistinct("c_custkey").alias("n_custs"),
         )

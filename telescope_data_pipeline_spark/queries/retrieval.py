@@ -326,11 +326,11 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed by src so iterations reuse the layout with zero re-
     shuffle; skewed hubs (stop-term-like super-nodes) take the salted
     two-stage aggregation from operators/skew.py."""
-    # r14 (guide SS2.3/SS1.2): this query is a chain of bounded
-    # aggregates/windows over mid-size shuffles with no output-
-    # expanding join, so the engine's 64 KB AQE coalesce floor only
-    # buys per-stage task overhead here; run it on the stock-floor
-    # child session (interleaved min3 A/B in OPTIMIZATION_r14.md).
+    # Runs on the stock-floor child session because an interleaved
+    # min-of-3 A/B measured it faster there: 3.19 / 3.59 s under the 64 KB
+    # floor, 1.96 / 2.55 s at stock (OPTIMIZATION_r14.md). That
+    # measurement is the reason, not the plan's shape: its rank x edge joins
+    # do expand output.
     spark = stock_coalesce_floor(spark)
     li = load_table(spark, sf_dir, "lineitem")
     # Uniform not-null filter on BOTH endpoints (r13, guide §2.4): the
@@ -724,11 +724,11 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     (_copurchase_edges): the degree agg, the orientation join, and the
     three wedge-join branches all read one materialized relation
     instead of re-running the lineitem self-join per branch."""
-    # r14 (guide SS2.3/SS1.2): this query is a chain of bounded
-    # aggregates/windows over mid-size shuffles with no output-
-    # expanding join, so the engine's 64 KB AQE coalesce floor only
-    # buys per-stage task overhead here; run it on the stock-floor
-    # child session (interleaved min3 A/B in OPTIMIZATION_r14.md).
+    # Runs on the stock-floor child session because an interleaved
+    # min-of-3 A/B measured it faster there: 2.95 / 2.33 s under the 64 KB
+    # floor, 2.66 / 2.12 s at stock (OPTIMIZATION_r14.md). That
+    # measurement is the reason, not the plan's shape: its wedge joins
+    # do expand output.
     spark = stock_coalesce_floor(spark)
     e = _copurchase_edges(spark, sf_dir)
     deg = (e.select(F.col("pa").alias("node"))
@@ -2430,11 +2430,11 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans in the r10 plan sweep); with them every round is exactly
     one |E| join over the materialized edges (operators/pagerank.py's
     loop contract)."""
-    # r14 (guide SS2.3/SS1.2): this query is a chain of bounded
-    # aggregates/windows over mid-size shuffles with no output-
-    # expanding join, so the engine's 64 KB AQE coalesce floor only
-    # buys per-stage task overhead here; run it on the stock-floor
-    # child session (interleaved min3 A/B in OPTIMIZATION_r14.md).
+    # Runs on the stock-floor child session because an interleaved
+    # min-of-3 A/B measured it faster there: 3.42 / 2.93 s under the 64 KB
+    # floor, 2.77 / 2.64 s at stock (OPTIMIZATION_r14.md). That
+    # measurement is the reason, not the plan's shape: its label x edge joins
+    # do expand output.
     spark = stock_coalesce_floor(spark)
     e0 = _copurchase_edges(spark, sf_dir)
     e = (e0.select(F.col("pa").alias("src"), F.col("pb").alias("dst"))

@@ -8,6 +8,7 @@ deployment would use — AQE, Arrow, and UTC semantics are identical.
 from __future__ import annotations
 
 import os
+import site
 import threading
 
 from pyspark.sql import SparkSession
@@ -18,6 +19,19 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 _STOCK_FLOOR_LOCK = threading.Lock()
+
+#: Directory that holds the package; a Python worker imports
+#: ``worker_daemon`` from it, as it imports the kernels and data sources.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _workers_import_package() -> bool:
+    """Whether a Python worker started by this process can import the
+    package: its directory is the working directory (which ``python -m``
+    puts on the worker's path), on PYTHONPATH, or site-packages."""
+    dirs = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+            *site.getsitepackages()]
+    return os.path.realpath(_PACKAGE_ROOT) in {os.path.realpath(d) for d in dirs if d}
 
 
 def get_spark(app_name: str = "telescope_data_pipeline_spark",
@@ -38,6 +52,18 @@ def get_spark(app_name: str = "telescope_data_pipeline_spark",
       (region/nation/ephemeris) should never shuffle.
     - maxPartitionBytes 128 MB: parquet scan split size — keeps scan tasks
       uniform regardless of input file layout.
+    - spark.python.daemon.module = ``worker_daemon``: Python workers load
+      pyspark as bytecode from its installed package instead of compiling
+      it from ``$SPARK_HOME/python/lib/pyspark.zip``, which Spark puts
+      first on a worker's path. That compile cost about 1 s per daemon,
+      paid at a session's first pandas UDF and first plain UDF
+      (``q_periodogram``, the per-epoch kernel). The daemon keeps the zip
+      first unless the installed pyspark and py4j are the zips' releases.
+      Workers import the package already, for the kernels and the
+      ``fits`` source; the setting is made only when they can, i.e. when
+      the package is in the working directory, on PYTHONPATH or in
+      site-packages. Spark ignores it for the driver-side workers that
+      plan a Python data source.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
@@ -77,6 +103,9 @@ def get_spark(app_name: str = "telescope_data_pipeline_spark",
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    if _workers_import_package():
+        builder = builder.config("spark.python.daemon.module",
+                                 "telescope_data_pipeline_spark.worker_daemon")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -97,10 +126,10 @@ def stock_coalesce_floor(spark: SparkSession) -> SparkSession:
     r13/r14 interleaved A/B measured q_spearman 4.4 s under the 64 KB
     floor vs 2.5-3.2 s at stock (same session, same host), while the
     expansion-join wins (q_semdedup 1.7 s, q_adamic_adar) stay intact
-    on the parent. Queries whose plans are long chains of bounded
-    aggregates/windows — and never expansion joins — opt into the stock
-    floor HERE, scoped to their own plan, instead of flipping the
-    session default that the expansion family depends on.
+    on the parent. Queries for which that interleaved A/B measured the
+    stock floor faster opt into it HERE, scoped to their own plan,
+    instead of flipping the session default that the expansion family
+    depends on.
 
     At cluster scale bytes/parallelism >> 1 MB so neither floor ever
     binds — this is a local/small-shuffle trade only, which is why it

@@ -191,6 +191,55 @@ def test_readability_ari_large_doc_no_overflow(spark, tmp_path):
     _parity(spark, "q_readability_ari", str(tmp_path))
 
 
+def _flagship_tables(d, n_big):
+    """lineitem/orders/customer for q_flagship: group (A, F) holds
+    ``n_big`` seeded lines priced near 1e9 with no discount, so its
+    1e-4-unit sum_disc_price is about n_big * 1e13; group (N, O) holds
+    a few ordinary lines."""
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(7)
+    big = rng.integers(99_000_000_000, 100_000_000_000, n_big) / 100.0
+    small = np.array([1234.56, 99.99, 0.01])
+    n = n_big + len(small)
+    d.mkdir()
+    pd.DataFrame({
+        "l_orderkey": np.arange(n) % 5, "l_partkey": 1, "l_suppkey": 1,
+        "l_linenumber": np.arange(n, dtype=np.int32),
+        "l_quantity": rng.integers(100, 5_000, n) / 100.0,
+        "l_extendedprice": np.concatenate([big, small]),
+        "l_discount": np.concatenate([np.zeros(n_big), [0.04, 0.1, 0.0]]),
+        "l_tax": 0.0,
+        "l_returnflag": ["A"] * n_big + ["N"] * len(small),
+        "l_linestatus": ["F"] * n_big + ["O"] * len(small),
+        "l_shipdate": dt.datetime(1996, 1, 1),
+    }).to_parquet(d / "lineitem.parquet", coerce_timestamps="us")
+    pd.DataFrame({
+        "o_orderkey": np.arange(5), "o_custkey": np.arange(5) % 2,
+        "o_orderstatus": "F", "o_totalprice": [10.5, 20.25, 30.0, 1e6, 7.77],
+        "o_orderdate": dt.datetime(1995, 7, 1), "o_orderpriority": "1-URGENT",
+    }).to_parquet(d / "orders.parquet", coerce_timestamps="us")
+    pd.DataFrame({
+        "c_custkey": [0, 1], "c_name": ["a", "b"],
+        "c_nationkey": np.array([1, 2], dtype=np.int32),
+        "c_acctbal": 0.0, "c_mktsegment": "BUILDING",
+    }).to_parquet(d / "customer.parquet")
+    return str(d)
+
+
+def test_flagship_integer_lanes_stop_at_2p53(spark, tmp_path):
+    """q_flagship sums exact integer 1e-4 units and converts each sum to
+    a double once; that matches the DECIMAL oracle only while a group's
+    sum stays below 2^53. Below it (900 lines near 1e9: ~9.0e15) the
+    output is oracle-exact; at 1000 lines (~9.95e15) the query must fail
+    by name instead of silently differing from the oracle."""
+    _parity(spark, "q_flagship", _flagship_tables(tmp_path / "below", 900))
+    over = _flagship_tables(tmp_path / "over", 1000)
+    with pytest.raises(Exception, match="q_flagship: a group.s sum_disc_price reaches 2\\^53"):
+        get("q_flagship").fn(spark, over).collect()
+
+
 @pytest.mark.full
 def test_empty_tables_never_crash(spark, tmp_path):
     """Every registered query must handle zero-row inputs: an empty
