@@ -5,7 +5,8 @@ Spark job.
         --images  DIR            # directory of *.fits files
         --manifest CSV           # (filename, epoch_id) rows, no header
         --out     DIR            # sink root (csv/ fits/ pdf/ txt/)
-        [--size 128]             # image side used for PSF-star framing
+        [--size N]               # square frame side for the PSF-star border
+                                 # (default: each stack's own width/height)
 
 Mirrors the reference lifecycle (psf_phot.py:9-98): manifest scan →
 FITS decode → FWHM → align+stack → detect → PSF-star mask → photometry
@@ -83,7 +84,9 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--manifest", required=True,
                    help="CSV of filename,epoch_id (reference psf_phot.py:41)")
     p.add_argument("--out", required=True, help="output directory root")
-    p.add_argument("--size", type=int, default=128)
+    p.add_argument("--size", type=int, default=None,
+                   help="frame side for the PSF-star border "
+                        "(default: each stack's own width and height)")
     args = p.parse_args(argv)
 
     from pyspark.sql import functions as F

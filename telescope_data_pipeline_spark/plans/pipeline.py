@@ -61,7 +61,7 @@ from ..operators.photometry import (
 from ..sources.fits import image_row, mid_exposure_jd
 
 MEAN_FWHM = 4.5   # fallback FWHM for epochs with no measurement; photometry's grouping width
-PSF_BORDER = 16   # PSF stars sit at least this far inside the --size frame
+PSF_BORDER = 16   # PSF stars sit at least this far inside the frame
 PSF_TRIM = 2      # brightest and faintest PSF candidates dropped per epoch
 
 
@@ -137,7 +137,7 @@ def _mean(values: Sequence[float | None]) -> float | None:
 def process_epoch(
     epoch_id: int,
     frames: Sequence[Frame],
-    size: int = 128,
+    size: int | None = None,
     listed: Sequence[str] = (),
 ) -> dict:
     """The whole image chain for one epoch; returns its EPOCH_SCHEMA
@@ -145,7 +145,9 @@ def process_epoch(
 
     FWHM per frame → detect per frame → shifts onto the first frame →
     sigma-clipped stack → detect on the stack → PSF-star mask (per-epoch
-    mean FWHM, ``size``-px frame) → PSF photometry → top-30 WCS solve.
+    mean FWHM, border from the stack's own width and height, or from a
+    ``size``-px square frame when ``size`` is given) → PSF photometry →
+    top-30 WCS solve.
     ``listed``: the epoch's filenames in the manifest; those with no
     frame are reported as ``missing``. Frames are taken in filename
     order, so the first is the reference frame.
@@ -194,7 +196,8 @@ def process_epoch(
 
     x, y, peak, flux, ids = (np.array([s[k] for s in found])
                              for k in ("xcentroid", "ycentroid", "peak", "flux", "id"))
-    keep = psf_star_mask(x, y, peak, flux, ids, size, size,
+    height, width = stack.shape if size is None else (size, size)
+    keep = psf_star_mask(x, y, peak, flux, ids, width, height,
                          MEAN_FWHM if mean_fwhm is None else mean_fwhm,
                          border=PSF_BORDER, trim=PSF_TRIM)
     psf_stars = [{"x": x[i], "y": y[i], "flux": flux[i], "id": ids[i],
@@ -227,7 +230,7 @@ def _frame(row: Mapping) -> Frame:
                  jd_mid, dict(row["header"] or {}))
 
 
-def epoch_records(images: DataFrame, size: int = 128,
+def epoch_records(images: DataFrame, size: int | None = None,
                   manifest: DataFrame | None = None) -> DataFrame:
     """Frames → one EPOCH_SCHEMA record per epoch, from
     :func:`process_epoch` in one grouped kernel.
@@ -293,7 +296,8 @@ def pipeline_stages(records: DataFrame) -> dict[str, DataFrame]:
     }
 
 
-def run_photometry_pipeline(images: DataFrame, size: int = 128) -> dict[str, DataFrame]:
+def run_photometry_pipeline(images: DataFrame,
+                            size: int | None = None) -> dict[str, DataFrame]:
     """images (schemas.IMAGE) → {fwhm, detections, shifts, stacked,
     stacked_detections, psf_stars, photometry} DataFrames.
 

@@ -628,11 +628,11 @@ def q_hits_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     why it wins there). Production additionally buckets edges by node
     so ITERATED steps reuse the layout across queries, and hot hub
     nodes take the salted two-stage aggregate from operators/skew.py."""
-    # r14 (guide SS2.3/SS1.2): this query is a chain of bounded
-    # aggregates/windows over mid-size shuffles with no output-
-    # expanding join, so the engine's 64 KB AQE coalesce floor only
-    # buys per-stage task overhead here; run it on the stock-floor
-    # child session (interleaved min3 A/B in OPTIMIZATION_r14.md).
+    # Runs on the stock-floor child session because an interleaved
+    # min-of-3 A/B (sf0.1, local[32]) measured it faster there:
+    # 2.99 / 2.69 s under the 64 KB floor, 2.51 / 1.83 s at stock.
+    # The plan is a chain of bounded aggregates/windows over mid-size
+    # shuffles, where the floor's extra partitions only add task overhead.
     spark = stock_coalesce_floor(spark)
     od = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")

@@ -102,11 +102,11 @@ def q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     |orders|/5 rows in one task — round-10 VERDICT item 2). The y rank
     map (distinct basket sizes) broadcasts; the x map joins back on
     (pri, price_centi)."""
-    # r14 (guide SS2.3/SS1.2): this query is a chain of bounded
-    # aggregates/windows over mid-size shuffles with no output-
-    # expanding join, so the engine's 64 KB AQE coalesce floor only
-    # buys per-stage task overhead here; run it on the stock-floor
-    # child session (interleaved min3 A/B in OPTIMIZATION_r14.md).
+    # Runs on the stock-floor child session because an interleaved
+    # min-of-3 A/B (sf0.1, local[32]) measured it faster there:
+    # 4.39 / 4.34 s under the 64 KB floor, 3.22 / 2.50 s at stock.
+    # The plan is a chain of bounded aggregates/windows over mid-size
+    # shuffles, where the floor's extra partitions only add task overhead.
     spark = stock_coalesce_floor(spark)
     from ..operators.rank import grouped_cum_counts
 
@@ -1119,11 +1119,11 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates over the same bounded cells — AQE reuses the cells
     exchange across the consumers, the q_hits_step pattern. At 100 TB
     nothing downstream of the per-order groupBy depends on data size."""
-    # r14 (guide SS2.3/SS1.2): this query is a chain of bounded
-    # aggregates/windows over mid-size shuffles with no output-
-    # expanding join, so the engine's 64 KB AQE coalesce floor only
-    # buys per-stage task overhead here; run it on the stock-floor
-    # child session (interleaved min3 A/B in OPTIMIZATION_r14.md).
+    # Runs on the stock-floor child session because an interleaved
+    # min-of-3 A/B (sf0.1, local[32]) measured it faster there:
+    # 2.53 / 2.28 s under the 64 KB floor, 1.66 / 1.31 s at stock.
+    # The plan is a chain of bounded aggregates/windows over mid-size
+    # shuffles, where the floor's extra partitions only add task overhead.
     spark = stock_coalesce_floor(spark)
     od = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
@@ -1366,11 +1366,11 @@ def q_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit), one keyed equi-join of margins back onto kept units, and a
     final bounded per-priority aggregate. State never exceeds
     |units| rows; nothing is cross-joined or sorted globally."""
-    # r14 (guide SS2.3/SS1.2): this query is a chain of bounded
-    # aggregates/windows over mid-size shuffles with no output-
-    # expanding join, so the engine's 64 KB AQE coalesce floor only
-    # buys per-stage task overhead here; run it on the stock-floor
-    # child session (interleaved min3 A/B in OPTIMIZATION_r14.md).
+    # Runs on the stock-floor child session because an interleaved
+    # min-of-3 A/B (sf0.1, local[32]) measured it faster there:
+    # 2.28 / 2.34 s under the 64 KB floor, 2.00 / 1.57 s at stock.
+    # The plan is a chain of bounded aggregates/windows over mid-size
+    # shuffles, where the floor's extra partitions only add task overhead.
     spark = stock_coalesce_floor(spark)
     od = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")

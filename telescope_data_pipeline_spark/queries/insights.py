@@ -490,11 +490,11 @@ def q_goodman_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one shuffle to per-order baskets, one to the 40-cell table;
     the pair 'join' is a broadcast cross of two 40-row relations."""
-    # r14 (guide SS2.3/SS1.2): this query is a chain of bounded
-    # aggregates/windows over mid-size shuffles with no output-
-    # expanding join, so the engine's 64 KB AQE coalesce floor only
-    # buys per-stage task overhead here; run it on the stock-floor
-    # child session (interleaved min3 A/B in OPTIMIZATION_r14.md).
+    # Runs on the stock-floor child session because an interleaved
+    # min-of-3 A/B (sf0.1, local[32]) measured it faster there:
+    # 1.37 / 1.37 s under the 64 KB floor, 1.25 / 1.22 s at stock.
+    # The plan is a chain of bounded aggregates/windows over mid-size
+    # shuffles, where the floor's extra partitions only add task overhead.
     spark = stock_coalesce_floor(spark)
     od = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
@@ -1149,11 +1149,11 @@ def q_fd_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one map-side-combined groupBy per FD (map-side distinct),
     union of tiny per-FD aggregates; |lhs| rows shuffle, never raw."""
-    # r14 (guide SS2.3/SS1.2): this query is a chain of bounded
-    # aggregates/windows over mid-size shuffles with no output-
-    # expanding join, so the engine's 64 KB AQE coalesce floor only
-    # buys per-stage task overhead here; run it on the stock-floor
-    # child session (interleaved min3 A/B in OPTIMIZATION_r14.md).
+    # Runs on the stock-floor child session because an interleaved
+    # min-of-3 A/B (sf0.1, local[32]) measured it faster there:
+    # 1.57 / 1.66 s under the 64 KB floor, 0.94 / 0.94 s at stock.
+    # The plan is a chain of bounded aggregates/windows over mid-size
+    # shuffles, where the floor's extra partitions only add task overhead.
     spark = stock_coalesce_floor(spark)
     li = load_table(spark, sf_dir, "lineitem")
     od = load_table(spark, sf_dir, "orders")
@@ -1832,11 +1832,11 @@ def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lower-degree endpoint; per-node triangle counts are one
     3-corner explode + groupBy; the join back to degrees is keyed.
     deg >= 2 prunes before the ratio (no zero denominators)."""
-    # r14 (guide SS2.3/SS1.2): this query is a chain of bounded
-    # aggregates/windows over mid-size shuffles with no output-
-    # expanding join, so the engine's 64 KB AQE coalesce floor only
-    # buys per-stage task overhead here; run it on the stock-floor
-    # child session (interleaved min3 A/B in OPTIMIZATION_r14.md).
+    # Runs on the stock-floor child session because an interleaved
+    # min-of-3 A/B (sf0.1, local[32]) measured it faster there:
+    # 2.55 / 2.16 s under the 64 KB floor, 1.91 / 1.76 s at stock.
+    # That measurement is the reason, not the plan's shape: its wedge and
+    # triangle joins do expand output.
     spark = stock_coalesce_floor(spark)
     li = (load_table(spark, sf_dir, "lineitem")
           .filter(F.col("l_partkey") % 4 == 0)

@@ -329,11 +329,10 @@ def q_dedup_embed_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cost attribution: at 4 bits the per-table bucket count is 16, so
     candidate volume approaches quadratic on a clustered corpus — the
     demo's wall time measures CANDIDATE COUNT, not engine speed.
-    bench.py publishes that count per round
-    (diagnostics.q_dedup_embed_lsh_candidate_pairs, via
-    operators/similarity.py::embedding_lsh_candidates) so the bench
-    number stays attributable; production near-dup at >= 0.9 runs the
-    operator defaults (8 bits x 8 tables, 256 buckets/table)."""
+    ``operators/similarity.py::embedding_lsh_candidates`` yields that
+    candidate stream, so a timing can be put against its count;
+    production near-dup at >= 0.9 runs the operator defaults (8 bits x
+    8 tables, 256 buckets/table)."""
     from ..operators.similarity import embedding_near_duplicates
 
     # spread=True (r13): the single-file embeddings scan is one task,

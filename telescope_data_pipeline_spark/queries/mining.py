@@ -163,11 +163,11 @@ def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim and the 1-row total broadcast. All ratios are divisions of
     exact integer counts: deterministic at any parallelism.
     """
-    # r14 (guide SS2.3/SS1.2): this query is a chain of bounded
-    # aggregates/windows over mid-size shuffles with no output-
-    # expanding join, so the engine's 64 KB AQE coalesce floor only
-    # buys per-stage task overhead here; run it on the stock-floor
-    # child session (interleaved min3 A/B in OPTIMIZATION_r14.md).
+    # Runs on the stock-floor child session because an interleaved
+    # min-of-3 A/B (sf0.1, local[32]) measured it faster there:
+    # 2.25 / 1.80 s under the 64 KB floor, 1.77 / 1.60 s at stock.
+    # That measurement is the reason, not the plan's shape: its basket
+    # self-join does expand output.
     spark = stock_coalesce_floor(spark)
     li = load_table(spark, sf_dir, "lineitem")
     pt = load_table(spark, sf_dir, "part")
@@ -269,9 +269,9 @@ def q_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
 def adamic_adar_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Adamic-Adar candidate stream ``(ck_a, ck_b, w_nano)`` — one
     row per (customer pair, shared part) BEFORE the pair aggregation.
-    Factored out so bench.py can publish the candidate-pair count as a
-    diagnostic (round-9 VERDICT item 1: make the wall time
-    attributable to pair volume, the q_dedup_embed_lsh precedent).
+    Factored out so the candidate-pair count can be taken on its own,
+    which makes the query's wall time attributable to pair volume (as
+    for q_dedup_embed_lsh).
 
     Construction (see q_adamic_adar's docstring for the scale
     rationale): one scan builds the distinct (customer, part) edge

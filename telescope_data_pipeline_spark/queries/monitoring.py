@@ -407,11 +407,11 @@ def q_mood_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     lesson), reduced to ONE broadcast row; group counts are one
     map-side-combined groupBy; the only unpartitioned windows run over
     the <= k-group table."""
-    # r14 (guide SS2.3/SS1.2): this query is a chain of bounded
-    # aggregates/windows over mid-size shuffles with no output-
-    # expanding join, so the engine's 64 KB AQE coalesce floor only
-    # buys per-stage task overhead here; run it on the stock-floor
-    # child session (interleaved min3 A/B in OPTIMIZATION_r14.md).
+    # Runs on the stock-floor child session because an interleaved
+    # min-of-3 A/B (sf0.1, local[32]) measured it faster there:
+    # 1.53 / 1.62 s under the 64 KB floor, 1.43 / 1.44 s at stock.
+    # The plan is a chain of bounded aggregates/windows over mid-size
+    # shuffles, where the floor's extra partitions only add task overhead.
     spark = stock_coalesce_floor(spark)
     d = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),

@@ -1,13 +1,14 @@
 """Query registry: name -> (Spark callable, DuckDB oracle SQL).
 
-Contract (driver, see /root/repo/__spark_entry__.py):
+Contract (read by ``__spark_entry__.py`` and the test suite):
 - the callable takes ``(spark, sf_dir)`` and returns a DataFrame;
 - the oracle SQL must be ANSI SQL DuckDB can run over the same parquet
   tables, producing the SAME column names (the comparison sorts columns
   by name, then hashes order-insensitive values);
 - queries whose semantics are not SQL-expressible (streaming state,
   iterative kernels, external services) register ``oracle=None`` and get
-  a rows-only check.
+  a rows-only check;
+- :func:`all_queries` lists the queries in registration order.
 
 Determinism rules every query here follows:
 - every float output column is explicitly ROUNDed (same digits both
@@ -16,11 +17,11 @@ Determinism rules every query here follows:
   column included) so top-k picks are unique;
 - every rounded float column whose value can reach zero from below is
   normalized with ``+ 0.0`` on BOTH sides: Spark's round() never emits
-  IEEE -0.0 but DuckDB's ROUND preserves it, and the driver hashes
-  bit-level (round-2 q_scalar_math failure);
+  IEEE -0.0 but DuckDB's ROUND preserves it, and the comparison hashes
+  bit-level (a q_scalar_math mismatch);
 - integer-returning functions must agree in output type with DuckDB's
   signature: Spark CEIL/FLOOR return BIGINT where DuckDB returns
-  DOUBLE — CAST the oracle side (round-2 q_scalar_round failure).
+  DOUBLE — CAST the oracle side (a q_scalar_round mismatch).
 """
 
 from __future__ import annotations
@@ -43,61 +44,6 @@ class Query:
 
 _REGISTRY: dict[str, Query] = {}
 
-#: The driver's correctness gate checks queries in ``queries()`` dict
-#: order and stops after the first 50 entries. Round-14 rotation (the
-#: registry's established scheme; group sizes sum to the 50-entry gate
-#: EXACTLY — the r13 VERDICT item 9 cadence):
-#: (a) the 24-entry r5-stale DRAIN in the promised alphabetical order
-#: (q_join_broadcast .. q_weighted_sample) — this ZEROES the pre-r6
-#: attestation backlog;
-#: (b) first-time driver evidence for the 5 r13 stat additions
-#: (q_kendall_tau, q_benjamini_hochberg, q_krippendorff_alpha,
-#: q_conformal_interval, q_weibull_fit — never driver-sampled, all
-#: tri-scale oracle-proven at registration) plus q_media_frames, the
-#: r13 video frame-sampling query the verdict queued for fresh
-#: evidence (the verdict's "q_media_video"; no query of that literal
-#: name exists) — 6;
-#: (c) cadence rotation into the OLDEST remaining cohort: the first 20
-#: of the 46 r6-attested queries, alphabetical (q_anomaly_mad ..
-#: q_maxsim_late). Sum = 50 exactly.
-#: ROUND-15 QUEUE (spill, alphabetical): the remaining 26 r6-attested
-#: entries (q_median_twopass .. q_zorder_key) — draining them zeroes
-#: all pre-r7 staleness; any r14 additions join that window's group
-#: (b). Staleness is computed from the committed CORRECTNESS_r*.json
-#: artifacts (max round each name appears in).
-#: The local tri-scale (sf0.001/0.01/0.1) oracle sweep still covers
-#: all registered queries per session.
-PRIORITY: tuple[str, ...] = (
-    # (a) r5-stale drain, promised alphabetical order — 24
-    "q_join_broadcast",
-    "q_join_inner", "q_join_knn", "q_join_nn", "q_join_salted",
-    "q_kmeans_step", "q_length_batches",
-    "q_line_dedup", "q_mix_corpus", "q_mix_token_budget",
-    "q_ngram_jaccard", "q_pack_sequences", "q_quality_gate",
-    "q_quality_percentile", "q_scd2", "q_sim_bucketed",
-    "q_split_assign", "q_split_stratified", "q_stream_session",
-    "q_stream_tumbling", "q_tfidf", "q_unigram_logprob", "q_union_all",
-    "q_weighted_sample",
-    # (b) first-time driver evidence: r13 stats + q_media_frames — 6
-    "q_kendall_tau", "q_benjamini_hochberg", "q_krippendorff_alpha",
-    "q_conformal_interval", "q_weibull_fit", "q_media_frames",
-    # (c) r6-stale rotation, alphabetical — 20 (sum = 50 exactly)
-    "q_anomaly_mad", "q_bfs_levels", "q_bigram_pmi", "q_cdc_apply",
-    "q_char_entropy", "q_chi_square", "q_compact_files",
-    "q_containment_join", "q_corr_matrix", "q_doremi_step", "q_dsir",
-    "q_fuzzy_join", "q_heavy_hitters", "q_interp_linear",
-    "q_inverted_index", "q_ivf_probe", "q_join_interval",
-    "q_join_nullsafe", "q_label_knn_noise", "q_maxsim_late",
-)
-
-
-def _order_key(item: tuple[int, Query]) -> tuple[int, int, int]:
-    reg_index, q = item
-    try:
-        return (0, PRIORITY.index(q.name), 0)
-    except ValueError:
-        return (1, 0 if q.oracle is not None else 1, reg_index)
-
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register a query. Use as ``@query("q_x", oracle="SELECT ...")``."""
@@ -113,14 +59,12 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 
 
 def all_queries() -> dict[str, Query]:
+    """Every registered query, in registration order: ``load_all``'s
+    module order, then decorator order within a module."""
     from . import load_all
 
     load_all()
-    unknown = [n for n in PRIORITY if n not in _REGISTRY]
-    if unknown:  # a typo here would silently drop a query from the gate
-        raise ValueError(f"PRIORITY names not in registry: {unknown}")
-    ordered = sorted(enumerate(_REGISTRY.values()), key=_order_key)
-    return {q.name: q for _, q in ordered}
+    return dict(_REGISTRY)
 
 
 def get(name: str) -> Query:

@@ -327,10 +327,10 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; skewed hubs (stop-term-like super-nodes) take the salted
     two-stage aggregation from operators/skew.py."""
     # Runs on the stock-floor child session because an interleaved
-    # min-of-3 A/B measured it faster there: 3.19 / 3.59 s under the 64 KB
-    # floor, 1.96 / 2.55 s at stock (OPTIMIZATION_r14.md). That
-    # measurement is the reason, not the plan's shape: its rank x edge joins
-    # do expand output.
+    # min-of-3 A/B (sf0.1, local[32]) measured it faster there:
+    # 3.19 / 3.59 s under the 64 KB floor, 1.96 / 2.55 s at stock.
+    # That measurement is the reason, not the plan's shape: its rank x
+    # edge joins do expand output.
     spark = stock_coalesce_floor(spark)
     li = load_table(spark, sf_dir, "lineitem")
     # Uniform not-null filter on BOTH endpoints (r13, guide §2.4): the
@@ -725,10 +725,10 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     three wedge-join branches all read one materialized relation
     instead of re-running the lineitem self-join per branch."""
     # Runs on the stock-floor child session because an interleaved
-    # min-of-3 A/B measured it faster there: 2.95 / 2.33 s under the 64 KB
-    # floor, 2.66 / 2.12 s at stock (OPTIMIZATION_r14.md). That
-    # measurement is the reason, not the plan's shape: its wedge joins
-    # do expand output.
+    # min-of-3 A/B (sf0.1, local[32]) measured it faster there:
+    # 2.95 / 2.33 s under the 64 KB floor, 2.66 / 2.12 s at stock.
+    # That measurement is the reason, not the plan's shape: its wedge
+    # joins do expand output.
     spark = stock_coalesce_floor(spark)
     e = _copurchase_edges(spark, sf_dir)
     deg = (e.select(F.col("pa").alias("node"))
@@ -2431,10 +2431,10 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     one |E| join over the materialized edges (operators/pagerank.py's
     loop contract)."""
     # Runs on the stock-floor child session because an interleaved
-    # min-of-3 A/B measured it faster there: 3.42 / 2.93 s under the 64 KB
-    # floor, 2.77 / 2.64 s at stock (OPTIMIZATION_r14.md). That
-    # measurement is the reason, not the plan's shape: its label x edge joins
-    # do expand output.
+    # min-of-3 A/B (sf0.1, local[32]) measured it faster there:
+    # 3.42 / 2.93 s under the 64 KB floor, 2.77 / 2.64 s at stock.
+    # That measurement is the reason, not the plan's shape: its label x
+    # edge joins do expand output.
     spark = stock_coalesce_floor(spark)
     e0 = _copurchase_edges(spark, sf_dir)
     e = (e0.select(F.col("pa").alias("src"), F.col("pb").alias("dst"))

@@ -8,8 +8,8 @@
 The registry (queries/registry.py) is the single source of truth: every
 operator the engine implements is invocable here by name, printed as a
 table, optionally written to parquet with ``--out``, and ``--explain``
-prints the AQE-finalized physical plan instead of rows — the same
-plan-audit view PLANS.md captures.
+prints the AQE-finalized physical plan instead of rows, for auditing a
+query's plan.
 """
 
 from __future__ import annotations

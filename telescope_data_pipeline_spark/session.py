@@ -83,10 +83,8 @@ def get_spark(app_name: str = "telescope_data_pipeline_spark",
         # on a single task; 64 KB floor → 32 tasks, query 4.5 s → 1.7 s).
         # At cluster scale bytes/parallelism >> 1 MB, so the floor only
         # ever binds on compute-dense small shuffles — exactly where it
-        # must not serialize. Env-tunable for deployments that prefer
-        # the stock floor.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64KB"))
+        # must not serialize.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64KB")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
@@ -145,7 +143,6 @@ def stock_coalesce_floor(spark: SparkSession) -> SparkSession:
         if child is None:
             child = spark.newSession()
             child.conf.set(
-                "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_GRAFT_AQE_STOCK_FLOOR", "1MB"))
+                "spark.sql.adaptive.coalescePartitions.minPartitionSize", "1MB")
             spark._tdp_stock_floor_session = child
     return child

@@ -52,6 +52,23 @@ def test_process_epoch_recovers_planted_truth():
     assert total > 0 and ok / total > 0.8, f"{ok}/{total} fluxes recovered"
 
 
+def test_psf_star_border_uses_the_stack_shape():
+    """The PSF-star border rule (reference core.py:309-310) reads the
+    image's own width and height; an explicit ``size`` is honoured."""
+    rows, _, _ = synthetic_frames(n_epochs=1, size=160, n_stars=30, seed=11)
+    frames = [Frame(r[0], r[5], band=r[2], airmass=r[6]) for r in rows]
+
+    def coords(rec):
+        return [v for s in rec["psf_stars"] for v in (s["x"], s["y"])]
+
+    own = process_epoch(0, frames)
+    assert own["n_psf"] > 0
+    assert all(16 < v < 160 - 1 - 16 for v in coords(own))
+    assert max(coords(own)) > 128 - 1 - 16  # past a 128-px frame's border
+    assert own["psf_stars"] == process_epoch(0, frames, size=160)["psf_stars"]
+    assert max(coords(process_epoch(0, frames, size=128))) < 128 - 1 - 16
+
+
 def test_process_epoch_outcomes():
     assert process_epoch(5, [], listed=["a.fits"])["outcome"] == "no_frames"
     flat = np.full((48, 48), 100.0)
