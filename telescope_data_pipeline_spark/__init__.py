@@ -2,9 +2,9 @@
 
 A from-scratch, Spark-first re-expression of the query and data-processing
 capabilities of the reference pipeline (JeremyBuchanan/telescope-data-pipeline,
-surveyed in /root/repo/SURVEY.md), extended with the operators a large-scale
-training-data pipeline needs (dedup, similarity search, multimodal columns,
-text analysis) and a Structured Streaming surface.
+surveyed in SURVEY.md), extended with the operators a large-scale
+training-data pipeline needs (dedup, similarity search, text analysis) and
+a Structured Streaming surface.
 
 Layout
 ------
@@ -12,8 +12,9 @@ Layout
 - ``worker_daemon``: the Python worker daemon the session sets, so
                    workers import pyspark as bytecode.
 - ``schemas``    : every table schema as an explicit StructType.
-- ``sources``    : batch readers for the driver's parquet tables, CSV/JSON
-                   round-trips, binary (multimodal) sources.
+- ``sources``    : readers for the driver's parquet tables and for FITS
+                   frames (scan and ``fits`` data source), and the
+                   CSV/FITS/PDF/TXT/parquet sinks.
 - ``operators``  : custom operators Spark lacks as built-ins — sigma-clipped
                    aggregation, nearest-neighbor join, dedup family
                    (exact/MinHash/SimHash/Jaccard), ANN similarity search.

@@ -305,6 +305,8 @@ def run_photometry_pipeline(images: DataFrame,
     result, so materializing any number of them runs the per-epoch
     kernel once. The cache lives until the session's
     ``catalog.clearCache()``; to scope it, call :func:`epoch_records`
-    and :func:`pipeline_stages` directly and unpersist the records, as
-    ``__main__.main`` does."""
+    and :func:`pipeline_stages` directly and unpersist the records. A
+    caller that reads the records once needs no cache: ``__main__.main``
+    reads what every sink needs from :func:`epoch_records` in one
+    ``toArrow()`` collect."""
     return pipeline_stages(epoch_records(images, size=size).cache())

@@ -1002,14 +1002,14 @@ FROM h ORDER BY doc_id
 """)
 def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HTML -> plain-text extraction — the WET step that turns a crawl
-    response (q_scan_warc's payload) into training text: script/style/
+    response's HTML payload into training text: script/style/
     comment blocks removed, tags stripped, the five standard character
     entities decoded (&amp; last, so escaped entities stay literal),
     whitespace normalized, plus the <title> pulled out as metadata.
     Demonstrated on synthetic pages built around each document's text
     (every hazard class planted) so the extraction itself is
-    oracle-checked — the same chain applied to the WARC payload column
-    is the production path.
+    oracle-checked — the same chain applied to a crawl's HTML payload
+    column is the production path.
 
     Determinism: pure string functions; both engines run the SAME
     pattern pipeline (one shared list builds both dialects; RE2 has no

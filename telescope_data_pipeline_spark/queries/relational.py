@@ -315,103 +315,3 @@ def q_scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
         .schema(NATION).load(out)
         .select("n_nationkey", "n_name", "n_regionkey")
     )
-
-
-@query("q_scan_warc", oracle=None)  # binary crawl source: rows-only check
-def q_scan_warc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WARC (Common Crawl interchange) source: the registered Python
-    DataSource (sources/warc.py) reading a deterministic two-file
-    fixture — one plain .warc, one per-record-gzip .warc.gz (the
-    Common Crawl member layout) — with the HTTP envelope promoted to
-    typed columns. This is the 100 TB crawl-ingestion entry point:
-    one input partition per file (gzip members cannot split), headers
-    parsed executor-side, undecodable files dropped whole.
-
-    Scalar-only projection for the driver canonicalizer: the binary
-    payload is summarized as its length and utf-8 text prefix; the
-    golden byte-level checks live in tests/test_warc.py."""
-    import os
-    import tempfile
-
-    from ..sources.warc import register_warc_datasource, write_warc_bytes
-
-    d = tempfile.mkdtemp(prefix="tdps_warc_")
-    recs = [{
-        "record_id": f"<urn:uuid:rec-{i:04d}>",
-        "warc_type": "response",
-        "target_uri": f"http://example.org/page/{i}",
-        "warc_date": f"2024-02-{(i % 27) + 1:02d}T12:00:00Z",
-        "http_status": 200 if i % 3 else 404,
-        "http_content_type": "text/html; charset=utf-8",
-        "body": f"<html><body>crawl doc {i}</body></html>".encode(),
-    } for i in range(8)]
-    with open(os.path.join(d, "part-00000.warc"), "wb") as f:
-        f.write(write_warc_bytes(recs[:4], gzip_per_record=False))
-    with open(os.path.join(d, "part-00001.warc.gz"), "wb") as f:
-        f.write(write_warc_bytes(recs[4:], gzip_per_record=True))
-    register_warc_datasource(spark)
-    w = spark.read.format("warc").load(d)
-    return (w.select(
-        "filename", "record_id", "warc_type", "target_uri",
-        F.col("warc_date").cast("string").alias("warc_date"),
-        "content_length", "http_status", "http_content_type",
-        F.length("payload").alias("payload_bytes"),
-        F.substring(F.col("payload").cast("string"), 1, 40)
-        .alias("payload_prefix"))
-        .orderBy("record_id"))
-
-
-@query("q_scan_archive", oracle="""
-SELECT CASE WHEN doc_id % 2 = 0 THEN 'docs-even.zip'
-       ELSE 'docs-odd.tar.gz' END AS filename,
-       'doc-' || CAST(doc_id AS VARCHAR) || '.txt' AS member,
-       CASE WHEN doc_id % 2 = 0 THEN 'zip' ELSE 'tar' END AS fmt,
-       CAST(strlen(text) AS BIGINT) AS size,
-       '2024-01-01 00:00:00' AS mtime,
-       substr(text, 1, 24) AS text_prefix
-FROM documents WHERE doc_id < 40 AND text IS NOT NULL
-""")
-def q_scan_archive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ZIP/TAR archive source (sources/archive.py): the first 40
-    documents exported as text members into a .zip and a .tar.gz (the
-    two bulk-drop formats an LLM ingest actually receives), then read
-    back through the registered "archive" Python DataSource — one
-    input partition per archive, members decoded executor-side under
-    the decompressed-size cap, undecodable archives dropped whole.
-
-    The oracle is the REAL round-trip check: it reconstructs every
-    expected member row directly from the documents table the archives
-    were built from, so the zip/tar encode -> scan -> decode path must
-    reproduce names, byte sizes, pinned timestamps, and utf-8 content
-    exactly. The fixture-construction collect is bounded (40 rows) and
-    is build-time scaffolding, not part of the measured scan."""
-    import io
-    import os
-    import tarfile
-    import tempfile
-
-    from ..sources.archive import register_archive_datasource, write_zip_bytes
-
-    docs = (load_table(spark, sf_dir, "documents")
-            .filter((F.col("doc_id") < 40) & F.col("text").isNotNull())
-            .select("doc_id", "text").collect())
-    d = tempfile.mkdtemp(prefix="tdps_arch_")
-    evens = [(f"doc-{r.doc_id}.txt", r.text.encode("utf-8"))
-             for r in docs if r.doc_id % 2 == 0]
-    odds = [(f"doc-{r.doc_id}.txt", r.text.encode("utf-8"))
-            for r in docs if r.doc_id % 2 == 1]
-    with open(os.path.join(d, "docs-even.zip"), "wb") as f:
-        f.write(write_zip_bytes(evens))
-    with tarfile.open(os.path.join(d, "docs-odd.tar.gz"), "w:gz") as t:
-        for name, payload in odds:
-            info = tarfile.TarInfo(name)
-            info.size = len(payload)
-            info.mtime = 1704067200  # 2024-01-01T00:00:00Z, pinned
-            t.addfile(info, io.BytesIO(payload))
-    register_archive_datasource(spark)
-    a = spark.read.format("archive").load(d)
-    return a.select(
-        "filename", "member", "fmt", "size",
-        F.col("mtime").cast("string").alias("mtime"),
-        F.substring(F.col("payload").cast("string"), 1, 24)
-        .alias("text_prefix"))

@@ -1803,11 +1803,10 @@ def parquet_profile_stream(stream: DataFrame) -> DataFrame:
     mapInPandas that opens each newly-arrived file's footer
     executor-side (pyarrow, a few KB of metadata per file — the
     payload never moves) and emits one row per column chunk; a path
-    that fails to open or parse is dropped whole, the archive-source
-    triage contract, because a manifest feed outlives any one corrupt
-    file. Stage 2 keeps per-COLUMN running totals in
-    applyInPandasWithState: chunk count, value count, and
-    compressed/uncompressed byte sums — four integers per column,
+    that fails to open or parse is dropped whole, because a manifest
+    feed outlives any one corrupt file. Stage 2 keeps per-COLUMN
+    running totals in applyInPandasWithState: chunk count, value count,
+    and compressed/uncompressed byte sums — four integers per column,
     order-free sufficient statistics, so the drained totals equal the
     batch footer sweep over the same file set bit-for-bit under ANY
     arrival order or batching (the hll/simpson twin guarantee class).

@@ -13,9 +13,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 # tests_ok=false on a suite nobody could finish). The tiny scale also
 # lands on boundary values the bigger SFs miss (verify-skill lesson:
 # a -0.0 and a .xx5 ROUND midpoint were only caught at sf0.001). The
-# driver's own correctness gate independently checks 50 queries per
-# round against DuckDB at sf0.01, and the full local sf0.01 sweep
-# stays one env var away:
+# full sf0.01 sweep stays one env var away:
 #   SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 

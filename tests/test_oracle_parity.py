@@ -51,10 +51,11 @@ def test_scalar_only_outputs(spark, sf_dir):
     which cannot order array/map/struct cells — every registered query
     (oracle-checked OR rows-only) must emit scalar columns only.
 
-    Construction is threaded (r14): the 392 plan builds are driver-side
-    py4j round-trips that release the GIL on socket I/O, so 8 threads
-    overlap them (~110 s -> ~35 s measured) without touching what is
-    checked — every query's schema is still inspected."""
+    Construction is threaded (r14): the plan builds, one per registered
+    query, are driver-side py4j round-trips that release the GIL on
+    socket I/O, so 8 threads overlap them (~110 s -> ~35 s measured)
+    without touching what is checked — every query's schema is still
+    inspected."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql import types as T
