@@ -3,8 +3,8 @@
 A from-scratch, Spark-first re-expression of the query and data-processing
 capabilities of the reference pipeline (JeremyBuchanan/telescope-data-pipeline,
 surveyed in SURVEY.md), extended with the operators a large-scale
-training-data pipeline needs (dedup, similarity search, text analysis) and
-a Structured Streaming surface.
+training-data pipeline needs (dedup, similarity search, multimodal columns,
+text analysis) and a Structured Streaming surface.
 
 Layout
 ------

@@ -1,8 +1,9 @@
-"""Domain-kernel demos: the photometry pipeline's kernels (detection,
-PSF photometry, FITS scan, WCS solve, periodogram, ensemble light
-curve). These operate on in-memory deterministic fixtures (the driver
-tables carry no image columns), so they register as rows-only checks;
-their numeric correctness is pinned by golden tests.
+"""Domain-kernel demos: the media-column queries (``q_media_*``) and the
+photometry pipeline's kernels (detection, PSF photometry, FITS scan, WCS
+solve, periodogram, ensemble light curve). These operate on in-memory
+deterministic fixtures (the driver tables carry no binary/image
+columns), so they register as rows-only checks; their numeric
+correctness is pinned by golden tests.
 """
 
 from __future__ import annotations
@@ -11,6 +12,116 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .registry import query
+
+
+@query("q_media_features", oracle=None)  # binary fixture: rows-only check
+def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multimodal image pipeline: binary payload column → mapInPandas
+    decode (stubbed codec) → per-image feature vector. Demonstrates the
+    opaque-binary + typed-metadata column convention (schemas.MEDIA) and
+    the Arrow-batched decode stage.
+
+    The registered output is scalar-only (the 8-bin feature vector is
+    promoted to per-bin columns) because the driver canonicalizer hashes
+    with a pandas sort, which cannot order array cells. The array form
+    stays available from the operator for internal composition."""
+    from ..operators.multimodal import extract_image_features, make_fake_media
+
+    feats = extract_image_features(make_fake_media(spark))
+    bins = [F.round(F.element_at("feature", i + 1).cast("double"), 6).alias(f"f{i}")
+            for i in range(8)]
+    return feats.select("media_id", "width", "height", "n_bytes",
+                        F.round("mean_intensity", 6).alias("mean_intensity"),
+                        *bins)
+
+
+@query("q_media_frames", oracle=None)  # binary fixture: rows-only check
+def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Video frame sampling as a UDTF-shaped mapInPandas: one input video
+    row → N frame rows, exploded inside the Arrow batch (no shuffle)."""
+    from ..operators.multimodal import make_fake_media, sample_frames
+
+    return sample_frames(make_fake_media(spark), every_s=1.0)
+
+
+@query("q_media_phash", oracle=None)  # hash-seeded pairs: rows-only check
+def q_media_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Perceptual-hash image dedup over the media fixture: 64-bit aHash
+    per decoded image (one Arrow pass), then the SimHash pigeonhole
+    Hamming band join (operators/dedup.py::hamming_near_duplicates) —
+    the dedup family's multimodal member. Rows-only: fingerprints hash
+    decoded pixels, not SQL-visible values; the planted-copy goldens in
+    tests/test_multimodal.py pin recall and precision instead. Output
+    is the per-image fingerprint table plus its near-dup partner count
+    at radius 6 (scalar columns for the driver canonicalizer)."""
+    from ..operators.multimodal import (
+        image_near_duplicates,
+        make_fake_media,
+        perceptual_hashes,
+    )
+
+    media = make_fake_media(spark, n=96)
+    fps = perceptual_hashes(media)
+    pairs = image_near_duplicates(media, max_hamming=6)
+    partners = (pairs.select(F.col("media_id_a").alias("media_id"))
+                .unionAll(pairs.select(F.col("media_id_b").alias("media_id")))
+                .groupBy("media_id")
+                .agg(F.count(F.lit(1)).alias("n_near_dups")))
+    return (fps.join(partners, "media_id", "left")
+            .select("media_id", "fp",
+                    F.coalesce("n_near_dups", F.lit(0)).alias("n_near_dups")))
+
+
+@query("q_media_resize", oracle=None)  # binary fixture: rows-only check
+def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Image resize/normalization: decode + nearest-neighbor resample
+    every image to a fixed 16x16 raster inside the Arrow batch — the
+    fixed-shape normalization in front of a vision encoder. Scalar
+    summary output (driver canonicalizer cannot sort array cells):
+    per-image dims + mean/min/max of the resized raster, which pins the
+    resample math while the array form stays available from the
+    operator."""
+    from ..operators.multimodal import make_fake_media, resize_images
+
+    r = resize_images(make_fake_media(spark), width=16, height=16)
+    px = F.transform("pixels", lambda x: x.cast("double"))
+    return r.select(
+        "media_id", "src_width", "src_height", "width", "height",
+        F.round(F.aggregate(px, F.lit(0.0), lambda a, v: a + v)
+                / F.size("pixels"), 6).alias("mean_px"),
+        F.round(F.array_min(px), 6).alias("min_px"),
+        F.round(F.array_max(px), 6).alias("max_px"))
+
+
+@query("q_media_audio", oracle=None)  # binary fixture: rows-only check
+def q_media_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Audio feature pipeline: binary payload -> mapInPandas decode
+    (stubbed codec) -> windowed RMS energy + zero-crossing rate rows —
+    the silence/VAD primitives, completing the image/video/audio
+    multimodal triple (schemas.MEDIA convention)."""
+    from ..operators.multimodal import extract_audio_features, make_fake_media
+
+    feats = extract_audio_features(make_fake_media(spark), window_s=0.5)
+    return feats.select("media_id", "window_idx",
+                        F.round("t_start_s", 3).alias("t_start_s"),
+                        F.round("rms", 6).alias("rms"),
+                        F.round("zcr", 6).alias("zcr"))
+
+
+@query("q_media_probe", oracle=None)  # binary containers: rows-only check
+def q_media_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Container-structure probe (r10): parse MP4 box trees and
+    Matroska EBML trees executor-side — duration, track count, codec
+    four-cc/ID, and frame dimensions WITHOUT decoding a sample. The
+    triage pass a 100 TB media-curation pipeline runs before deciding
+    which payloads earn the expensive decode fan-out; the fixture
+    plants REAL minimal MP4 and WebM/Matroska containers alongside
+    synthetic payloads so both parsers and the unknown-magic
+    passthrough run in every demo (map-only Arrow, zero shuffle;
+    goldens in tests/test_multimodal.py pin exact parsed values)."""
+    from ..operators.multimodal import make_fake_media, probe_media
+
+    return probe_media(make_fake_media(spark))
 
 
 @query("q_pipeline_detect", oracle=None)  # image kernels: rows-only check
@@ -163,3 +274,17 @@ def q_ensemble_lightcurve(spark: SparkSession, sf_dir: str) -> DataFrame:
     trimmed = ranked.filter((F.col("rn") > 3) & (F.col("rn") <= F.col("cnt") - 3))
     return periodogram(trimmed, "band", "bjd", "mag",
                        min_freq=0.05, max_freq=2.0, n_freqs=400)
+
+
+@query("q_media_exif", oracle=None)  # binary metadata walk: rows-only
+def q_media_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXIF metadata extraction (r12 s4): JPEG APP1 / TIFF IFD walks
+    executor-side — orientation, camera, capture time, exposure
+    triangle, declared dims, GPS-presence (the PII routing flag). The
+    fixture plants the golden EXIF JPEG alongside the regular rotation
+    so the extractor and the all-NULL passthrough both run in every
+    demo. Goldens in tests/test_multimodal.py pin exact field values;
+    adversarial fuzz pins the never-fatal contract."""
+    from ..operators.multimodal import exif_metadata, make_fake_media
+
+    return exif_metadata(make_fake_media(spark, include_exif=True))

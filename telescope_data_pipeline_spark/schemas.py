@@ -209,3 +209,16 @@ EPHEMERIS = T.StructType([
     T.StructField("plx", T.DoubleType(), True),
     T.StructField("epoch", T.DoubleType(), True),
 ])
+
+#: Multimodal column convention: opaque payload + typed metadata. The decode
+#: step is a pandas UDF over mapInPandas (stubbed where codecs are absent).
+MEDIA = T.StructType([
+    T.StructField("media_id", T.LongType(), False),
+    T.StructField("modality", T.StringType(), False),   # image|audio|video
+    T.StructField("payload", T.BinaryType(), True),      # opaque encoded bytes
+    T.StructField("mime", T.StringType(), True),
+    T.StructField("width", T.IntegerType(), True),
+    T.StructField("height", T.IntegerType(), True),
+    T.StructField("duration_s", T.DoubleType(), True),
+    T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
+])

@@ -315,7 +315,7 @@ def test_running_stats_tws_matches_legacy_and_batch(spark):
 
     The transformWithState state server speaks protobuf; environments
     without google.protobuf (like this container) can't run it, so the
-    test is gated the same way as the astropy FITS path."""
+    test is gated the same way as the PIL/soundfile/astropy codecs."""
     pytest.importorskip("google.protobuf")
     from telescope_data_pipeline_spark.streaming.stateful import running_stats_tws
 
