@@ -1623,15 +1623,11 @@ def _decode_webp(payload: bytes) -> np.ndarray:
     inside ANMF animation frames) to the first VP8L lossless bitstream
     and decodes it with full RFC 9649 semantics — all four transforms,
     color cache, LZ77 (incl. the 2-D distance map), meta prefix codes.
-    Lossy (VP8) payloads decode with the pure-Python RFC 6386 key-frame
-    decoder (operators/vp8.py) in STRICT mode: the luma plane is
-    returned as the grayscale channel, and any bitstream desync raises
-    typed CodecUnavailable instead of returning unverified pixels
-    (falling back to PIL when it is installed)."""
+    Lossy (VP8) payloads decode through PIL when it is installed and
+    raise typed CodecUnavailable otherwise."""
     b = bytes(payload)
     try:
         vp8l = _webp_find_vp8l(b)
-        vp8 = _webp_find_chunk(b, b"VP8 ") if vp8l is None else None
     except (IndexError, ValueError, struct.error) as e:
         raise CodecUnavailable(f"truncated or corrupt WebP: {e}") from e
     if vp8l is not None:
@@ -1639,54 +1635,14 @@ def _decode_webp(payload: bytes) -> np.ndarray:
             return _decode_vp8l(vp8l)
         except (IndexError, ValueError, struct.error) as e:
             raise CodecUnavailable(f"truncated or corrupt VP8L: {e}") from e
-    if vp8 is not None:
-        from .vp8 import decode_vp8
-
-        try:
-            frame = decode_vp8(vp8, strict=True)
-            return np.ascontiguousarray(frame.y, dtype=np.float32)
-        except (IndexError, ValueError, struct.error) as e:
-            if _pil_image is not None:
-                import io
-
-                with _pil_image.open(io.BytesIO(b)) as im:
-                    return np.asarray(im.convert("L"), dtype=np.float32)
-            raise CodecUnavailable(
-                f"lossy VP8 decode failed ({e}); PIL fallback not "
-                "installed") from e
     if _pil_image is not None:
         import io
 
         with _pil_image.open(io.BytesIO(b)) as im:
             return np.asarray(im.convert("L"), dtype=np.float32)
     raise CodecUnavailable(
-        "WebP payload has neither a VP8L (lossless) nor a VP8 (lossy) "
-        "bitstream this decoder can read")
-
-
-def _webp_find_chunk(b: bytes, fourcc: bytes) -> bytes | None:
-    """First chunk with the given fourcc (top level or inside ANMF)."""
-    if b[:4] != b"RIFF" or b[8:12] != b"WEBP":
-        raise ValueError("not a RIFF/WEBP container")
-
-    def walk(lo: int, hi: int) -> bytes | None:
-        pos = lo
-        while pos + 8 <= hi:
-            cc = b[pos:pos + 4]
-            size = int.from_bytes(b[pos + 4:pos + 8], "little")
-            body = pos + 8
-            if body + size > hi:
-                raise ValueError(f"chunk {cc!r} overruns container")
-            if cc == fourcc:
-                return b[body:body + size]
-            if cc == b"ANMF":
-                found = walk(body + 16, body + size)
-                if found is not None:
-                    return found
-            pos = body + size + (size & 1)
-        return None
-
-    return walk(12, min(len(b), 8 + int.from_bytes(b[4:8], "little")))
+        "WebP payload has no VP8L (lossless) bitstream; lossy VP8 "
+        "needs PIL")
 
 
 def _webp_find_vp8l(b: bytes) -> bytes | None:
@@ -1919,11 +1875,8 @@ def decode_image(payload: bytes) -> np.ndarray:
 
     Dispatch by MAGIC BYTES: BMP, PNG (sequential + Adam7, 8/16-bit),
     JPEG (baseline + progressive), GIF, baseline TIFF, WebP/VP8L
-    (lossless, all transforms), lossy WebP/VP8 key frames
-    (strict-mode pure-Python RFC 6386 decode; a bitstream desync
-    raises typed CodecUnavailable, never silent wrong pixels), Netpbm
-    P1-P6, and ICO/CUR favicons (largest entry; embedded PNG or DIB)
-    decode with the built-in pure-Python decoders (always available);
+    (lossless, all transforms), Netpbm P1-P6, and ICO/CUR favicons
+    (largest entry; embedded PNG or DIB) decode with the built-in pure-Python decoders (always available);
     anything else is a synthetic fixture and takes the deterministic
     stub."""
     if payload is None:
@@ -2977,21 +2930,6 @@ def _tiny_wav(rng: np.random.Generator, duration_s: float,
     return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
 
-#: A real, decodable LOSSY WebP (VP8 key frame, 32x32, two token
-#: partitions, skip flags, loop filter level 18, all intra-mode
-#: families): a pinned vector produced by the test-suite's RFC 6386
-#: reference encoder (tests/test_vp8.py::_FrameWriter) and decoded
-#: strictly by operators/vp8.py. Stored as a literal so the fixture
-#: path never depends on test code.
-_TINY_WEBP_LOSSY = __import__("base64").b64decode(
-    "UklGRkYAAABXRUJQVlA4IDoAAACwAgCdASogACAABIEYCAArS5BqKDdY90s+3FVK"
-    "w4MAFQAA/sm1A4fVxeN31Xrtn0H//BIaGAAA/SEA")
-
-
-def _tiny_webp_lossy() -> bytes:
-    return _TINY_WEBP_LOSSY
-
-
 def _tiny_pnm(rng) -> bytes:
     """A real raw P6 pixmap (8x6 RGB) for fixture rotation."""
     px = rng.integers(0, 256, size=(6, 8, 3), dtype=np.uint8)
@@ -3012,7 +2950,6 @@ def _tiny_ico(rng) -> bytes:
 
 
 def make_fake_media(spark, n: int = 64, seed: int = 7,
-                    include_lossy_vp8: bool = False,
                     include_pnm_ico: bool = False,
                     include_exif: bool = False) -> DataFrame:
     """Deterministic MEDIA-schema fixture (images + videos + audio) for
@@ -3021,10 +2958,8 @@ def make_fake_media(spark, n: int = 64, seed: int = 7,
     next a REAL lossless WebP (VP8L), and every 4th audio clip a REAL
     16-bit PCM WAV, so the built-in pure-Python decoders run in every
     demo alongside the stub path (magic-byte dispatch exercised
-    end-to-end). ``include_lossy_vp8=True`` replaces the stub-image
-    slot with the planted LOSSY WebP (VP8 key frame) pinned vector;
-    ``include_pnm_ico=True`` instead alternates that slot between a
-    real raw P6 pixmap and a real DIB-payload favicon;
+    end-to-end). ``include_pnm_ico=True`` alternates the stub-image
+    slot between a real raw P6 pixmap and a real DIB-payload favicon;
     ``include_exif=True`` instead plants the EXIF-carrying JPEG
     (_tiny_exif_jpeg) there — each kept opt-in so the long-standing
     fixture rotation (and the goldens pinned on it) is byte-stable."""
@@ -3044,9 +2979,6 @@ def make_fake_media(spark, n: int = 64, seed: int = 7,
             m = "image/png"
         elif modality == "image" and (i // 3) % 4 == 2:
             payload = _tiny_webp(rng)
-            m = "image/webp"
-        elif modality == "image" and include_lossy_vp8:
-            payload = _tiny_webp_lossy()
             m = "image/webp"
         elif modality == "image" and include_exif:
             payload = _tiny_exif_jpeg()
@@ -3214,8 +3146,8 @@ def decode_webp_frames(payload: bytes) -> dict:
     """Animated WebP frame extraction (the still-image sibling of the
     MP4/Matroska frame sampling): walks the top-level VP8X + ANIM +
     ANMF chunks of the container spec and decodes EVERY frame's
-    bitstream with the existing pure-Python decoders (VP8L lossless;
-    strict-mode RFC 6386 VP8 key frames). Returns::
+    bitstream with the existing pure-Python VP8L lossless decoder
+    (a lossy VP8 frame raises typed CodecUnavailable). Returns::
 
         {"loop_count": int, "background_argb": int, "frames": [
            {"index", "x", "y", "width", "height", "duration_ms",
@@ -3249,13 +3181,8 @@ def decode_webp_frames(payload: bytes) -> dict:
                 except (IndexError, ValueError, struct.error) as e:
                     raise CodecUnavailable(f"corrupt frame VP8L: {e}") from e
             if cc == b"VP8 ":
-                from .vp8 import decode_vp8
-
-                try:
-                    fr = decode_vp8(sub[body:body + size], strict=True)
-                    return np.ascontiguousarray(fr.y, dtype=np.float32)
-                except (IndexError, ValueError, struct.error) as e:
-                    raise CodecUnavailable(f"corrupt frame VP8: {e}") from e
+                raise CodecUnavailable("lossy VP8 ANMF frame: no "
+                                       "pure-Python decoder")
             pos = body + size + (size & 1)  # skip ALPH etc., 2-aligned
         raise CodecUnavailable("ANMF frame carries no VP8/VP8L bitstream")
 
