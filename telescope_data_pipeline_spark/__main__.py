@@ -11,19 +11,26 @@ Spark job.
 Mirrors the reference lifecycle (psf_phot.py:9-98): manifest scan →
 FITS decode → FWHM → align+stack → detect → PSF-star mask → photometry
 → WCS solve → four sinks (CSV results, FITS stacked+WCS header, PDF
-diagnostics, TXT run statistics). The reference loops epochs
-sequentially in one process; here a pass is ONE Spark query: the FITS
-files, keyed by the manifest, are shuffled by epoch into one grouped
-kernel (``plans.pipeline.epoch_records``) that decodes each frame and
-runs the whole chain of its epoch in numpy; the same query renders each
-epoch's CSV rows and TXT line, and one Arrow collect brings back what
-the four sinks need. The driver then replaces ``csv/``, ``fits/``,
-``pdf/`` and ``txt/`` under ``--out`` and writes them, as the reference
-writes its four sinks per image set from one process
-(psf_phot.py:91-94). A corrupt FITS file is dropped by the decode's
-failure path instead of killing the run; the summary line names every
-epoch without catalog rows (with its outcome), the frames the run could
-not use, and a PDF cut at its page cap.
+diagnostics, TXT run statistics). As the reference does
+(psf_phot.py:41-45), the driver reads the manifest into (filename,
+epoch_id) pairs and lists the ``*.fits`` files directly in ``--images``;
+a missing input fails there, naming its path, before Spark starts and
+before any sink is touched. The reference then loops epochs
+sequentially in one process; here a pass is ONE Spark stage: a
+``mapInPandas`` over one row per listed epoch
+(``plans.pipeline.listed_epoch_records``) whose tasks open and decode
+their own epochs' frames and run each epoch's whole chain in numpy. The
+same query renders each epoch's CSV rows and TXT line, and one Arrow
+collect brings back what the four sinks need. The driver then replaces
+``csv/``, ``fits/``, ``pdf/`` and ``txt/`` under ``--out`` and writes
+them, as the reference writes its four sinks per image set from one
+process (psf_phot.py:91-94). A corrupt FITS file is dropped by the
+decode's failure path instead of killing the run; a manifest name that
+is not a ``*.fits`` file directly in ``--images`` (``sub/x.fits``,
+``../x.fits``) is never opened and counts as a manifest row with no
+file. The summary line names every epoch without catalog rows (with its
+outcome), the frames the run could not use, and a PDF cut at its page
+cap.
 """
 
 from __future__ import annotations
@@ -89,23 +96,17 @@ def main(argv: list[str] | None = None) -> None:
                         "(default: each stack's own width and height)")
     args = p.parse_args(argv)
 
-    from pyspark.sql import functions as F
-
-    from .plans.pipeline import EPOCH_SCHEMA, epoch_records
+    from .plans.pipeline import EPOCH_SCHEMA, listed_epoch_records
     from .session import get_spark
-    from .sources.fits import fits_files, write_fits_files
+    from .sources.fits import fits_names, read_manifest, write_fits_files
     from .sources.pdf import diagnostics_pdf
     from .sources.sinks import write_text_part
-    from .sources.tables import ensure_read_confs
 
+    manifest = read_manifest(args.manifest)
+    on_disk = fits_names(args.images)
     spark = get_spark("telescope-pipeline")
-    ensure_read_confs(spark)
-
-    manifest = (spark.read.schema("filename string, epoch_id int")
-                .csv(args.manifest))
-    files = fits_files(spark, args.images)
-    records = _collect(epoch_records(files.join(F.broadcast(manifest), "filename"),
-                                     size=args.size, manifest=manifest))
+    records = _collect(listed_epoch_records(spark, args.images, manifest, on_disk,
+                                            size=args.size))
     stacked = [r for r in records if r["pixels"] is not None]
 
     # replace, not add to, a previous run's sinks: no stale epoch survives
@@ -128,7 +129,6 @@ def main(argv: list[str] | None = None) -> None:
     write_text_part(os.path.join(args.out, "txt", "stats.txt"),
                     [r["txt"] for r in records if r["txt"] is not None], ".txt")
 
-    on_disk = {f.rsplit("/", 1)[-1] for f in files.inputFiles()}
     print(_summary(records, on_disk, n_fits, n_pages, args.out))
 
 

@@ -7,7 +7,7 @@ Re-expression of the reference's per-image NumPy kernels (SURVEY.md
   frames (:func:`fwhm_sigma`, :func:`find_stars`, :func:`match_shifts`,
   :func:`stack_frames`). An image set never needs to be split across
   executors (SURVEY.md §1 D1), so the CLI runs the whole chain for an
-  epoch in ONE grouped kernel (``plans.pipeline.epoch_records``).
+  epoch in ONE kernel call (``plans.pipeline.process_epoch``).
 - The public step operators (:func:`measure_fwhm`, :func:`detect_stars`,
   :func:`estimate_shifts`, :func:`align_and_stack`) are thin Arrow
   adapters over the same functions: ``mapInPandas`` per image,

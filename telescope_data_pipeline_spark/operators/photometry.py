@@ -1,8 +1,8 @@
 """PSF-star selection and PSF photometry (reference core.py:281-484).
 
 Both steps are pure numpy functions over one epoch's stacked image and
-its detections, called by the per-epoch kernel in
-``plans.pipeline.epoch_records``:
+its detections, called by the per-epoch kernel
+``plans.pipeline.process_epoch``:
 
 - :func:`psf_star_mask` is the selection mask (core.py:281-342
   ``image_mask``): border and saturation predicates, a crowding test

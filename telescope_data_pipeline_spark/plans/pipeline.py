@@ -5,12 +5,17 @@ manifest scan → per-epoch loop → decode → FWHM → align+stack → detect 
 mask → photometry → WCS → sinks. An image set never needs to be split
 across executors (SURVEY.md §1 D1) and holds a few frames and a few
 dozen stars, so the whole chain for one epoch is ONE numpy function,
-:func:`process_epoch`, and :func:`epoch_records` runs it in a single
-``groupBy("epoch_id").applyInPandas``: one shuffle of frames (decoded
-IMAGE rows, or the raw file bytes, which the kernel decodes), then one
-task per group of epochs. The reference's sequential per-epoch loop
+:func:`process_epoch`. The reference's sequential per-epoch loop
 becomes task parallelism across epochs, without the fixed cost of a
-Spark stage per step.
+Spark stage per step. Two adapters run it:
+
+- :func:`listed_epoch_records` (the CLI): the manifest and the file
+  listing are read on the driver, and one ``mapInPandas`` over one row
+  per listed epoch runs as ONE stage with no shuffle; each task opens
+  and decodes its own epochs' frames.
+- :func:`epoch_records` (frames already decoded into a DataFrame, e.g.
+  ``sources.fits.scan_fits_dir``): one ``groupBy("epoch_id")
+  .applyInPandas``, one shuffle of the frames.
 
 Each epoch yields one record (EPOCH_SCHEMA): the stacked pixels, the
 rows of every step, the TXT statistics, the FITS header inputs, the WCS
@@ -30,12 +35,13 @@ job and never goes missing silently.
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+import os
+from collections.abc import Collection, Iterator, Mapping, Sequence
 from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -230,46 +236,69 @@ def _frame(row: Mapping) -> Frame:
                  jd_mid, dict(row["header"] or {}))
 
 
-def epoch_records(images: DataFrame, size: int | None = None,
-                  manifest: DataFrame | None = None) -> DataFrame:
-    """Frames → one EPOCH_SCHEMA record per epoch, from
-    :func:`process_epoch` in one grouped kernel.
+def _record_frame(rec: dict) -> pd.DataFrame:
+    """A :func:`process_epoch` record as a one-row EPOCH_SCHEMA frame."""
+    return pd.DataFrame([[rec.get(c) for c in EPOCH_SCHEMA.names]],
+                        columns=EPOCH_SCHEMA.names)
 
-    ``images`` holds either decoded frames (schemas.IMAGE rows, e.g.
-    from ``sources.fits.scan_fits_dir``) or undecoded files: (epoch_id,
-    filename, content) rows, e.g. ``sources.fits.fits_files`` joined to
-    the manifest. Files are decoded inside the kernel by
-    ``sources.fits.image_row``, so their bytes cross into Python once;
-    a file that does not decode is left out like a missing one.
 
-    ``manifest`` (filename, epoch_id) adds a record for every listed
-    epoch, also those with no decodable frame (outcome ``no_frames``),
-    and fills ``listed``/``missing``. Frames with no epoch (no manifest
-    row) are left out. The result is lazy; cache it when more than one
-    output reads it."""
-    payload = "content" if "content" in images.columns else "pixels"
-    columns = (["epoch_id", "filename", "content"] if payload == "content" else
-               ["epoch_id", "filename", "band", "width", "height", "pixels",
-                "airmass", "date_obs", "exptime", "header"])
-    frames = images.filter(F.col("epoch_id").isNotNull()).select(*columns)
-    if manifest is not None:
-        frames = frames.unionByName(
-            manifest.filter(F.col("epoch_id").isNotNull())
-            .select("epoch_id", "filename"),
-            allowMissingColumns=True)
+def epoch_records(images: DataFrame, size: int | None = None) -> DataFrame:
+    """Decoded frames (schemas.IMAGE rows, e.g. from
+    ``sources.fits.scan_fits_dir``) → one EPOCH_SCHEMA record per epoch,
+    from :func:`process_epoch` in one grouped kernel. Frames with no
+    epoch (no manifest row) are left out. The result is lazy; cache it
+    when more than one output reads it."""
+    frames = (images.filter(F.col("epoch_id").isNotNull())
+              .select("epoch_id", "filename", "band", "width", "height",
+                      "pixels", "airmass", "date_obs", "exptime", "header"))
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        has_frame = pdf[payload].notna()
-        rows = pdf[has_frame].to_dict("records")
-        if payload == "content":
-            rows = [image_row(r["filename"], r["content"]) for r in rows]
-        rec = process_epoch(int(pdf["epoch_id"].iloc[0]),
-                            [_frame(r) for r in rows if r is not None], size,
-                            listed=pdf.loc[~has_frame, "filename"].tolist())
-        return pd.DataFrame([[rec.get(c) for c in EPOCH_SCHEMA.names]],
-                            columns=EPOCH_SCHEMA.names)
+        return _record_frame(process_epoch(
+            int(pdf["epoch_id"].iloc[0]),
+            [_frame(r) for r in pdf.to_dict("records")], size))
 
     return frames.groupBy("epoch_id").applyInPandas(kernel, schema=EPOCH_SCHEMA)
+
+
+def listed_epoch_records(spark: SparkSession, images: str,
+                         manifest: Sequence[tuple[str, int]],
+                         on_disk: Collection[str],
+                         size: int | None = None) -> DataFrame:
+    """One EPOCH_SCHEMA record per epoch of ``manifest``, the
+    (filename, epoch_id) pairs of ``sources.fits.read_manifest``, from
+    :func:`process_epoch` in one ``mapInPandas`` over one row per epoch:
+    one stage of ``min(epochs, defaultParallelism)`` tasks, no shuffle.
+
+    Each task opens its epochs' files in the directory ``images`` and
+    decodes them with ``sources.fits.image_row``. Only names in
+    ``on_disk`` (``sources.fits.fits_names``) are opened, so no path
+    outside ``images`` is. Every manifest row is in its epoch's
+    ``listed``, and a name listed under two epochs feeds both; a listed
+    name that is not on disk or does not decode is ``missing``, and an
+    epoch with no frame left has outcome ``no_frames``."""
+    by_epoch: dict[int, list[str]] = {}
+    for name, epoch in manifest:
+        by_epoch.setdefault(epoch, []).append(name)
+    epochs = sorted(by_epoch)
+
+    def frames(names: list[str]) -> Iterator[Frame]:
+        for name in names:
+            if name in on_disk:
+                with open(os.path.join(images, name), "rb") as fh:
+                    row = image_row(name, fh.read())
+                if row is not None:
+                    yield _frame(row)
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for i in pdf["id"]:
+                names = by_epoch[epochs[i]]
+                yield _record_frame(process_epoch(epochs[i], list(frames(names)),
+                                                  size, listed=names))
+
+    tasks = max(1, min(len(epochs), spark.sparkContext.defaultParallelism))
+    return (spark.range(len(epochs), numPartitions=tasks)
+            .mapInPandas(kernel, schema=EPOCH_SCHEMA))
 
 
 def pipeline_stages(records: DataFrame) -> dict[str, DataFrame]:
@@ -307,6 +336,6 @@ def run_photometry_pipeline(images: DataFrame,
     ``catalog.clearCache()``; to scope it, call :func:`epoch_records`
     and :func:`pipeline_stages` directly and unpersist the records. A
     caller that reads the records once needs no cache: ``__main__.main``
-    reads what every sink needs from :func:`epoch_records` in one
+    reads what every sink needs from :func:`listed_epoch_records` in one
     ``toArrow()`` collect."""
     return pipeline_stages(epoch_records(images, size=size).cache())

@@ -139,9 +139,13 @@ def q_pipeline_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pipeline_photometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end photometry chain (reference psf_phot.py:9-98): FWHM ->
     detect -> NN-match shifts -> sigma-clipped median stack -> PSF-star
-    mask -> empirical-PSF photometry, one numpy kernel per epoch run in
-    one grouped ``applyInPandas`` (plans.pipeline.epoch_records), epochs
-    in parallel as tasks; the catalog rows are its photometry column."""
+    mask -> empirical-PSF photometry, one numpy kernel per epoch
+    (plans.pipeline.process_epoch), epochs in parallel as tasks; the
+    catalog rows are its photometry column. The frames here are an
+    in-memory DataFrame, so the kernel runs in one grouped
+    ``applyInPandas`` (plans.pipeline.epoch_records) after a shuffle of
+    the frames; the CLI, which reads files, runs the same kernel in one
+    stage without a shuffle (plans.pipeline.listed_epoch_records)."""
     from ..operators.images import make_synthetic_images
     from ..plans.pipeline import run_photometry_pipeline
 
@@ -187,7 +191,10 @@ def q_periodogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_scan_fits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FITS image source (reference core.py:18-50): binaryFile scan ->
     mapInPandas decode (stubbed codec) -> IMAGE rows with promoted typed
-    header columns, epoch ids from a broadcast manifest join."""
+    header columns, epoch ids from a broadcast manifest join. Every call
+    writes the same six frames into one fixed directory; each frame is
+    written under a hidden name and renamed into place, so a scan never
+    sees a partly written file."""
     import os
     import tempfile
 
@@ -195,13 +202,15 @@ def q_scan_fits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.fits import scan_fits_dir, write_fake_fits
 
-    d = tempfile.mkdtemp(prefix="tdps_fits_")
+    d = os.path.join(tempfile.gettempdir(), "tdps_scan_fits")
+    os.makedirs(d, exist_ok=True)
     rng = np.random.default_rng(5)
     for i in range(6):
-        write_fake_fits(os.path.join(d, f"img{i}.fits"),
-                        rng.normal(100, 2, (32, 32)).astype(np.float32),
+        tmp = os.path.join(d, f".img{i}.fits.{os.getpid()}")
+        write_fake_fits(tmp, rng.normal(100, 2, (32, 32)).astype(np.float32),
                         {"FILTER": "V", "AIRMASS": "1.2", "EXPTIME": "60.0",
                          "DATE-OBS": "2024-03-01T00:00:00", "SITEID": "syn"})
+        os.replace(tmp, os.path.join(d, f"img{i}.fits"))
     manifest = spark.createDataFrame(
         [(f"img{i}.fits", i // 3) for i in range(6)],
         "filename string, epoch_id int")

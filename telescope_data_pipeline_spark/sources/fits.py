@@ -5,9 +5,14 @@ astropy and pulls HDU-1 pixels + header. Here one pure function,
 :func:`image_row`, decodes one file's bytes into a schemas.IMAGE row;
 every path that decodes calls it: :func:`scan_fits_dir` (a
 ``binaryFile`` scan, then a ``mapInPandas`` decode into IMAGE rows), the
-CLI's per-epoch kernel (``plans.pipeline.epoch_records``, which decodes
-the ``binaryFile`` rows of one epoch inside its grouped kernel) and the
-``fits`` Python data source.
+CLI's per-epoch kernel (``plans.pipeline.listed_epoch_records``, whose
+tasks open and decode their own epochs' files) and the ``fits`` Python
+data source.
+
+The CLI's inputs are read on the driver, as the reference reads its
+manifest (psf_phot.py:41-45): :func:`read_manifest` gives the
+(filename, epoch_id) pairs of the manifest CSV and :func:`fits_names`
+the ``*.fits`` files directly in the image directory.
 
 ``_decode_fits`` dispatches to astropy when installed (real FITS
 files), falling back to the minimal header-card + big-endian float
@@ -22,6 +27,7 @@ rows or, through :func:`write_fits_rows`, from a DataFrame.
 
 from __future__ import annotations
 
+import csv
 import io
 import os
 import struct
@@ -237,20 +243,49 @@ def write_fits_rows(rows: DataFrame, out_dir: str, target_ra: float = 150.0,
                        "pix_scale").mapInPandas(write_kernel, schema=FITS_SINK_SCHEMA)
 
 
-def fits_files(spark: SparkSession, path: str) -> DataFrame:
-    """The ``*.fits`` files under ``path`` as (filename, content) rows of
-    a binaryFile scan, ``filename`` the basename; ``inputFiles()`` lists
-    them without reading any."""
-    return (spark.read.format("binaryFile")
-            .option("pathGlobFilter", "*.fits")
-            .load(path)
-            .select(F.element_at(F.split("path", "/"), -1).alias("filename"),
-                    "content"))
+def _int32(text: str) -> int | None:
+    """``text`` as Spark's CSV reader parses an int column (Java's
+    ``Integer.parseInt``: a sign and digits, no blanks), or None."""
+    if text != text.strip() or "_" in text:
+        return None
+    try:
+        value = int(text)
+    except ValueError:
+        return None
+    return value if -2**31 <= value < 2**31 else None
+
+
+def read_manifest(path: str) -> list[tuple[str, int]]:
+    """The (filename, epoch_id) rows of the manifest CSV at ``path``, in
+    file order, as ``spark.read.schema("filename string, epoch_id
+    int").csv(path)`` reads them, less the rows whose epoch_id is null:
+    blank lines are skipped, columns past the second are ignored, and an
+    epoch that is not a plain 32-bit integer (`` 3``, ``3.0``, ``x``, a
+    header row) is null. Spark reads an empty filename as null; here it
+    is ``""``, a listed name that no file has. A missing ``path`` raises
+    FileNotFoundError naming it."""
+    with open(path, newline="", encoding="utf-8", errors="replace") as fh:
+        rows = [(row[0], _int32(row[1])) for row in csv.reader(fh)
+                if len(row) > 1]
+    return [(name, epoch) for name, epoch in rows if epoch is not None]
+
+
+def fits_names(path: str) -> set[str]:
+    """The names of the ``*.fits`` files directly in the directory
+    ``path``, as a binaryFile scan with ``pathGlobFilter="*.fits"``
+    lists them: regular files, none whose name starts with ``.`` or
+    ``_``. A missing ``path`` raises FileNotFoundError naming it."""
+    with os.scandir(path) as entries:
+        return {e.name for e in entries
+                if e.is_file() and e.name.endswith(".fits")
+                and not e.name.startswith((".", "_"))}
 
 
 def scan_fits_dir(spark: SparkSession, path: str,
                   manifest: DataFrame | None = None) -> DataFrame:
-    """binaryFile scan → :func:`image_row` decode → schemas.IMAGE rows.
+    """binaryFile scan of the ``*.fits`` files under ``path`` →
+    :func:`image_row` decode → schemas.IMAGE rows, ``filename`` the
+    basename.
 
     ``manifest`` (schemas.MANIFEST: filename → epoch_id, the reference's
     CSV at psf_phot.py:41) assigns grouping keys via a broadcast join on
@@ -264,7 +299,12 @@ def scan_fits_dir(spark: SparkSession, path: str,
             yield pd.DataFrame([r for r in rows if r is not None],
                                columns=[f.name for f in IMAGE.fields])
 
-    decoded = fits_files(spark, path).mapInPandas(decode, schema=IMAGE)
+    decoded = (spark.read.format("binaryFile")
+               .option("pathGlobFilter", "*.fits")
+               .load(path)
+               .select(F.element_at(F.split("path", "/"), -1).alias("filename"),
+                       "content")
+               .mapInPandas(decode, schema=IMAGE))
     if manifest is not None:
         decoded = (decoded.drop("epoch_id")
                    .join(F.broadcast(manifest), on="filename", how="left")

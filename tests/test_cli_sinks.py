@@ -30,11 +30,11 @@ def test_cli_rerun_replaces_sink_outputs(spark, tmp_path):
     assert got == read_outputs(tmp_path / "fresh")
 
 
-def _spark_work(spark, images, manifest, out) -> tuple[int, int]:
-    """(jobs, stages) of one CLI pass, counted under its own job group
-    after the listener bus has delivered every event; stages skipped
-    because their shuffle output was reused ran no task and are not
-    counted."""
+def _spark_work(spark, images, manifest, out) -> tuple[int, int, int]:
+    """(jobs, stages, tasks) of one CLI pass, counted under its own job
+    group after the listener bus has delivered every event; stages
+    skipped because their shuffle output was reused ran no task and are
+    not counted."""
     sc = spark.sparkContext
     group = f"cli-pass-{out.name}"
     sc.setJobGroup(group, "one CLI pass")
@@ -45,20 +45,22 @@ def _spark_work(spark, images, manifest, out) -> tuple[int, int]:
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
-    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds
+    stages = [info for j in jobs for s in tracker.getJobInfo(j).stageIds
               if (info := tracker.getStageInfo(s)) is not None
               and info.numCompletedTasks + info.numFailedTasks]
-    return len(jobs), len(stages)
+    return len(jobs), len(stages), sum(s.numTasks for s in stages)
 
 
 def test_cli_pass_runs_one_spark_query(spark, tmp_path):
-    """A pass is one query: the manifest broadcast, the scan shuffled by
-    epoch, and the kernel stage the sinks collect from — three jobs of
-    one stage each, whatever the number of epochs."""
+    """A pass is one stage: the kernel over one row per listed epoch,
+    which the sinks collect from, in min(epochs, defaultParallelism)
+    tasks — no manifest broadcast, file scan or shuffle."""
+    cores = spark.sparkContext.defaultParallelism
     three = _spark_work(spark, *write_night(tmp_path / "n3", seed=7), tmp_path / "out3")
     two = _spark_work(spark, *write_night(tmp_path / "n2", seed=7, epochs=2),
                       tmp_path / "out2")
-    assert three == two == (3, 3)
+    assert three == (1, 1, min(3, cores))
+    assert two == (1, 1, min(2, cores))
 
 
 def _header_row(**overrides) -> dict:
