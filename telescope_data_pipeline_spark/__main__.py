@@ -16,21 +16,22 @@ diagnostics, TXT run statistics). As the reference does
 epoch_id) pairs and lists the ``*.fits`` files directly in ``--images``;
 a missing input fails there, naming its path, before Spark starts and
 before any sink is touched. The reference then loops epochs
-sequentially in one process; here a pass is ONE Spark stage: a
-``mapInPandas`` over one row per listed epoch
-(``plans.pipeline.listed_epoch_records``) whose tasks open and decode
-their own epochs' frames and run each epoch's whole chain in numpy. The
-same query renders each epoch's CSV rows and TXT line, and one Arrow
-collect brings back what the four sinks need. The driver then replaces
-``csv/``, ``fits/``, ``pdf/`` and ``txt/`` under ``--out`` and writes
-them, as the reference writes its four sinks per image set from one
-process (psf_phot.py:91-94). A corrupt FITS file is dropped by the
-decode's failure path instead of killing the run; a manifest name that
-is not a ``*.fits`` file directly in ``--images`` (``sub/x.fits``,
-``../x.fits``) is never opened and counts as a manifest row with no
-file. The summary line names every epoch without catalog rows (with its
-outcome), the frames the run could not use, and a PDF cut at its page
-cap.
+sequentially in one process; here a pass is ONE RDD job of one stage
+(``plans.pipeline.night_records``), with no DataFrame and no Spark SQL:
+its tasks open and decode their own epochs' frames, run each epoch's
+whole chain in numpy and render the epoch's CSV rows and TXT line, and
+one collect brings back, pickled, what the four sinks need. The driver
+then replaces ``csv/``, ``fits/``, ``pdf/`` and ``txt/`` under
+``--out`` and writes them, as the reference writes its four sinks per
+image set from one process (psf_phot.py:91-94). A corrupt FITS file, or
+one with no pixels, is dropped by the decode's failure path instead of
+killing the run, and an epoch whose frames differ in shape gets the
+outcome ``mixed_shapes`` (no stack, no rows) while the other epochs are
+written; a manifest name that is not a ``*.fits`` file directly in
+``--images`` (``sub/x.fits``, ``../x.fits``) is never opened and counts
+as a manifest row with no file. The summary line names every epoch
+without catalog rows (with its outcome), the frames the run could not
+use, and a PDF cut at its page cap.
 """
 
 from __future__ import annotations
@@ -42,7 +43,9 @@ import shutil
 
 def _summary(records: list, on_disk: set[str], n_fits: int, n_pages: int,
              out: str) -> str:
-    stacked = [r for r in records if r["n_frames"]]
+    from .plans.pipeline import UNSTACKED
+
+    stacked = [r for r in records if r["outcome"] not in UNSTACKED]
     n_phot = sum(r["n_results"] or 0 for r in records)
     parts = [f"pipeline done: {len(stacked)} epochs, {n_phot} photometry rows, "
              f"{n_fits} FITS files, {n_pages} PDF pages -> {out}"]
@@ -63,27 +66,6 @@ def _summary(records: list, on_disk: set[str], n_fits: int, n_pages: int,
     return "; ".join(parts)
 
 
-def _collect(records) -> list[dict]:
-    """The columns the sinks and the summary need, with each epoch's CSV
-    rows and TXT line rendered, in one Arrow collect; one dict per epoch
-    in epoch order, nulls as None, pixels as numpy arrays."""
-    from pyspark.sql import functions as F
-
-    from .sources.sinks import stats_line
-
-    table = records.select(
-        "epoch_id", "outcome", "n_frames", "n_results", "listed", "missing",
-        "width", "height", "pixels", "avg_airmass", "jd_mid", "base_header",
-        "crval_ra", "crval_dec", "pix_scale",
-        F.transform("photometry", lambda p: F.to_csv(p)).alias("csv"),
-        F.when(F.col("n_sources") > 0, stats_line()).alias("txt"),
-    ).toArrow()
-    rows = table.drop_columns(["pixels"]).to_pylist()
-    for row, px in zip(rows, table.column("pixels")):
-        row["pixels"] = px.values.to_numpy() if px.is_valid else None
-    return sorted(rows, key=lambda r: r["epoch_id"])
-
-
 def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser(prog="telescope_data_pipeline_spark",
                                 description=__doc__)
@@ -96,7 +78,7 @@ def main(argv: list[str] | None = None) -> None:
                         "(default: each stack's own width and height)")
     args = p.parse_args(argv)
 
-    from .plans.pipeline import EPOCH_SCHEMA, listed_epoch_records
+    from .plans.pipeline import CATALOG_FIELDS, night_records
     from .session import get_spark
     from .sources.fits import fits_names, read_manifest, write_fits_files
     from .sources.pdf import diagnostics_pdf
@@ -105,8 +87,8 @@ def main(argv: list[str] | None = None) -> None:
     manifest = read_manifest(args.manifest)
     on_disk = fits_names(args.images)
     spark = get_spark("telescope-pipeline")
-    records = _collect(listed_epoch_records(spark, args.images, manifest, on_disk,
-                                            size=args.size))
+    records = night_records(spark.sparkContext, args.images, manifest, on_disk,
+                            size=args.size)
     stacked = [r for r in records if r["pixels"] is not None]
 
     # replace, not add to, a previous run's sinks: no stale epoch survives
@@ -114,7 +96,7 @@ def main(argv: list[str] | None = None) -> None:
         shutil.rmtree(os.path.join(args.out, d), ignore_errors=True)
         os.makedirs(os.path.join(args.out, d))
     # 1. CSV results, one directory per epoch with rows (p_io.py:103-119)
-    header = ",".join(EPOCH_SCHEMA["photometry"].dataType.elementType.names)
+    header = ",".join(f.name for f in CATALOG_FIELDS)
     for r in records:
         if r["csv"]:
             write_text_part(os.path.join(args.out, "csv", f"epoch_id={r['epoch_id']}"),

@@ -6,12 +6,13 @@ Re-expression of the reference's per-image NumPy kernels (SURVEY.md
 - Every step is a pure numpy function over one frame or one epoch's
   frames (:func:`fwhm_sigma`, :func:`find_stars`, :func:`match_shifts`,
   :func:`stack_frames`). An image set never needs to be split across
-  executors (SURVEY.md §1 D1), so the CLI runs the whole chain for an
-  epoch in ONE kernel call (``plans.pipeline.process_epoch``).
+  executors (SURVEY.md §1 D1), so the whole chain for an epoch is ONE
+  kernel call (``plans.pipeline.process_epoch``), which the CLI runs in
+  the tasks of one RDD job.
 - The public step operators (:func:`measure_fwhm`, :func:`detect_stars`,
   :func:`estimate_shifts`, :func:`align_and_stack`) are thin Arrow
-  adapters over the same functions: ``mapInPandas`` per image,
-  ``applyInPandas`` per epoch.
+  adapters over the same functions for DataFrame callers:
+  ``mapInPandas`` per image, ``applyInPandas`` per epoch.
 - numpy-only: the reference leans on scipy/photutils/astropy
   (curve_fit, DAOStarFinder, EPSFBuilder); the same measurements are
   made here with moment analysis and local-maxima detection, which are

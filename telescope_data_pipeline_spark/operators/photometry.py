@@ -2,7 +2,8 @@
 
 Both steps are pure numpy functions over one epoch's stacked image and
 its detections, called by the per-epoch kernel
-``plans.pipeline.process_epoch``:
+``plans.pipeline.process_epoch`` (in the CLI's RDD tasks, and in the
+grouped ``epoch_records`` for DataFrame callers):
 
 - :func:`psf_star_mask` is the selection mask (core.py:281-342
   ``image_mask``): border and saturation predicates, a crowding test
@@ -15,7 +16,8 @@ its detections, called by the per-epoch kernel
   formulation; exact for the planted-Gaussian fixtures).
 
 :func:`select_psf_stars` and :func:`psf_photometry` are thin Arrow
-adapters over them (``applyInPandas`` per image / per epoch).
+adapters over them for DataFrame callers (``applyInPandas`` per image /
+per epoch).
 """
 
 from __future__ import annotations

@@ -7,41 +7,45 @@ across executors (SURVEY.md §1 D1) and holds a few frames and a few
 dozen stars, so the whole chain for one epoch is ONE numpy function,
 :func:`process_epoch`. The reference's sequential per-epoch loop
 becomes task parallelism across epochs, without the fixed cost of a
-Spark stage per step. Two adapters run it:
+Spark stage per step. Each epoch yields one record (EPOCH_SCHEMA): the
+stacked pixels, the rows of every step, the TXT statistics, the FITS
+header inputs, the WCS solution and a named outcome. Two adapters run
+it:
 
-- :func:`listed_epoch_records` (the CLI): the manifest and the file
-  listing are read on the driver, and one ``mapInPandas`` over one row
-  per listed epoch runs as ONE stage with no shuffle; each task opens
-  and decodes its own epochs' frames.
+- :func:`night_records` (the CLI): the manifest and the file listing
+  are read on the driver, and ONE RDD job over the epoch indices runs
+  as one stage with no shuffle and no Spark SQL; each task opens and
+  decodes its own epochs' frames and returns, pickled, the part of each
+  record the sinks read (:func:`sink_record`), its CSV rows and TXT
+  line already rendered. The CLI's plan has no relational operator, so
+  a DataFrame query would only add Catalyst's fixed cost.
 - :func:`epoch_records` (frames already decoded into a DataFrame, e.g.
   ``sources.fits.scan_fits_dir``): one ``groupBy("epoch_id")
-  .applyInPandas``, one shuffle of the frames.
-
-Each epoch yields one record (EPOCH_SCHEMA): the stacked pixels, the
-rows of every step, the TXT statistics, the FITS header inputs, the WCS
-solution and a named outcome. The sinks and :func:`pipeline_stages`
-(the per-step DataFrames) are projections of that record: the CLI
-collects the columns its four sinks need in one action, and
-:func:`run_photometry_pipeline` caches the records once for the seven
-step DataFrames.
+  .applyInPandas``, one shuffle of the frames. :func:`pipeline_stages`
+  (the per-step DataFrames) are projections of its records, which
+  :func:`run_photometry_pipeline` caches once for the seven step
+  DataFrames.
 
 Failure-path semantics: the reference's branchy per-set fallbacks
 (psf_phot.py:53-98) become the record's outcome — ``ok``, ``no_frames``
-(listed in the manifest, no decodable frame), ``no_detections`` (no
-star found in the stack) or ``no_psf_star`` (stars found, none usable
-as a PSF star, so nothing is fit) — so one bad epoch never kills the
-job and never goes missing silently.
+(listed in the manifest, no decodable frame), ``mixed_shapes`` (frames
+of different shapes, so no stack), ``no_detections`` (no star found in
+the stack) or ``no_psf_star`` (stars found, none usable as a PSF star,
+so nothing is fit) — so one bad epoch never kills the job and never
+goes missing silently.
 """
 
 from __future__ import annotations
 
+import math
 import os
-from collections.abc import Collection, Iterator, Mapping, Sequence
+from collections.abc import Collection, Iterable, Iterator, Mapping, Sequence
 from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import SparkContext
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -65,6 +69,10 @@ from ..operators.photometry import (
     psf_star_mask,
 )
 from ..sources.fits import image_row, mid_exposure_jd
+from ..sources.sinks import format_csv_row, format_stats_line
+
+#: the outcomes of an epoch with no stack
+UNSTACKED = ("no_frames", "mixed_shapes")
 
 MEAN_FWHM = 4.5   # fallback FWHM for epochs with no measurement; photometry's grouping width
 PSF_BORDER = 16   # PSF stars sit at least this far inside the frame
@@ -156,7 +164,8 @@ def process_epoch(
     top-30 WCS solve.
     ``listed``: the epoch's filenames in the manifest; those with no
     frame are reported as ``missing``. Frames are taken in filename
-    order, so the first is the reference frame.
+    order, so the first is the reference frame; frames of different
+    shapes give the outcome ``mixed_shapes`` and no stack.
     """
     frames = sorted(frames, key=lambda f: f.filename)
     planes = [np.asarray(f.pixels, dtype=np.float64) for f in frames]
@@ -165,6 +174,8 @@ def process_epoch(
                  "missing": sorted(set(listed) - {f.filename for f in frames})}
     if not frames:
         return {**rec, "outcome": "no_frames"}
+    if len({img.shape for img in planes}) > 1:  # no stack of unlike frames
+        return {**rec, "outcome": "mixed_shapes"}
 
     fwhm = []
     for f, img in zip(frames, planes):
@@ -260,14 +271,47 @@ def epoch_records(images: DataFrame, size: int | None = None) -> DataFrame:
     return frames.groupBy("epoch_id").applyInPandas(kernel, schema=EPOCH_SCHEMA)
 
 
-def listed_epoch_records(spark: SparkSession, images: str,
-                         manifest: Sequence[tuple[str, int]],
-                         on_disk: Collection[str],
-                         size: int | None = None) -> DataFrame:
-    """One EPOCH_SCHEMA record per epoch of ``manifest``, the
-    (filename, epoch_id) pairs of ``sources.fits.read_manifest``, from
-    :func:`process_epoch` in one ``mapInPandas`` over one row per epoch:
-    one stage of ``min(epochs, defaultParallelism)`` tasks, no shuffle.
+#: The catalog CSV's columns: a photometry row less its epoch key.
+CATALOG_FIELDS = [f for f in PHOT_SCHEMA.fields if f.name != "epoch_id"]
+
+#: What the CLI's sinks and summary read of a :func:`process_epoch` record.
+SINK_KEYS = ("epoch_id", "outcome", "n_frames", "n_results", "listed", "missing",
+             "width", "height", "pixels", "avg_airmass", "jd_mid", "base_header",
+             "crval_ra", "crval_dec", "pix_scale")
+
+
+def _null_nan(row: Mapping) -> dict:
+    """``row`` with NaN as None: what is rendered of a record reads a NaN
+    as a null, as Arrow does where a record crosses into a DataFrame."""
+    return {k: None if isinstance(v, float) and math.isnan(v) else v
+            for k, v in row.items()}
+
+
+def sink_record(rec: dict) -> dict:
+    """The part of a :func:`process_epoch` record that the CLI's sinks
+    and summary read (SINK_KEYS, absent keys as None), with its catalog
+    rows rendered as CSV lines (``csv``; None when the epoch has no
+    photometry column) and its TXT line (``txt``; None when no star was
+    detected), as ``F.to_csv`` and ``sources.sinks.stats_line`` render
+    them."""
+    out = {k: rec.get(k) for k in SINK_KEYS}
+    phot = rec.get("photometry")
+    out["csv"] = (None if phot is None else
+                  [format_csv_row(CATALOG_FIELDS, _null_nan(p)) for p in phot])
+    out["txt"] = (format_stats_line(_null_nan(rec))
+                  if rec.get("n_sources") else None)
+    return out
+
+
+def night_records(sc: SparkContext, images: str,
+                  manifest: Sequence[tuple[str, int]],
+                  on_disk: Collection[str],
+                  size: int | None = None) -> list[dict]:
+    """One :func:`sink_record` per epoch of ``manifest``, the
+    (filename, epoch_id) pairs of ``sources.fits.read_manifest``, in
+    epoch order, from :func:`process_epoch` in ONE RDD job: one stage of
+    ``min(epochs, defaultParallelism)`` tasks over the epoch indices, no
+    shuffle and no Spark SQL. The records come back pickled.
 
     Each task opens its epochs' files in the directory ``images`` and
     decodes them with ``sources.fits.image_row``. Only names in
@@ -289,16 +333,14 @@ def listed_epoch_records(spark: SparkSession, images: str,
                 if row is not None:
                     yield _frame(row)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for i in pdf["id"]:
-                names = by_epoch[epochs[i]]
-                yield _record_frame(process_epoch(epochs[i], list(frames(names)),
-                                                  size, listed=names))
+    def kernel(ids: Iterable[int]) -> Iterator[dict]:
+        for i in ids:
+            names = by_epoch[epochs[i]]
+            yield sink_record(process_epoch(epochs[i], list(frames(names)),
+                                            size, listed=names))
 
-    tasks = max(1, min(len(epochs), spark.sparkContext.defaultParallelism))
-    return (spark.range(len(epochs), numPartitions=tasks)
-            .mapInPandas(kernel, schema=EPOCH_SCHEMA))
+    tasks = max(1, min(len(epochs), sc.defaultParallelism))
+    return sc.parallelize(range(len(epochs)), tasks).mapPartitions(kernel).collect()
 
 
 def pipeline_stages(records: DataFrame) -> dict[str, DataFrame]:
@@ -334,8 +376,7 @@ def run_photometry_pipeline(images: DataFrame,
     result, so materializing any number of them runs the per-epoch
     kernel once. The cache lives until the session's
     ``catalog.clearCache()``; to scope it, call :func:`epoch_records`
-    and :func:`pipeline_stages` directly and unpersist the records. A
-    caller that reads the records once needs no cache: ``__main__.main``
-    reads what every sink needs from :func:`listed_epoch_records` in one
-    ``toArrow()`` collect."""
+    and :func:`pipeline_stages` directly and unpersist the records. The
+    CLI (``__main__.main``) reads no DataFrame: it collects what every
+    sink needs from :func:`night_records`."""
     return pipeline_stages(epoch_records(images, size=size).cache())

@@ -145,7 +145,8 @@ def q_pipeline_photometry(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-memory DataFrame, so the kernel runs in one grouped
     ``applyInPandas`` (plans.pipeline.epoch_records) after a shuffle of
     the frames; the CLI, which reads files, runs the same kernel in one
-    stage without a shuffle (plans.pipeline.listed_epoch_records)."""
+    RDD stage without a shuffle or a DataFrame
+    (plans.pipeline.night_records)."""
     from ..operators.images import make_synthetic_images
     from ..plans.pipeline import run_photometry_pipeline
 

@@ -5,9 +5,9 @@ astropy and pulls HDU-1 pixels + header. Here one pure function,
 :func:`image_row`, decodes one file's bytes into a schemas.IMAGE row;
 every path that decodes calls it: :func:`scan_fits_dir` (a
 ``binaryFile`` scan, then a ``mapInPandas`` decode into IMAGE rows), the
-CLI's per-epoch kernel (``plans.pipeline.listed_epoch_records``, whose
-tasks open and decode their own epochs' files) and the ``fits`` Python
-data source.
+CLI's per-epoch kernel (``plans.pipeline.night_records``, an RDD job
+whose tasks open and decode their own epochs' files) and the ``fits``
+Python data source.
 
 The CLI's inputs are read on the driver, as the reference reads its
 manifest (psf_phot.py:41-45): :func:`read_manifest` gives the
@@ -97,13 +97,16 @@ def image_row(filename: str, content: bytes) -> dict | None:
     """One FITS file's bytes → a schemas.IMAGE row as a dict (epoch_id
     -1: the manifest assigns it), or None when the file does not decode.
 
-    Failure-path rule (SURVEY.md §7 #6): an undecodable file, or one
-    whose AIRMASS/EXPTIME/DATE-OBS value does not parse, is dropped,
-    never fatal — at 100 TB one corrupt object must not kill the job.
-    (Production: route it to a quarantine sink instead of dropping.)
+    Failure-path rule (SURVEY.md §7 #6): an undecodable file, one with
+    no pixels (a 0×0 image), or one whose AIRMASS/EXPTIME/DATE-OBS value
+    does not parse, is dropped, never fatal — at 100 TB one corrupt
+    object must not kill the job. (Production: route it to a quarantine
+    sink instead of dropping.)
     """
     try:
         px, hdr = _decode_fits(bytes(content))
+        if not px.size:
+            return None
         return {
             "filename": filename, "epoch_id": -1,
             "band": hdr.get("FILTER"),

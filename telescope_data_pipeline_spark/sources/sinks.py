@@ -7,22 +7,28 @@
   at scale — partitioned by (band) so band-filtered reads prune whole
   directories (partition pruning shows as PartitionFilters in the scan).
 - Diagnostics TXT: the stats block (p_io.py:121-154), one line per
-  epoch rendered by ONE Spark expression (:func:`stats_line`) over
-  per-epoch statistics, whether they come from an aggregation of the
-  step DataFrames (:func:`write_diagnostics_txt`) or straight from the
-  CLI's per-epoch records.
+  epoch over per-epoch statistics. A DataFrame of them (an aggregation
+  of the step DataFrames, :func:`write_diagnostics_txt`) is rendered by
+  ONE Spark expression, :func:`stats_line`.
+- Python twins of Spark's renderers, for the CLI's per-epoch kernel,
+  which runs no Spark SQL: :func:`format_stats_line` is
+  :func:`stats_line` and :func:`format_csv_row` is ``F.to_csv`` of a
+  struct of numbers, both over :func:`java_double`, Java's
+  ``Double.toString`` layout.
 - :func:`write_text_part`: the driver-side form of a one-partition
-  Spark text or CSV write, for lines the CLI renders in its query
-  (``stats_line``, ``to_csv``) and collects with everything else.
+  Spark text or CSV write, for the lines the CLI's tasks render.
 """
 
 from __future__ import annotations
 
+import math
 import os
-from collections.abc import Iterable
+from collections.abc import Iterable, Mapping, Sequence
+from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..schemas import LIGHTCURVE
 
@@ -68,6 +74,77 @@ def stats_line() -> Column:
         F.lit("] flux[min,max,med]=["), num("flux_min"),
         F.lit(","), num("flux_max"), F.lit(","), num("flux_med"),
         F.lit("] fwhm="), num("mean_fwhm"))
+
+
+def java_double(x: float) -> str:
+    """``x`` as Java's ``Double.toString`` lays it out, over Python's
+    shortest round-trip digits: plain for 1e-3 <= |x| < 1e7 (``100.0``,
+    ``0.001``), ``d.dddE<n>`` otherwise (``1.0E7``, ``9.999E-4``), and
+    ``NaN``, ``Infinity``, ``-Infinity``, ``-0.0``.
+
+    JDK 17's ``Double.toString`` is not always shortest: it writes
+    2.82879384806159E17 as ``2.82879384806159008E17``, 1e23 as
+    ``9.999999999999999E22`` and 5e-324 as ``4.9E-324``. Both strings
+    parse to the same double; no double in 1e-6..1e9 was seen to differ
+    (JDK 19 and later print shortest digits)."""
+    if math.isnan(x):
+        return "NaN"
+    if math.isinf(x):
+        return "Infinity" if x > 0 else "-Infinity"
+    if x == 0:
+        return "-0.0" if math.copysign(1.0, x) < 0 else "0.0"
+    _, digits, exp = Decimal(repr(abs(x))).as_tuple()
+    text = "".join(map(str, digits)).rstrip("0")
+    n = len(digits) + exp - 1  # the decimal exponent of the first digit
+    sign = "-" if x < 0 else ""
+    if -3 <= n < 7:
+        if n < 0:
+            return f"{sign}0.{'0' * (-n - 1)}{text}"
+        return f"{sign}{text[:n + 1].ljust(n + 1, '0')}.{text[n + 1:] or '0'}"
+    return f"{sign}{text[0]}.{text[1:] or '0'}E{n}"
+
+
+def _round4(x: float) -> float:
+    """Spark's ``round(x, 4)`` of a double: HALF_UP on the digits of
+    ``Double.toString``, zero without a sign; NaN, infinities and
+    doubles of 2^52 and more (all integers) as they are."""
+    if not math.isfinite(x) or abs(x) >= 2.0 ** 52:
+        return x
+    return float(Decimal(repr(x)).quantize(Decimal("1E-4"), ROUND_HALF_UP)) + 0.0
+
+
+def format_stats_line(row: Mapping) -> str:
+    """:func:`stats_line` in Python: the TXT line of a mapping of
+    per-epoch raw statistics, numbers rounded to 4 places (as Spark's
+    ``round``) and laid out by :func:`java_double`, absent values
+    empty."""
+    def num(k: str) -> str:
+        v = row.get(k)
+        return "" if v is None else java_double(_round4(float(v)))
+
+    def count(k: str) -> str:
+        v = row.get(k)
+        return "" if v is None else str(int(v))
+
+    return (f"epoch {count('epoch_id')}: sources={count('n_sources')}"
+            f" psf_stars={int(row.get('n_psf') or 0)}"
+            f" results={int(row.get('n_results') or 0)}"
+            f" peak[min,max,med]=[{num('peak_min')},{num('peak_max')},{num('peak_med')}]"
+            f" flux[min,max,med]=[{num('flux_min')},{num('flux_max')},{num('flux_med')}]"
+            f" fwhm={num('mean_fwhm')}")
+
+
+def format_csv_row(fields: Sequence[T.StructField], row: Mapping) -> str:
+    """``F.to_csv`` of a struct of numeric ``fields`` in Python: the
+    values of ``row`` in field order, doubles laid out by
+    :func:`java_double`, integers as digits, nulls empty."""
+    def text(f: T.StructField) -> str:
+        v = row.get(f.name)
+        if v is None:
+            return ""
+        return java_double(float(v)) if isinstance(f.dataType, T.DoubleType) else str(int(v))
+
+    return ",".join(text(f) for f in fields)
 
 
 def write_stats_txt(stats: DataFrame, path: str) -> None:

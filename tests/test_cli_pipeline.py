@@ -164,3 +164,44 @@ def test_summary_reports_pdf_cap():
     line = _summary(records, {f"f{e}.fits" for e in range(40)}, 40, 32, "out")
     assert line == ("pipeline done: 40 epochs, 80 photometry rows, 40 FITS files, "
                     "32 PDF pages -> out; PDF capped at 32 of 40 epochs")
+
+
+def _rewrite_frame(path: Path, side: int) -> None:
+    """Rewrite the fake-FITS frame at ``path`` as a flat ``side``² frame
+    with the same header."""
+    _, header = _decode_fits(path.read_bytes())
+    write_fake_fits(str(path), np.full((side, side), 100.0, np.float32), header)
+
+
+def test_cli_epoch_with_mixed_frame_shapes(spark, tmp_path, capsys):
+    """One frame of epoch 0 is 128² among 96² frames: that epoch gets the
+    named outcome ``mixed_shapes`` with no stack and no rows, and every
+    other epoch's sinks are those of a night without the odd frame."""
+    clean = write_night(tmp_path / "clean", seed=8)
+    run_cli(*clean, tmp_path / "clean_out")
+    images, manifest = write_night(tmp_path / "odd", seed=8)
+    _rewrite_frame(images / "e0_f0.fits", 128)
+    run_cli(images, manifest, tmp_path / "out")
+    line = capsys.readouterr().out.strip().splitlines()[-1]
+    assert line.startswith("pipeline done: 2 epochs, ")
+    assert "epochs without catalog rows: 0 (mixed_shapes)" in line
+    assert "frames dropped by decode" not in line
+    got, want = read_outputs(tmp_path / "out"), read_outputs(tmp_path / "clean_out")
+    assert got["csv"] == {e: rows for e, rows in want["csv"].items() if e != "0"}
+    assert got["fits"] == {n: f for n, f in want["fits"].items()
+                           if n != "stacked_e0.fits"}
+    assert got["txt"] == [t for t in want["txt"] if not t.startswith("epoch 0:")]
+
+
+def test_cli_drops_an_empty_frame(spark, tmp_path, capsys):
+    """A 0×0 frame does not decode to an image: it counts as a frame
+    dropped by decode, and its epoch is stacked from its other frames."""
+    images, manifest = write_night(tmp_path, seed=9)
+    _rewrite_frame(images / "e1_f1.fits", 0)
+    run_cli(images, manifest, tmp_path / "out")
+    line = capsys.readouterr().out.strip().splitlines()[-1]
+    assert line.startswith("pipeline done: 3 epochs, ")
+    assert "frames dropped by decode: 1" in line
+    out = read_outputs(tmp_path / "out")
+    assert sorted(out["fits"]) == [f"stacked_e{e}.fits" for e in range(3)]
+    assert [t.split(":")[0] for t in out["txt"]] == [f"epoch {e}" for e in range(3)]
