@@ -8,7 +8,8 @@ text analysis) and a Structured Streaming surface.
 
 Layout
 ------
-- ``session``    : SparkSession builder (Arrow on, AQE on, UTC).
+- ``session``    : SparkSession builder (Arrow on, AQE on, UTC), and the
+                   bare SparkContext the CLI runs on.
 - ``worker_daemon``: the Python worker daemon the session sets, so
                    workers import pyspark as bytecode.
 - ``schemas``    : every table schema as an explicit StructType.

@@ -17,10 +17,12 @@ epoch_id) pairs and lists the ``*.fits`` files directly in ``--images``;
 a missing input fails there, naming its path, before Spark starts and
 before any sink is touched. The reference then loops epochs
 sequentially in one process; here a pass is ONE RDD job of one stage
-(``plans.pipeline.night_records``), with no DataFrame and no Spark SQL:
-its tasks open and decode their own epochs' frames, run each epoch's
-whole chain in numpy and render the epoch's CSV rows and TXT line, and
-one collect brings back, pickled, what the four sinks need. The driver
+(``plans.pipeline.night_records``), with no DataFrame and no Spark SQL,
+on a bare SparkContext (``session.get_context``; no SparkSession is
+made): its tasks open and decode their own epochs' frames, run each
+epoch's whole chain in numpy (the workers import neither pandas nor
+pyarrow) and render the epoch's CSV rows and TXT line, and one collect
+brings back, pickled, what the four sinks need. The driver
 then replaces ``csv/``, ``fits/``, ``pdf/`` and ``txt/`` under
 ``--out`` and writes them, as the reference writes its four sinks per
 image set from one process (psf_phot.py:91-94). A corrupt FITS file, or
@@ -79,16 +81,15 @@ def main(argv: list[str] | None = None) -> None:
     args = p.parse_args(argv)
 
     from .plans.pipeline import CATALOG_FIELDS, night_records
-    from .session import get_spark
+    from .session import get_context
     from .sources.fits import fits_names, read_manifest, write_fits_files
     from .sources.pdf import diagnostics_pdf
     from .sources.sinks import write_text_part
 
     manifest = read_manifest(args.manifest)
     on_disk = fits_names(args.images)
-    spark = get_spark("telescope-pipeline")
-    records = night_records(spark.sparkContext, args.images, manifest, on_disk,
-                            size=args.size)
+    records = night_records(get_context("telescope-pipeline"), args.images,
+                            manifest, on_disk, size=args.size)
     stacked = [r for r in records if r["pixels"] is not None]
 
     # replace, not add to, a previous run's sinks: no stale epoch survives

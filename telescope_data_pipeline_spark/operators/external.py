@@ -30,7 +30,6 @@ import time
 from collections.abc import Callable, Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -96,6 +95,7 @@ def solve_wcs(
     base_backoff_s: float = 0.01,
 ) -> DataFrame:
     """Per-epoch :func:`solve_top_stars`, one WCS_SCHEMA row per epoch."""
+    import pandas as pd
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         sol = solve_top_stars(
@@ -212,31 +212,50 @@ def _exact_bjd(jd: np.ndarray, ra: np.ndarray, dec: np.ndarray) -> np.ndarray:
     return np.asarray((t + ltt).jd, dtype=np.float64)
 
 
-@F.pandas_udf(T.DoubleType())
-def barycentric_jd(jd_utc: pd.Series, ra_deg: pd.Series,
-                   dec_deg: pd.Series) -> pd.Series:
-    """JD → BJD light-travel-time correction. Reference delegates to
-    saphires ``brvc`` (p_io.py:55); here the circular-orbit
-    approximation (±2 s) — see :func:`barycentric_jd_exact` for the
-    astropy-ephemeris dispatch."""
-    return pd.Series(_approx_bjd(jd_utc.to_numpy(dtype=np.float64),
-                                 ra_deg.to_numpy(dtype=np.float64),
-                                 dec_deg.to_numpy(dtype=np.float64)))
+def _bjd_udfs() -> dict:
+    """The two BJD pandas UDFs, by name. A pandas UDF needs pandas when
+    it is made, and the CLI's workers import this module without it, so
+    they are made on first access (the module ``__getattr__`` below)."""
+    import pandas as pd
+
+    def barycentric_jd(jd_utc, ra_deg, dec_deg):
+        """JD → BJD light-travel-time correction. Reference delegates to
+        saphires ``brvc`` (p_io.py:55); here the circular-orbit
+        approximation (±2 s) — see :func:`barycentric_jd_exact` for the
+        astropy-ephemeris dispatch."""
+        return pd.Series(_approx_bjd(jd_utc.to_numpy(dtype=np.float64),
+                                     ra_deg.to_numpy(dtype=np.float64),
+                                     dec_deg.to_numpy(dtype=np.float64)))
+
+    def barycentric_jd_exact(jd_utc, ra_deg, dec_deg):
+        """Exact-ephemeris BJD when astropy is installed (the same
+        codec-dispatch pattern as sources/fits.py: real library when
+        present, deterministic approximation otherwise). Each Arrow batch
+        dispatches on the EXECUTOR, so a heterogeneous cluster degrades
+        per-node rather than failing the job."""
+        jd = jd_utc.to_numpy(dtype=np.float64)
+        ra = ra_deg.to_numpy(dtype=np.float64)
+        dec = dec_deg.to_numpy(dtype=np.float64)
+        try:
+            import astropy  # noqa: F401  pragma: no cover (absent here)
+        except ImportError:
+            return pd.Series(_approx_bjd(jd, ra, dec))
+        return pd.Series(_exact_bjd(jd, ra, dec))
+
+    udfs = {}
+    for fn in (barycentric_jd, barycentric_jd_exact):
+        # Series -> Series type hints make each a scalar pandas UDF
+        fn.__annotations__ = dict.fromkeys(
+            ("jd_utc", "ra_deg", "dec_deg", "return"), pd.Series)
+        udfs[fn.__name__] = F.pandas_udf(fn, T.DoubleType())
+    return udfs
 
 
-@F.pandas_udf(T.DoubleType())
-def barycentric_jd_exact(jd_utc: pd.Series, ra_deg: pd.Series,
-                         dec_deg: pd.Series) -> pd.Series:
-    """Exact-ephemeris BJD when astropy is installed (the same
-    codec-dispatch pattern as sources/fits.py: real library when
-    present, deterministic approximation otherwise). Each Arrow batch
-    dispatches on the EXECUTOR, so a heterogeneous cluster degrades
-    per-node rather than failing the job."""
-    jd = jd_utc.to_numpy(dtype=np.float64)
-    ra = ra_deg.to_numpy(dtype=np.float64)
-    dec = dec_deg.to_numpy(dtype=np.float64)
-    try:
-        import astropy  # noqa: F401  pragma: no cover (absent here)
-    except ImportError:
-        return pd.Series(_approx_bjd(jd, ra, dec))
-    return pd.Series(_exact_bjd(jd, ra, dec))
+def __getattr__(name: str):
+    """``barycentric_jd`` and ``barycentric_jd_exact``, made once, on
+    first access (PEP 562), so ``from .external import barycentric_jd``
+    works as for any module attribute."""
+    if name in ("barycentric_jd", "barycentric_jd_exact"):
+        globals().update(_bjd_udfs())
+        return globals()[name]
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -12,7 +12,8 @@ Re-expression of the reference's per-image NumPy kernels (SURVEY.md
 - The public step operators (:func:`measure_fwhm`, :func:`detect_stars`,
   :func:`estimate_shifts`, :func:`align_and_stack`) are thin Arrow
   adapters over the same functions for DataFrame callers:
-  ``mapInPandas`` per image, ``applyInPandas`` per epoch.
+  ``mapInPandas`` per image, ``applyInPandas`` per epoch. Only they
+  import pandas, so the numpy kernels load without it.
 - numpy-only: the reference leans on scipy/photutils/astropy
   (curve_fit, DAOStarFinder, EPSFBuilder); the same measurements are
   made here with moment analysis and local-maxima detection, which are
@@ -24,13 +25,16 @@ from __future__ import annotations
 import math
 from collections.abc import Iterator, Sequence
 from datetime import datetime, timedelta
+from typing import TYPE_CHECKING
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..schemas import IMAGE
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 GAUSSIAN_SIGMA_TO_FWHM = 2.3548200450309493  # 2*sqrt(2*ln 2)
 SATURATION = 50_000.0  # reference core.py:79 skip threshold
@@ -58,6 +62,8 @@ def synthetic_frames(
 ) -> tuple[list[tuple], pd.DataFrame, pd.DataFrame]:
     """The numpy half of :func:`make_synthetic_images`: schemas.IMAGE
     tuples (pixels as a float32 2-D array), truth stars, truth shifts."""
+    import pandas as pd
+
     rng = np.random.default_rng(seed)
     rows, truth, shifts = [], [], []
     min_sep = 14.0  # isolate planted stars: aperture tests need clean
@@ -177,6 +183,7 @@ def fwhm_sigma(img: np.ndarray, cut_half: int = 8) -> float | None:
 
 def measure_fwhm(images: DataFrame, cut_half: int = 8) -> DataFrame:
     """Per-image FWHM (:func:`fwhm_sigma`), one row per image."""
+    import pandas as pd
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -263,6 +270,7 @@ def find_stars(img: np.ndarray, threshold_sigma: float = 10.0,
 def detect_stars(images: DataFrame, threshold_sigma: float = 10.0,
                  box: int = 5, ap_radius: int = 6) -> DataFrame:
     """One image row → N detection rows (:func:`find_stars`)."""
+    import pandas as pd
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -339,6 +347,7 @@ def match_shifts(stars: Sequence[tuple[str, np.ndarray, np.ndarray]],
 def estimate_shifts(detections: DataFrame, max_dist: float = 20.0) -> DataFrame:
     """Per-image integer shift vs the epoch's reference image
     (:func:`match_shifts`), one grouped kernel per epoch."""
+    import pandas as pd
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         stars = [(name, g["xcentroid"].to_numpy(np.float64),
@@ -385,6 +394,8 @@ def align_and_stack(images: DataFrame, shifts: DataFrame,
     """Per-epoch stack (:func:`stack_frames`): N image rows → 1 stacked
     row; the shuffle key is epoch_id, matching the reference's
     per-image-set independence."""
+    import pandas as pd
+
     joined = images.join(shifts.select("epoch_id", "filename", "dx", "dy"),
                          on=["epoch_id", "filename"], how="left") \
                    .fillna({"dx": 0, "dy": 0})

@@ -17,13 +17,12 @@ grouped ``epoch_records`` for DataFrame callers):
 
 :func:`select_psf_stars` and :func:`psf_photometry` are thin Arrow
 adapters over them for DataFrame callers (``applyInPandas`` per image /
-per epoch).
+per epoch); only they import pandas.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -97,6 +96,8 @@ def select_psf_stars(
     FWHMs — the reference recomputes fwhm per image set (psf_phot.py:49);
     the scalar ``fwhm`` is the fallback for epochs with no measurement.
     """
+    import pandas as pd
+
     if fwhm_table is not None:
         per_epoch = (fwhm_table.filter(F.col("fwhm").isNotNull())
                      .groupBy("epoch_id")
@@ -465,6 +466,8 @@ def psf_photometry(
     """Per-epoch :func:`fit_psf_photometry` (grouped applyInPandas over
     the stacked image, its detections and its PSF stars); PHOT_SCHEMA
     rows."""
+    import pandas as pd
+
     stk = stacked.select("epoch_id", "width", "height", "pixels")
     dets = detections.groupBy("epoch_id").agg(F.collect_list(
         F.struct("id", "xcentroid", "ycentroid", "flux")).alias("stars"))

@@ -18,7 +18,9 @@ it:
   decodes its own epochs' frames and returns, pickled, the part of each
   record the sinks read (:func:`sink_record`), its CSV rows and TXT
   line already rendered. The CLI's plan has no relational operator, so
-  a DataFrame query would only add Catalyst's fixed cost.
+  a DataFrame query would only add Catalyst's fixed cost. The modules
+  the kernel loads import pandas only inside their Arrow adapters, so
+  these workers import neither pandas nor pyarrow.
 - :func:`epoch_records` (frames already decoded into a DataFrame, e.g.
   ``sources.fits.scan_fits_dir``): one ``groupBy("epoch_id")
   .applyInPandas``, one shuffle of the frames. :func:`pipeline_stages`
@@ -37,13 +39,14 @@ goes missing silently.
 
 from __future__ import annotations
 
+import calendar
 import math
 import os
 from collections.abc import Collection, Iterable, Iterator, Mapping, Sequence
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 
 import numpy as np
-import pandas as pd
 from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -70,6 +73,9 @@ from ..operators.photometry import (
 )
 from ..sources.fits import image_row, mid_exposure_jd
 from ..sources.sinks import format_csv_row, format_stats_line
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 #: the outcomes of an epoch with no stack
 UNSTACKED = ("no_frames", "mixed_shapes")
@@ -236,19 +242,29 @@ def process_epoch(
     return rec
 
 
+def _null(v) -> bool:
+    """Whether a row value is absent: None, NaN or NaT (the only values
+    not equal to themselves)."""
+    return v is None or v != v
+
+
 def _frame(row: Mapping) -> Frame:
-    """A schemas.IMAGE row (a dict or a pandas row) as a :class:`Frame`."""
+    """A schemas.IMAGE row (a dict or a pandas row) as a :class:`Frame`.
+    ``date_obs`` may be a ``datetime`` or a ``pd.Timestamp``; naive is
+    UTC, and its whole seconds since the unix epoch give the JD."""
     date_obs, exptime = row["date_obs"], row["exptime"]
-    jd_mid = (None if pd.isna(date_obs) or pd.isna(exptime)
-              else mid_exposure_jd(pd.Timestamp(date_obs).value // 10**9,
+    jd_mid = (None if _null(date_obs) or _null(exptime)
+              else mid_exposure_jd(calendar.timegm(date_obs.utctimetuple()),
                                    float(exptime)))
     return Frame(row["filename"], frame_of(row), row["band"],
-                 None if pd.isna(row["airmass"]) else float(row["airmass"]),
+                 None if _null(row["airmass"]) else float(row["airmass"]),
                  jd_mid, dict(row["header"] or {}))
 
 
 def _record_frame(rec: dict) -> pd.DataFrame:
     """A :func:`process_epoch` record as a one-row EPOCH_SCHEMA frame."""
+    import pandas as pd
+
     return pd.DataFrame([[rec.get(c) for c in EPOCH_SCHEMA.names]],
                         columns=EPOCH_SCHEMA.names)
 

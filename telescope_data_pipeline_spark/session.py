@@ -1,8 +1,12 @@
-"""SparkSession construction for the engine.
+"""Spark entry points for the engine: a SparkSession for queries, a
+bare SparkContext for the CLI.
 
 One place to set every scale-relevant knob. Local mode is the test bed;
-the same builder (minus local master) is what a 1000-executor cluster
+the same conf (minus local master) is what a 1000-executor cluster
 deployment would use — AQE, Arrow, and UTC semantics are identical.
+Both entry points start from :func:`_core_conf`: :func:`get_spark` adds
+the Spark SQL settings, and :func:`get_context`, which the CLI uses
+because a pass runs one RDD job and no Spark SQL, adds nothing.
 """
 
 from __future__ import annotations
@@ -11,6 +15,7 @@ import os
 import site
 import threading
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 #: Shuffle partitions: match local cores while testing. On a real cluster
@@ -34,10 +39,60 @@ def _workers_import_package() -> bool:
     return os.path.realpath(_PACKAGE_ROOT) in {os.path.realpath(d) for d in dirs if d}
 
 
+def _core_conf(app_name: str) -> SparkConf:
+    """The SparkContext settings every entry point shares:
+
+    - master ``SPARK_MASTER``, else ``local[SPARK_GRAFT_CPUS]`` (all
+      cores when unset), and driver memory ``SPARK_GRAFT_DRIVER_MEM``
+      (8g);
+    - no web UI, and no console progress bar: a run reports through
+      its own output (the CLI's summary line), and Spark's
+      carriage-return bar would only garble a nightly log;
+    - spark.python.daemon.module = ``worker_daemon``: Python workers
+      load pyspark as bytecode from its installed package instead of
+      compiling it from ``$SPARK_HOME/python/lib/pyspark.zip``, which
+      Spark puts first on a worker's path. That compile cost about 1 s
+      per daemon, paid before it forks its first worker (for
+      ``q_periodogram``'s pandas UDF, for the CLI's RDD job). The
+      daemon keeps the zip first unless the installed pyspark and py4j
+      are the zips' releases. Workers import the package already, for
+      the kernels and the ``fits`` source; the setting is made only
+      when they can, i.e. when the package is in the working directory,
+      on PYTHONPATH or in site-packages. Spark ignores it for the
+      driver-side workers that plan a Python data source.
+    """
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    conf = (SparkConf(loadDefaults=False)
+            .setMaster(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
+            .setAppName(app_name)
+            .set("spark.ui.enabled", "false")
+            .set("spark.ui.showConsoleProgress", "false")
+            .set("spark.driver.memory",
+                 os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")))
+    if _workers_import_package():
+        conf.set("spark.python.daemon.module",
+                 "telescope_data_pipeline_spark.worker_daemon")
+    return conf
+
+
+def get_context(app_name: str = "telescope_data_pipeline_spark") -> SparkContext:
+    """The process's SparkContext, made from :func:`_core_conf` if there
+    is none yet (an existing one is returned as it is), at log level
+    WARN. No SparkSession is made: Spark SQL's session state (its
+    catalog, analyzer and SQL conf, ~0.4 s even beside an existing
+    session, 2-3 s and ~3,300 JVM classes in a new process) is fixed
+    cost to a caller that runs only RDD jobs, such as the CLI."""
+    sc = SparkContext.getOrCreate(_core_conf(app_name))
+    sc.setLogLevel("WARN")
+    return sc
+
+
 def get_spark(app_name: str = "telescope_data_pipeline_spark",
               shuffle_partitions: int | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
-    """Build (or get) the SparkSession with the engine's standard config.
+    """Build (or get) the SparkSession with the engine's standard config:
+    :func:`_core_conf` plus the Spark SQL settings below, then
+    ``extra_conf``.
 
     Settings and why they matter at 100 TB:
 
@@ -52,24 +107,10 @@ def get_spark(app_name: str = "telescope_data_pipeline_spark",
       (region/nation/ephemeris) should never shuffle.
     - maxPartitionBytes 128 MB: parquet scan split size — keeps scan tasks
       uniform regardless of input file layout.
-    - spark.python.daemon.module = ``worker_daemon``: Python workers load
-      pyspark as bytecode from its installed package instead of compiling
-      it from ``$SPARK_HOME/python/lib/pyspark.zip``, which Spark puts
-      first on a worker's path. That compile cost about 1 s per daemon,
-      paid at a session's first pandas UDF and first plain UDF
-      (``q_periodogram``, the per-epoch kernel). The daemon keeps the zip
-      first unless the installed pyspark and py4j are the zips' releases.
-      Workers import the package already, for the kernels and the
-      ``fits`` source; the setting is made only when they can, i.e. when
-      the package is in the working directory, on PYTHONPATH or in
-      site-packages. Spark ignores it for the driver-side workers that
-      plan a Python data source.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder
-        .master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
-        .appName(app_name)
+        .config(conf=_core_conf(app_name))
         .config("spark.sql.shuffle.partitions",
                 str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
         .config("spark.sql.adaptive.enabled", "true")
@@ -98,12 +139,7 @@ def get_spark(app_name: str = "telescope_data_pipeline_spark",
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    if _workers_import_package():
-        builder = builder.config("spark.python.daemon.module",
-                                 "telescope_data_pipeline_spark.worker_daemon")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -29,12 +29,13 @@ from __future__ import annotations
 
 import csv
 import io
+import math
 import os
 import struct
 from collections.abc import Iterator, Mapping, Sequence
+from datetime import datetime
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -93,15 +94,25 @@ def _decode_fits(content: bytes) -> tuple[np.ndarray, dict[str, str]]:
     return pixels, header
 
 
+def parse_date_obs(value: str | None) -> datetime | None:
+    """A DATE-OBS card as a datetime: the ISO 8601 form FITS requires
+    (``2024-03-01``, ``2024-03-01T00:10:00.5``, ``...Z``, ``...+02:00``),
+    naive when the card has no offset (read as UTC). None for a missing
+    or blank card; any other value, such as the old FITS ``DD/MM/YY``,
+    raises ValueError rather than being guessed at."""
+    value = (value or "").strip()
+    return datetime.fromisoformat(value) if value else None
+
+
 def image_row(filename: str, content: bytes) -> dict | None:
     """One FITS file's bytes → a schemas.IMAGE row as a dict (epoch_id
     -1: the manifest assigns it), or None when the file does not decode.
 
     Failure-path rule (SURVEY.md §7 #6): an undecodable file, one with
     no pixels (a 0×0 image), or one whose AIRMASS/EXPTIME/DATE-OBS value
-    does not parse, is dropped, never fatal — at 100 TB one corrupt
-    object must not kill the job. (Production: route it to a quarantine
-    sink instead of dropping.)
+    does not parse (DATE-OBS: :func:`parse_date_obs`), is dropped, never
+    fatal — at 100 TB one corrupt object must not kill the job.
+    (Production: route it to a quarantine sink instead of dropping.)
     """
     try:
         px, hdr = _decode_fits(bytes(content))
@@ -113,7 +124,7 @@ def image_row(filename: str, content: bytes) -> dict | None:
             "width": px.shape[1], "height": px.shape[0],
             "pixels": px.astype(np.float32).ravel(),
             "airmass": float(hdr["AIRMASS"]) if "AIRMASS" in hdr else None,
-            "date_obs": pd.to_datetime(hdr.get("DATE-OBS")),
+            "date_obs": parse_date_obs(hdr.get("DATE-OBS")),
             "exptime": float(hdr["EXPTIME"]) if "EXPTIME" in hdr else None,
             "site_id": hdr.get("SITEID"),
             "header": hdr,
@@ -193,7 +204,7 @@ def fits_headers(rows: Sequence[Mapping], target_ra: float = 150.0,
     headers = []
     for r, r_bjd in zip(rows, bjd):
         wcs_cards = {}
-        if not pd.isna(r["crval_ra"]):
+        if not math.isnan(_float(r["crval_ra"])):
             # a real solver returns a full header; HISTORY/COMMENT are
             # dropped here exactly as p_io.py:40-42 does
             wcs_cards = {"CRVAL1": r["crval_ra"], "CRVAL2": r["crval_dec"],
@@ -233,6 +244,8 @@ def write_fits_rows(rows: DataFrame, out_dir: str, target_ra: float = 150.0,
     crval_ra, crval_dec, pix_scale) rows, so the sink parallelizes across
     epochs. Returns the lazy manifest of written files
     (FITS_SINK_SCHEMA)."""
+    import pandas as pd
+
     def write_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield pd.DataFrame(
@@ -295,6 +308,8 @@ def scan_fits_dir(spark: SparkSession, path: str,
     the basename; without it epoch_id = -1. Files that do not decode are
     dropped.
     """
+    import pandas as pd
+
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = [image_row(name, content)

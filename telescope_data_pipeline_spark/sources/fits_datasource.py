@@ -69,10 +69,8 @@ def _decode_file(path: str, filename: str):
         return None
     if row is None:
         return None
-    date_obs = row["date_obs"]
     row.update(width=int(row["width"]), height=int(row["height"]),
-               pixels=[float(v) for v in row["pixels"]],
-               date_obs=None if date_obs is None else date_obs.to_pydatetime())
+               pixels=[float(v) for v in row["pixels"]])
     return tuple(row[f] for f in IMAGE.names)
 
 

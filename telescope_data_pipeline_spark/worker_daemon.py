@@ -1,7 +1,7 @@
 """Python worker daemon that imports pyspark from its installed package.
 
-Spark starts the Python workers of a session's tasks (pandas UDFs such
-as the per-epoch kernel and ``q_periodogram``, plain UDFs, the reads of
+Spark starts the Python workers of a context's tasks (the CLI's RDD
+job, pandas UDFs such as ``q_periodogram``, plain UDFs, the reads of
 Python data sources such as ``fits``) by forking them from a daemon
 process, ``pyspark.daemon`` by default. The daemon's ``sys.path`` starts with
 ``$SPARK_HOME/python/lib/pyspark.zip`` and the ``py4j-*-src.zip`` beside
@@ -10,7 +10,8 @@ source before it forks its first worker: about 1 s of CPU per daemon,
 while the driver imports the same pyspark release from an installed
 package whose bytecode is cached.
 
-``session.get_spark`` sets ``spark.python.daemon.module`` to this module.
+The conf that ``session.get_spark`` and ``session.get_context`` both
+start from sets ``spark.python.daemon.module`` to this module.
 Before anything imports pyspark, it moves the Spark zips behind the rest
 of ``sys.path``, but only when the pyspark and py4j that the rest of the
 path would import are the same releases as the zips; otherwise the path
