@@ -15,7 +15,8 @@ diagnostics, TXT run statistics). As the reference does
 (psf_phot.py:41-45), the driver reads the manifest into (filename,
 epoch_id) pairs and lists the ``*.fits`` files directly in ``--images``;
 a missing input fails there, naming its path, before Spark starts and
-before any sink is touched. The reference then loops epochs
+before any sink is touched, and a manifest with no usable row writes
+empty sinks without starting Spark. The reference then loops epochs
 sequentially in one process; here a pass is ONE RDD job of one stage
 (``plans.pipeline.night_records``), with no DataFrame and no Spark SQL,
 on a bare SparkContext (``session.get_context``; no SparkSession is
@@ -88,8 +89,9 @@ def main(argv: list[str] | None = None) -> None:
 
     manifest = read_manifest(args.manifest)
     on_disk = fits_names(args.images)
+    # an empty night starts no Spark: its sinks are written empty
     records = night_records(get_context("telescope-pipeline"), args.images,
-                            manifest, on_disk, size=args.size)
+                            manifest, on_disk, size=args.size) if manifest else []
     stacked = [r for r in records if r["pixels"] is not None]
 
     # replace, not add to, a previous run's sinks: no stale epoch survives

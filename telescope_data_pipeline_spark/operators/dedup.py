@@ -347,9 +347,8 @@ def simhash_near_duplicates(df: DataFrame, id_col: str, text_col: str,
 
 def hamming_near_duplicates(fp: DataFrame, max_hamming: int = 8) -> DataFrame:
     """Near-dup pairs among 64-bit fingerprints (``id``, ``fp`` long):
-    the pigeonhole banded equi-join + exact popcount refine shared by
-    SimHash text dedup (above) and perceptual-hash image dedup
-    (operators/multimodal.py) — any fingerprint family with Hamming
+    the pigeonhole banded equi-join + exact popcount refine behind
+    SimHash text dedup (above) — any fingerprint family with Hamming
     semantics plugs in here. Guaranteed recall at the radius; see
     :func:`simhash_near_duplicates` for the bucket-cardinality scale
     envelope."""

@@ -163,13 +163,18 @@ def local_background_subtract(
     """
     h, w = img.shape
     out = img.astype(np.float64, copy=True)
-    yy, xx = np.mgrid[0:h, 0:w]
     half = 5.0 * fwhm / 2.0
     bkgs: list[float] = []
     for x, y in positions:
+        # The ring lies inside its bounding box (clipped to the frame),
+        # and the box's row-major pixel order is the frame's, so the
+        # ring's values, and their median, are those of a full-frame mask.
+        y0, y1 = np.clip([np.floor(y - r_out), np.ceil(y + r_out) + 1], 0, h).astype(int)
+        x0, x1 = np.clip([np.floor(x - r_out), np.ceil(x + r_out) + 1], 0, w).astype(int)
+        yy, xx = np.mgrid[y0:y1, x0:x1]
         d2 = (xx - x) ** 2 + (yy - y) ** 2
         ring = (d2 >= r_in * r_in) & (d2 < r_out * r_out)
-        vals = out[ring]
+        vals = out[y0:y1, x0:x1][ring]
         bkg = _sigma_clipped_median(vals) if vals.size else 0.0
         bkgs.append(bkg)
         ix, iy = int(round(x)), int(round(y))

@@ -1,7 +1,10 @@
 """Every schema the engine touches, declared explicitly.
 
-No schema inference anywhere in the hot path — at 100 TB an inference pass
-is a full extra scan. The reference hard-codes its column names inline
+The driver tables are not read with these schemas: the first
+``spark.read.parquet`` of a table in a process runs a one-task Spark job
+that reads the schema from the parquet footer, and later loads of the
+unchanged file reuse it (``sources.tables.load_table``). The reference
+hard-codes its column names inline
 (e.g. detection schema at reference core.py:135-138, photometry output at
 core.py:431-434, CSV sink header at p_io.py:105); here they are declared
 once as StructTypes.
@@ -208,17 +211,4 @@ EPHEMERIS = T.StructType([
     T.StructField("pmdec", T.DoubleType(), True),
     T.StructField("plx", T.DoubleType(), True),
     T.StructField("epoch", T.DoubleType(), True),
-])
-
-#: Multimodal column convention: opaque payload + typed metadata. The decode
-#: step is a pandas UDF over mapInPandas (stubbed where codecs are absent).
-MEDIA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("modality", T.StringType(), False),   # image|audio|video
-    T.StructField("payload", T.BinaryType(), True),      # opaque encoded bytes
-    T.StructField("mime", T.StringType(), True),
-    T.StructField("width", T.IntegerType(), True),
-    T.StructField("height", T.IntegerType(), True),
-    T.StructField("duration_s", T.DoubleType(), True),
-    T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
 ])

@@ -70,8 +70,12 @@ def _file_sig(path: str):
 
 def load_table(spark: SparkSession, sf_dir: str, name: str,
                spread: bool = False) -> DataFrame:
-    """Scan one driver table. Schema comes from the parquet footer (no
-    inference pass); ``schemas.DRIVER_TABLES`` documents the expected shape.
+    """Scan one driver table; ``schemas.DRIVER_TABLES`` documents the
+    expected shape. The schema comes from the parquet footer, and
+    reading it is not free: the first ``spark.read.parquet`` of a file in
+    a process runs one one-task Spark job that reads the footer.
+    Later loads of the unchanged file pass the cached schema
+    (``_SCHEMA_CACHE``) and run no job before the query's own.
 
     ``spread=True`` requests small-scan spreading for map-heavy consumers
     (tokenization folds, per-row HOFs, join+partial-agg pipelines): when

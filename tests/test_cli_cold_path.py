@@ -15,6 +15,8 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
 from tests.test_cli_pipeline import SIZE, write_night
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -49,6 +51,17 @@ print("session:", SparkSession._instantiatedSession)
 """
 
 
+#: the CLI in a new process, then whether it started Spark at all
+CLI_NO_SPARK = """
+import sys
+from pyspark import SparkContext
+from telescope_data_pipeline_spark.__main__ import main
+
+main(sys.argv[1:])
+print("context:", SparkContext._active_spark_context)
+"""
+
+
 def _python(code: str, *args: str, timeout: int) -> subprocess.CompletedProcess:
     env = {**os.environ, "PYTHONPATH": os.pathsep.join(
         [str(ROOT), *filter(None, [os.environ.get("PYTHONPATH")])])}
@@ -75,3 +88,25 @@ def test_cli_in_a_new_process_makes_no_session(tmp_path):
     assert lines[-2].startswith("pipeline done: 4 epochs, "), run.stdout
     assert lines[-1] == "session: None"
     assert "[Stage " not in run.stderr, run.stderr
+
+
+@pytest.mark.parametrize("manifest_text", ["", "e0_f0.fits,x\n\n"],
+                         ids=["no_rows", "no_integer_epoch"])
+def test_cli_empty_night_starts_no_spark(tmp_path, manifest_text):
+    """A manifest with no usable row gives a night of no epochs: the
+    CLI writes the four sinks empty and starts no SparkContext (no JVM
+    for a standalone run). The frame on disk counts as unlisted."""
+    images, manifest = write_night(tmp_path, seed=14, epochs=1, frames=1)
+    manifest.write_text(manifest_text)
+    out = tmp_path / "out"
+    run = _python(CLI_NO_SPARK, "--images", str(images), "--manifest", str(manifest),
+                  "--out", str(out), timeout=300)
+    assert run.returncode == 0, run.stderr
+    lines = run.stdout.strip().splitlines()
+    assert lines[-2] == (f"pipeline done: 0 epochs, 0 photometry rows, 0 FITS files, "
+                         f"0 PDF pages -> {out}; frames with no manifest row: 1")
+    assert lines[-1] == "context: None"
+    assert sorted(p.name for p in out.iterdir()) == ["csv", "fits", "pdf", "txt"]
+    assert not any((out / "csv").iterdir()) and not any((out / "fits").iterdir())
+    assert (out / "pdf" / "diagnostics.pdf").read_bytes().startswith(b"%PDF")
+    assert (out / "txt" / "stats.txt" / "part-00000.txt").read_text() == ""

@@ -219,6 +219,54 @@ def test_local_background_beats_global_on_gradient():
     assert abs(bkgs[0] - (100.0 + 0.8 * sx)) < 3.0
 
 
+def _full_frame_background_subtract(img, positions, fwhm, r_in=20.0, r_out=30.0):
+    """The annulus pass with the ring masked over the whole frame, each
+    star's distances computed for every pixel: the reference for the
+    bounding-box form in ``local_background_subtract``."""
+    from telescope_data_pipeline_spark.operators.photometry import _sigma_clipped_median
+
+    h, w = img.shape
+    out = img.astype(np.float64, copy=True)
+    yy, xx = np.mgrid[0:h, 0:w]
+    half = 5.0 * fwhm / 2.0
+    bkgs = []
+    for x, y in positions:
+        d2 = (xx - x) ** 2 + (yy - y) ** 2
+        vals = out[(d2 >= r_in * r_in) & (d2 < r_out * r_out)]
+        bkg = _sigma_clipped_median(vals) if vals.size else 0.0
+        bkgs.append(bkg)
+        ix, iy = int(round(x)), int(round(y))
+        r0, r1 = max(0, int(np.floor(iy - half)) + 1), min(h, int(np.ceil(iy + half)))
+        c0, c1 = max(0, int(np.floor(ix - half)) + 1), min(w, int(np.ceil(ix + half)))
+        out[r0:r1, c0:c1] -= bkg
+    return out, bkgs
+
+
+@pytest.mark.parametrize("shape,n_stars", [((160, 160), 60), ((64, 64), 12),
+                                           ((31, 31), 5), ((97, 230), 40)])
+def test_local_background_matches_full_frame_mask(shape, n_stars):
+    """The bounding-box annulus gives bit-identical backgrounds and
+    subtracted pixels to the full-frame mask: on square, tiny and
+    non-square frames, with stars on integer and half-integer positions
+    and up to 5 px outside every edge, where the ring is clipped or
+    empty."""
+    from telescope_data_pipeline_spark.operators.photometry import (
+        local_background_subtract,
+    )
+
+    h, w = shape
+    rng = np.random.default_rng(h * w + n_stars)
+    img = rng.normal(100.0, 5.0, shape) + 0.3 * np.mgrid[0:h, 0:w][1]
+    pos = [(float(x), float(y)) for x, y in
+           zip(rng.uniform(-5, w + 5, n_stars), rng.uniform(-5, h + 5, n_stars))]
+    pos += [(0.0, 0.0), (w - 0.5, h / 2), (-5.0, h + 5.0), (w / 2, 20.0)]
+    for fwhm, r_in, r_out in ((3.2, 20.0, 30.0), (1.7, 4.5, 9.25)):
+        got, got_bkg = local_background_subtract(img, pos, fwhm, r_in, r_out)
+        ref, ref_bkg = _full_frame_background_subtract(img, pos, fwhm, r_in, r_out)
+        assert got_bkg == ref_bkg
+        assert got.tobytes() == ref.tobytes()
+
+
 @pytest.mark.full
 def test_residual_diagnostics_bounded(spark, fixture):
     """core.py:454-484: after a good fit the per-star residual RMS is

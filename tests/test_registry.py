@@ -20,7 +20,7 @@ def _load_all_modules() -> list[str]:
 
 def test_all_queries_in_registration_order():
     qs = all_queries()
-    assert len(qs) == len(set(qs)) == 389
+    assert len(qs) == len(set(qs)) == 382
     assert sum(q.oracle is not None for q in qs.values()) == 365
     modules = _load_all_modules()
     key = [(modules.index(q.fn.__module__.rsplit(".", 1)[1]),
