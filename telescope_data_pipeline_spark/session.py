@@ -48,6 +48,15 @@ def _core_conf(app_name: str) -> SparkConf:
     - no web UI, and no console progress bar: a run reports through
       its own output (the CLI's summary line), and Spark's
       carriage-return bar would only garble a nightly log;
+    - the serial garbage collector in the driver JVM, as
+      ``spark.driver.defaultJavaOptions`` so that a caller's
+      ``spark.driver.extraJavaOptions`` still apply after it. G1, the
+      default, sizes its young generation from pause-time predictions,
+      so the heap the driver commits and fills differs from one
+      identical run to the next: over 5 ``catalog_queries`` runs
+      (seed 1, 4 cores) the driver JVM's RSS was 661-1010 MB under G1
+      and 483-488 MB under the serial collector, with pass times
+      unchanged (``survey_night``: 290-322 vs 282-283 MB);
     - spark.python.daemon.module = ``worker_daemon``: Python workers
       load pyspark as bytecode from its installed package instead of
       compiling it from ``$SPARK_HOME/python/lib/pyspark.zip``, which
@@ -67,6 +76,7 @@ def _core_conf(app_name: str) -> SparkConf:
             .setAppName(app_name)
             .set("spark.ui.enabled", "false")
             .set("spark.ui.showConsoleProgress", "false")
+            .set("spark.driver.defaultJavaOptions", "-XX:+UseSerialGC")
             .set("spark.driver.memory",
                  os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")))
     if _workers_import_package():

@@ -62,6 +62,17 @@ print("context:", SparkContext._active_spark_context)
 """
 
 
+#: the driver JVM's garbage collectors, in a new process
+COLLECTORS = """
+from telescope_data_pipeline_spark.session import get_context
+
+sc = get_context("collectors")
+beans = sc._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+print("collectors:", sorted(b.getName() for b in beans))
+sc.stop()
+"""
+
+
 def _python(code: str, *args: str, timeout: int) -> subprocess.CompletedProcess:
     env = {**os.environ, "PYTHONPATH": os.pathsep.join(
         [str(ROOT), *filter(None, [os.environ.get("PYTHONPATH")])])}
@@ -110,3 +121,12 @@ def test_cli_empty_night_starts_no_spark(tmp_path, manifest_text):
     assert not any((out / "csv").iterdir()) and not any((out / "fits").iterdir())
     assert (out / "pdf" / "diagnostics.pdf").read_bytes().startswith(b"%PDF")
     assert (out / "txt" / "stats.txt" / "part-00000.txt").read_text() == ""
+
+
+def test_driver_jvm_runs_the_serial_collector():
+    """The driver JVM a new process starts runs the serial collector
+    (young "Copy", old "MarkSweepCompact"), not G1, whose pause-time
+    sizing makes the driver's footprint differ between identical runs."""
+    run = _python(COLLECTORS, timeout=120)
+    assert run.returncode == 0, run.stderr
+    assert run.stdout.strip().splitlines()[-1] == "collectors: ['Copy', 'MarkSweepCompact']"
