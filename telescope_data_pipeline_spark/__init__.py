@@ -3,8 +3,7 @@
 A from-scratch, Spark-first re-expression of the query and data-processing
 capabilities of the reference pipeline (JeremyBuchanan/telescope-data-pipeline,
 surveyed in SURVEY.md), extended with the operators a large-scale
-training-data pipeline needs (dedup, similarity search, text analysis) and
-a Structured Streaming surface.
+training-data pipeline needs (dedup, similarity search, text analysis).
 
 Layout
 ------
@@ -14,8 +13,7 @@ Layout
                    workers import pyspark as bytecode.
 - ``schemas``    : every table schema as an explicit StructType.
 - ``sources``    : readers for the driver's parquet tables and for FITS
-                   frames (scan and ``fits`` data source), and the
-                   CSV/FITS/PDF/TXT/parquet sinks.
+                   frames, and the CSV/FITS/PDF/TXT/parquet sinks.
 - ``operators``  : custom operators Spark lacks as built-ins — sigma-clipped
                    aggregation, nearest-neighbor join, dedup family
                    (exact/MinHash/SimHash/Jaccard), ANN similarity search.
@@ -24,7 +22,6 @@ Layout
                    they stay JVM-side and codegen-able.
 - ``queries``    : the judged operator inventory; a registry mapping query
                    name -> (Spark callable, DuckDB oracle SQL).
-- ``streaming``  : Structured Streaming jobs mirroring the batch surface.
 - ``plans``      : plan-inspection utilities (pushdown/broadcast audits).
 """
 

@@ -44,10 +44,10 @@ def quality_score(text: Column, n_chars: Column) -> Column:
 
 def quality_verdict(text: Column) -> Column:
     """First-failing-rule verdict of the C4/Gopher-style gate
-    (q_quality_gate's rule cascade, factored so batch and streaming
-    ingestion apply the identical gate): 'too_short' / 'too_long' /
-    'word_length' / 'repetitive' / 'keep'. Pure per-row higher-order
-    array ops — stateless, so it streams unchanged."""
+    (q_quality_gate's rule cascade, factored so every query applies the
+    identical gate): 'too_short' / 'too_long' / 'word_length' /
+    'repetitive' / 'keep'. Pure per-row higher-order array ops —
+    stateless."""
     toks = F.filter(tokens(text), lambda x: x != "")
     # coalesce: NULL text means zero tokens, so attribution is
     # 'too_short' — without it the NULL skips both size rules and the

@@ -1,12 +1,11 @@
 """Small-file compaction: the table-maintenance job every long-lived
 lake needs.
 
-Streaming sinks and incremental batch appends (streaming/ingest.py,
-mv.py snapshots) accumulate many small parquet files; at 100 TB the
-cost is real — file-listing RPCs, one scan task per file regardless of
-core count (a single small parquet file cannot be split; the
-`load_table(spread=True)` lesson), and parquet metadata overhead per
-footer. Compaction rewrites a directory into files near a target size.
+Incremental batch appends accumulate many small parquet files; at
+100 TB the cost is real — file-listing RPCs, one scan task per file
+regardless of core count (a single small parquet file cannot be split;
+the `load_table(spread=True)` lesson), and parquet metadata overhead
+per footer. Compaction rewrites a directory into files near a target size.
 
 Design points:
 

@@ -75,9 +75,8 @@ def band_rows(signatures: DataFrame, num_hashes: int = 32,
               bands: int = 8) -> DataFrame:
     """(id, band_idx, band_hash) LSH band rows: each signature sliced
     into ``bands`` chunks of ``num_hashes/bands`` rows, each chunk
-    hashed to one 64-bit band key — a zero-shuffle per-row fold.
-    Shared by the batch candidate join below and the streaming
-    band-index ingestion (streaming/ingest.py)."""
+    hashed to one 64-bit band key — a zero-shuffle per-row fold,
+    feeding the candidate join below."""
     if num_hashes % bands:
         raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
     r = num_hashes // bands  # rows per band

@@ -177,9 +177,11 @@ def local_background_subtract(
         vals = out[y0:y1, x0:x1][ring]
         bkg = _sigma_clipped_median(vals) if vals.size else 0.0
         bkgs.append(bkg)
+        # Both box bounds clip to the frame: an unclipped negative end
+        # would count from the far edge for a star above or left of it.
         ix, iy = int(round(x)), int(round(y))
-        r0, r1 = max(0, int(np.floor(iy - half)) + 1), min(h, int(np.ceil(iy + half)))
-        c0, c1 = max(0, int(np.floor(ix - half)) + 1), min(w, int(np.ceil(ix + half)))
+        r0, r1 = np.clip([np.floor(iy - half) + 1, np.ceil(iy + half)], 0, h).astype(int)
+        c0, c1 = np.clip([np.floor(ix - half) + 1, np.ceil(ix + half)], 0, w).astype(int)
         out[r0:r1, c0:c1] -= bkg
     return out, bkgs
 

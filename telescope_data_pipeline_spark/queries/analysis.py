@@ -1549,9 +1549,8 @@ def q_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     segmentation step: the split index t maximizing the scaled
     mean-shift statistic |N*S_t - t*S_N| (algebraically equal to
     t*(N-t)*|mean_left - mean_right|, the CUSUM-family criterion).
-    The batch companion to the streaming two-sided CUSUM alarm
-    (streaming/jobs.py): the alarm says a series drifted, this says
-    WHERE — iterate on each side for full binary segmentation.
+    A drift alarm says a series drifted; this says WHERE — iterate
+    on each side for full binary segmentation.
 
     Determinism: the argmax statistic is an EXACT integer at every
     candidate split (micro-unit prefix sums, DECIMAL(38,0)/HUGEINT
@@ -1620,9 +1619,8 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization: split each user's event stream at >30 min
     idle gaps (lag + cumulative-flag-sum — the canonical gap-and-
     island idiom) and report per-session event counts and durations.
-    The batch twin of the streaming session window (q_stream_session)
-    and the timeout sessionizer (streaming/stateful.py): same
-    semantics, one relational pass, no state store.
+    The same semantics as the event-time session window
+    (q_stream_session), in one relational pass.
 
     Determinism: the gap test is exact timestamp arithmetic on a
     total (ts, event_id) order; session ids are integer running sums;
@@ -1925,9 +1923,7 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts.
 
     Scale: one user_id window + a |channels|-key map-side-combined
-    groupBy; per-user state is the running last-touch value — O(1),
-    the streaming-friendly shape (its live twin would be a
-    transformWithState value slot)."""
+    groupBy; per-user state is the running last-touch value — O(1)."""
     ev = load_table(spark, sf_dir, "events")
     w = (W.partitionBy("user_id").orderBy("ts", "event_id")
          .rowsBetween(W.unboundedPreceding, -1))

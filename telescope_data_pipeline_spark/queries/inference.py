@@ -1011,9 +1011,7 @@ def q_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one window pass partitioned by the experiment stream (five
     types here; a real deployment keys thousands of concurrent
     experiments), a filtered first-crossing lookup joined back to
-    per-stream totals. The streaming twin is the transformWithState
-    running-stats pattern (streaming/stateful.py) with the decision
-    emitted mid-stream."""
+    per-stream totals."""
     obs = (load_table(spark, sf_dir, "events")
            .filter(F.col("value").isNotNull())
            .select("event_type", "ts", "event_id",

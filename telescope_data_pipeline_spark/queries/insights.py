@@ -1183,9 +1183,8 @@ def q_fd_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Page-Hinkley drift detection over the daily KPI series
 # ---------------------------------------------------------------------------
 
-#: Page-Hinkley parameters shared by the batch query and the streaming
-#: twin (streaming/stateful.py::page_hinkley_daily): delta biases the
-#: deviation so noise drifts the statistic down; lambda is the alarm.
+#: Page-Hinkley parameters: delta biases the deviation so noise drifts
+#: the statistic down; lambda is the alarm.
 PH_DELTA_MICRO = 1_000_000.0  # 1.0 value unit, in micro-units
 PH_LAMBDA_MICRO = 5_000_000.0  # 5.0 value units
 
@@ -1241,8 +1240,7 @@ def q_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     is U_t minus its running minimum, alarm when it clears lambda —
     the sequential mean-INCREASE monitor beside the windowed CUSUM
     (q_changepoint finds where a change WAS; Page-Hinkley is the form
-    a live monitor runs, hence the streaming twin in
-    streaming/stateful.py). The running minimum includes the U_0 = 0
+    a live monitor runs). The running minimum includes the U_0 = 0
     origin.
 
     Determinism: daily means are HALF_UP-rounded integer micro-units

@@ -5,9 +5,9 @@ Contract (read by ``__spark_entry__.py`` and the test suite):
 - the oracle SQL must be ANSI SQL DuckDB can run over the same parquet
   tables, producing the SAME column names (the comparison sorts columns
   by name, then hashes order-insensitive values);
-- queries whose semantics are not SQL-expressible (streaming state,
-  iterative kernels, external services) register ``oracle=None`` and get
-  a rows-only check;
+- queries whose semantics are not SQL-expressible (iterative kernels,
+  external services) register ``oracle=None`` and get a rows-only
+  check;
 - :func:`all_queries` lists the queries in registration order.
 
 Determinism rules every query here follows:

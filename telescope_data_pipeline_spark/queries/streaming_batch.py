@@ -1,10 +1,9 @@
 """Event-time window aggregations (SURVEY.md §2.9), batch-mode.
 
-These are the oracle-checkable forms of the streaming surface: Spark's
-``window`` / ``session_window`` produce identical results in batch and
-micro-batch execution, so the driver can hash-compare them while
-``telescope_data_pipeline_spark.streaming`` runs the same logic as real
-``readStream`` jobs with watermarks.
+Batch event-time queries over the ``events`` table: tumbling, sliding
+and session windows (Spark's ``window`` / ``session_window``), each
+hash-compared against its DuckDB oracle. The ``q_stream_`` prefix names
+the event-time windowing family.
 
 Reference analogs: the per-epoch grouping (psf_phot.py:44-45) is a
 tumbling window over observation time; the walkthrough's bursts-of-3

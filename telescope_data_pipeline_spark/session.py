@@ -26,7 +26,7 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 _STOCK_FLOOR_LOCK = threading.Lock()
 
 #: Directory that holds the package; a Python worker imports
-#: ``worker_daemon`` from it, as it imports the kernels and data sources.
+#: ``worker_daemon`` from it, as it imports the kernels.
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -65,10 +65,9 @@ def _core_conf(app_name: str) -> SparkConf:
       ``q_periodogram``'s pandas UDF, for the CLI's RDD job). The
       daemon keeps the zip first unless the installed pyspark and py4j
       are the zips' releases. Workers import the package already, for
-      the kernels and the ``fits`` source; the setting is made only
-      when they can, i.e. when the package is in the working directory,
-      on PYTHONPATH or in site-packages. Spark ignores it for the
-      driver-side workers that plan a Python data source.
+      the kernels; the setting is made only when they can, i.e. when
+      the package is in the working directory, on PYTHONPATH or in
+      site-packages.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     conf = (SparkConf(loadDefaults=False)

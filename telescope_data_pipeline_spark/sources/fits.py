@@ -6,8 +6,7 @@ astropy and pulls HDU-1 pixels + header. Here one pure function,
 every path that decodes calls it: :func:`scan_fits_dir` (a
 ``binaryFile`` scan, then a ``mapInPandas`` decode into IMAGE rows), the
 CLI's per-epoch kernel (``plans.pipeline.night_records``, an RDD job
-whose tasks open and decode their own epochs' files) and the ``fits``
-Python data source.
+whose tasks open and decode their own epochs' files).
 
 The CLI's inputs are read on the driver, as the reference reads its
 manifest (psf_phot.py:41-45): :func:`read_manifest` gives the

@@ -22,9 +22,8 @@ adapter, which collects at most ``max_pages`` image rows (and
 ``max_pages * cutouts_per_page`` cutout rows) to the driver. The CLI
 hands :func:`diagnostics_pdf` the stacked rows it has already collected
 for every sink, so there the cap bounds the pages, not driver memory.
-The streaming form (``pdf_sink``) is a ``foreachBatch`` callback,
-completing the reference's four-sink pattern (CSV / FITS / TXT / PDF,
-psf_phot.py:91-94).
+With the CSV, FITS and TXT sinks it completes the reference's four-sink
+pattern (psf_phot.py:91-94).
 """
 
 from __future__ import annotations
@@ -35,8 +34,7 @@ from collections.abc import Mapping, Sequence
 import numpy as np
 from pyspark.sql import DataFrame
 
-__all__ = ["MiniPdf", "zscale_stretch", "diagnostics_pdf", "write_diagnostics_pdf",
-           "pdf_sink"]
+__all__ = ["MiniPdf", "zscale_stretch", "diagnostics_pdf", "write_diagnostics_pdf"]
 
 
 # --------------------------------------------------------------------------
@@ -317,19 +315,3 @@ def write_diagnostics_pdf(
                                    cutouts_per_page)
     pdf.write(path)
     return n_pages
-
-
-def pdf_sink(path_template: str, **kwargs):
-    """``foreachBatch`` form: one diagnostics PDF per micro-batch
-    (psf_phot.py:91-94 — the reference emits one PDF per image set as
-    sets complete; here a batch is the set).
-
-    >>> q = (stream.writeStream
-    ...      .foreachBatch(pdf_sink("/out/diag_{batch}.pdf"))
-    ...      .start())
-    """
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_diagnostics_pdf(path_template.format(batch=batch_id),
-                              images=batch_df, **kwargs)
-
-    return write_batch

@@ -1,14 +1,13 @@
 """Python worker daemon that imports pyspark from its installed package.
 
 Spark starts the Python workers of a context's tasks (the CLI's RDD
-job, pandas UDFs such as ``q_periodogram``, plain UDFs, the reads of
-Python data sources such as ``fits``) by forking them from a daemon
-process, ``pyspark.daemon`` by default. The daemon's ``sys.path`` starts with
-``$SPARK_HOME/python/lib/pyspark.zip`` and the ``py4j-*-src.zip`` beside
-it. Those zips hold no bytecode, so each daemon compiles pyspark from
-source before it forks its first worker: about 1 s of CPU per daemon,
-while the driver imports the same pyspark release from an installed
-package whose bytecode is cached.
+job, pandas UDFs such as ``q_periodogram``, plain UDFs) by forking them
+from a daemon process, ``pyspark.daemon`` by default. The daemon's
+``sys.path`` starts with ``$SPARK_HOME/python/lib/pyspark.zip`` and the
+``py4j-*-src.zip`` beside it. Those zips hold no bytecode, so each
+daemon compiles pyspark from source before it forks its first worker:
+about 1 s of CPU per daemon, while the driver imports the same pyspark
+release from an installed package whose bytecode is cached.
 
 The conf that ``session.get_spark`` and ``session.get_context`` both
 start from sets ``spark.python.daemon.module`` to this module.
@@ -17,9 +16,7 @@ of ``sys.path``, but only when the pyspark and py4j that the rest of the
 path would import are the same releases as the zips; otherwise the path
 stays as Spark set it. Then it runs ``pyspark.daemon.manager()``, the
 stock daemon loop. Nothing else differs: the same worker modules run the
-same code, now loaded from bytecode. The driver-side workers that plan a
-Python data source are not affected: Spark starts them from
-``pyspark.daemon`` whatever the setting says.
+same code, now loaded from bytecode.
 """
 
 from __future__ import annotations

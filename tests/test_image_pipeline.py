@@ -267,6 +267,21 @@ def test_local_background_matches_full_frame_mask(shape, n_stars):
         assert got.tobytes() == ref.tobytes()
 
 
+@pytest.mark.parametrize("pos", [(-20.0, -20.0), (84.0, 84.0), (-20.0, 32.0),
+                                 (32.0, -20.0)])
+def test_local_background_off_frame_star_changes_nothing(pos):
+    """A star whose subtraction box lies wholly off the frame, above or
+    left of it as well as below or right, subtracts from no pixel: the
+    box bounds clip to the frame instead of counting from its far edge."""
+    from telescope_data_pipeline_spark.operators.photometry import (
+        local_background_subtract,
+    )
+
+    img = np.full((64, 64), 100.0)
+    got, _ = local_background_subtract(img, [pos], fwhm=3.0)
+    assert np.count_nonzero(got != img) == 0
+
+
 @pytest.mark.full
 def test_residual_diagnostics_bounded(spark, fixture):
     """core.py:454-484: after a good fit the per-star residual RMS is

@@ -17,7 +17,6 @@ import pytest
 
 from telescope_data_pipeline_spark.sources.pdf import (
     MiniPdf,
-    pdf_sink,
     write_diagnostics_pdf,
     zscale_stretch,
 )
@@ -133,21 +132,3 @@ def test_write_diagnostics_pdf_bounds_collect(spark, tmp_path):
     out = str(tmp_path / "capped.pdf")
     n_pages = write_diagnostics_pdf(out, images=images, max_pages=1)
     assert n_pages == 1
-
-
-def test_pdf_foreachbatch_sink(spark, tmp_path):
-    """Streaming form: one PDF per micro-batch over the IMAGE schema
-    (rate-limited memory stream isn't needed — foreachBatch callbacks
-    take plain DataFrames, so drive it directly as the runner would)."""
-    from telescope_data_pipeline_spark.operators.images import (
-        make_synthetic_images,
-    )
-
-    images, _, _ = make_synthetic_images(spark, n_epochs=1)
-    sink = pdf_sink(str(tmp_path / "batch_{batch}.pdf"), max_pages=4)
-    sink(images, 0)
-    sink(images, 1)
-    for b in (0, 1):
-        buf = open(tmp_path / f"batch_{b}.pdf", "rb").read()
-        assert buf.startswith(b"%PDF-1.4")
-        _check_xref(buf)
